@@ -1,30 +1,38 @@
-"""Session-lifetime cache accounting (VERDICT r2 "What's wrong" #4).
+"""Session-lifetime state: tracked frames, session memos, checkpoint slots.
 
-Several operators persist intermediate artifacts that are deliberately
-shared ACROSS queries in one session — the jaccard candidate-pair table
-serves dedup_ngram_jaccard / dedup_cluster / dedup_ngram_containment /
-dedup_survivors; the minhash hashed-shingle table serves its band join and
-both verify joins; BM25's doc-length table serves the score join and the
-(avgdl, N) aggregate. Spark's CacheManager matches these by logical plan,
-so the persist() must OUTLIVE the function that created it — which also
-means nobody is positioned to unpersist it.
+Some intermediates outlive the query builder that creates them, so no
+builder is positioned to release them. This module owns all of them, in
+three kinds:
 
-This module closes the loop: ``track`` persists and records the frame;
-``clear_tracked_caches`` unpersists everything recorded (and drops any
-registered memo tables, e.g. the connected-components label memo, whose
-checkpoint RDDs otherwise pin blocks for the session lifetime). Long-lived
-sessions — the 85-query bench loop, notebooks — call the clearer between
-logical phases; short-lived jobs never need to.
+- tracked frames (``track``): persisted DataFrames shared across queries
+  through Spark's CacheManager, which matches them by logical plan (the
+  jaccard pair table, the minhash shingle table, the co-purchase support
+  table, ...);
+- session memos (``session_memo``): deterministic values computed from one
+  corpus directory and kept per (application, name, corpus) — source
+  frames, iterative fixpoints (component labels, k-core and LPA cores),
+  trained models (PQ codebooks, k-means centroids, logistic-regression
+  weights) and driver sizing scalars;
+- checkpoint slots (``checkpoint_generation``): the one live
+  ``localCheckpoint`` per call site.
 
-The cached working set is bounded either way: each distinct logical plan is
-cached at most once per session (a handful of plans, each O(corpus) in the
-worst case, MEMORY_AND_DISK so pressure spills instead of OOMing). The
-registry turns that bound from "LRU will probably handle it" into an
-explicit lifecycle hook.
+``clear_tracked_caches`` releases all three. Long-lived sessions (bench
+loops, notebooks) call it between logical phases; short-lived jobs never
+need to. Each distinct plan is cached at most once per session
+(MEMORY_AND_DISK, so pressure spills instead of failing).
+
+A memo value is valid only while the corpus files under its ``sf_dir`` are
+unchanged. Every ``session_memo`` call fingerprints those files and, when
+they changed since the last call for that (application, sf_dir), releases
+all three kinds of state before rebuilding: the CacheManager matches file
+scans by path, not by contents, so a tracked frame over the old files
+would otherwise still be served.
 """
 
 from __future__ import annotations
 
+import os
+import stat
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -32,35 +40,29 @@ from pyspark.storagelevel import StorageLevel
 
 _TRACKED: list[DataFrame] = []
 _TRACKED_HASHES: dict[int, list[DataFrame]] = {}
-_MEMO_CLEARERS: list[Callable[[], None]] = []
+#: session memo entries by (applicationId, name, sf_dir)
+_MEMO: dict[tuple, object] = {}
+#: last corpus fingerprint seen by session_memo, by (applicationId, sf_dir)
+_SEEN_FINGERPRINTS: dict[tuple, tuple] = {}
+#: live checkpoint per checkpoint_generation slot
+_CKPT_GEN: dict[str, DataFrame] = {}
 
 
 def track(
     df: DataFrame,
     level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER,
 ) -> DataFrame:
-    """persist() + record for later bulk release via clear_tracked_caches.
+    """Persist ``df`` and record it for release by ``clear_tracked_caches``;
+    returns ``df``.
 
-    Semantically-duplicate frames (same analyzed plan — e.g. two queries
-    each building the identical shingle table) are recorded once: Spark's
-    CacheManager already dedupes the storage, and deduping the registry
-    keeps ``tracked_count``/``caches_released`` an honest count of real
-    cache entries instead of call sites.
-
-    Dedup is ``semanticHash``-prefiltered (r16 optimization round, guide
-    §7.3 driver-side fixed costs): the old linear ``sameSemantics`` sweep
-    was one py4j round-trip + canonicalized-plan compare per tracked frame
-    per call — ~7 ms per track() against a 45-frame registry, paid on
-    EVERY builder invocation (bench rebuilds every query 3×). Equal
-    semantic hashes are necessary for ``sameSemantics``, so one hash RTT
-    narrows the exact compare to same-hash candidates (almost always 0 or
-    1) with identical dedup semantics. Known limitation (ADVICE r16): a
-    frame recorded through the exception path (h = None) joins _TRACKED
-    but not the hash index, so LATER semantically-identical frames cannot
-    registry-dedup against it — that only inflates
-    tracked_count/caches_released by a few entries in degraded sessions
-    (CacheManager still dedupes the actual storage), so it is accepted
-    rather than retried.
+    Frames with the same analyzed plan (``sameSemantics``) are recorded
+    once, so ``tracked_count`` counts CacheManager entries, not call
+    sites. The registry is indexed by ``semanticHash`` (equal hashes are
+    necessary for ``sameSemantics``), so a call costs one hash round-trip
+    plus an exact compare against same-hash frames only. A frame whose
+    hash cannot be computed is recorded outside the index; a later
+    identical frame is then recorded again, which overcounts
+    ``tracked_count`` but releases nothing twice.
     """
     df.persist(level)
     try:
@@ -75,151 +77,126 @@ def track(
     return df
 
 
-def register_memo_clearer(fn: "Callable[[], int | None]") -> None:
-    """Register a callback that drops a module-level memo (e.g. the CC label
-    memo) when caches are cleared; modules register at import time so this
-    package never imports them back (no cycles). The callback should return
-    how many memo entries it dropped so ``clear_tracked_caches`` can report
-    a release count in the same units as the JVM's persistent-RDD registry
-    (VERDICT r3 "What's wrong" #1)."""
-    _MEMO_CLEARERS.append(fn)
-
-
 def tracked_count() -> int:
     return len(_TRACKED)
 
 
-def clear_tracked_caches() -> int:
-    """Unpersist every tracked frame and drop registered memos.
+def _path_fingerprint(path: str) -> tuple:
+    """(mtime_ns, size) of ``path`` plus, for a directory, the newest
+    (mtime_ns, name, size) among its direct entries: an in-place rewrite
+    of a part file changes that file's mtime but not the directory's. One
+    shallow scandir; Spark table directories are flat. A path that cannot
+    be stat'ed (missing, or non-local such as s3://) fingerprints as a
+    constant, so its memos live for the session."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_mtime_ns, st.st_size)
+        newest = None
+        with os.scandir(path) as it:
+            for e in it:
+                try:
+                    es = e.stat()
+                except OSError:
+                    continue
+                key = (es.st_mtime_ns, e.name, es.st_size)
+                if newest is None or key > newest:
+                    newest = key
+        return (st.st_mtime_ns, st.st_size, newest)
+    except OSError:
+        return ("unstattable",)
 
-    Returns tracked frames PLUS memo entries released, so the count pairs
-    with a pre-clear ``getPersistentRDDs`` size: each tracked frame is one
-    CacheManager entry and each memo entry pins one checkpoint RDD (its
-    clearer unpersists that RDD explicitly — ADVICE r3 — rather than
-    leaving the blocks to ContextCleaner GC). blocking=False: executors
-    free the blocks asynchronously; the frames remain usable (they
-    recompute).
+
+def _corpus_fingerprint(sf_dir: str) -> tuple:
+    from .sources.io import TABLES, table_path  # io imports this module
+
+    return tuple(_path_fingerprint(table_path(sf_dir, t)) for t in TABLES)
+
+
+def session_memo(spark, name: str, sf_dir: str, build: "Callable[[], object]"):
+    """``build()``, computed once per (application, ``name``, ``sf_dir``)
+    and then returned as the same object until ``clear_tracked_caches``.
+
+    Contract:
+    - the value is a deterministic function of the tables under
+      ``sf_dir``; ``name`` identifies everything else it depends on (its
+      parameters and, for a value derived from a frame, that frame's
+      ``semanticHash``);
+    - if the table files under ``sf_dir`` changed since the last call for
+      this (application, sf_dir), every tracked frame, memo entry and
+      checkpoint slot is released before the lookup;
+    - a ``build`` that raises stores nothing;
+    - a DataFrame value backed by a ``localCheckpoint`` has its blocks
+      unpersisted on release; other values are dropped.
     """
-    n = len(_TRACKED)
+    app = spark.sparkContext.applicationId
+    fp = _corpus_fingerprint(sf_dir)
+    if _SEEN_FINGERPRINTS.setdefault((app, sf_dir), fp) != fp:
+        clear_tracked_caches()
+        _SEEN_FINGERPRINTS[(app, sf_dir)] = fp
+    key = (app, name, sf_dir)
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]
+
+
+def clear_tracked_caches() -> int:
+    """Release every tracked frame, memo entry and checkpoint slot; returns
+    how many were released (one per tracked frame, memo entry and slot).
+
+    Tracked frames are unpersisted with blocking=False: executors free the
+    blocks asynchronously and the frames stay usable (they recompute).
+    Checkpoint-backed memo values and slots have their blocks unpersisted
+    explicitly rather than left to ContextCleaner GC, so after this call
+    the JVM's persistent-RDD registry holds nothing this module created.
+    """
+    n = len(_TRACKED) + len(_MEMO) + len(_CKPT_GEN)
     for df in _TRACKED:
         try:
             df.unpersist(blocking=False)
         except Exception:
             pass  # session already stopped; nothing to release
+    for value in (*_MEMO.values(), *_CKPT_GEN.values()):
+        if isinstance(value, DataFrame):
+            release_checkpoint(value)
     _TRACKED.clear()
     _TRACKED_HASHES.clear()
-    for fn in _MEMO_CLEARERS:
-        dropped = fn()
-        if isinstance(dropped, int):
-            n += dropped
+    _MEMO.clear()
+    _CKPT_GEN.clear()
     return n
 
 
-# --- single-generation checkpoint slots (r16 optimization round) ---------
-#
-# Iterative/diamond plans need an intermediate materialized ONCE per run
-# (the unrolled BFS references every frontier twice; the ship-latency
-# sketch audits the same join output it aggregated), but a localCheckpoint
-# created inside a query builder has no one positioned to release it — the
-# exact gap `track` closes for CacheManager entries. A slot holds the ONE
-# live checkpoint per call site: the next run's checkpoint releases the
-# previous generation, and the registered clearer (the memo protocol
-# above) frees the last so bench's cached_after_release == 0 accounting
-# stays exact. Checkpoint RDDs are run-specific — CacheManager never plan-
-# matches them — so NOTHING is reused across runs; this is lifecycle
-# management, not caching.
-
-_CKPT_GEN: dict[str, DataFrame] = {}
-
-# --- session-scoped sizing scalars (r16 optimization round) ---------------
-#
-# Several iterative/graph builders run a driver-side sizing job at BUILD
-# time — pairs.count() to pick edge-proportional loop partitioning,
-# deg.count() for the PageRank teleport constant — against frames that are
-# themselves tracked-persisted and immutable for the session. Re-running
-# those 1-row jobs on every plan build is pure fixed cost (bench rebuilds
-# each query's plan per sample). Memoize the scalar per (session, name):
-# the same class of session-lifetime intermediate as the CC-label /
-# centroid memos (computed from the parquet inputs on first use, dropped
-# by clear_tracked_caches, never persisted across sessions or runs of the
-# process).
-
-_SCALAR_MEMO: dict[tuple, object] = {}
-
-
-def scalar_memo(spark, name: str, compute: "Callable[[], object]"):
-    """Session-scoped memo of a driver sizing scalar: computed once per
-    (applicationId, ``name``) then reused; released with the tracked
-    caches. ``name`` must uniquely describe WHAT is being counted
-    (include the sf_dir for corpus-dependent scalars).
-
-    CONTRACT (ADVICE r16): the corpus under a given sf_dir is immutable
-    for the lifetime of a session — the same assumption every tracked
-    persist and plan-matched cache in this module already makes. Values
-    seed convergence comparisons and local-tail handoff decisions
-    (kcore_peel's ``n_edges``), so mutating the data under sf_dir
-    mid-session without ``clear_tracked_caches`` yields stale counts the
-    same way it would yield stale cached frames; no call site does this
-    (the driver's fixtures are read-only), and the bench clears
-    everything between invocations."""
-    key = (spark.sparkContext.applicationId, name)
-    if key not in _SCALAR_MEMO:
-        _SCALAR_MEMO[key] = compute()
-    return _SCALAR_MEMO[key]
-
-
-def _clear_scalar_memo() -> None:
-    _SCALAR_MEMO.clear()
-    return None
-
-
-register_memo_clearer(_clear_scalar_memo)
-
-
-def _checkpoint_rdd(df: DataFrame):
-    """The JVM RDD backing a ``localCheckpoint``'ed DataFrame (whose
-    analyzed plan is a ``LogicalRDD`` wrapping the persisted internal
-    RDD), or None if the plan has a different shape."""
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks of a ``localCheckpoint``'ed DataFrame (whose
+    analyzed plan is a ``LogicalRDD`` over the persisted internal RDD)
+    now, instead of waiting on ContextCleaner GC. No-op for any other
+    frame, and once the session has stopped."""
     try:
         plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return None
-        return plan.rdd()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
     except Exception:
-        return None
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Release a localCheckpoint's blocks explicitly instead of waiting on
-    ContextCleaner GC (ADVICE r3). No-op for non-checkpoint frames."""
-    rdd = _checkpoint_rdd(df)
-    if rdd is not None:
-        try:
-            rdd.unpersist(False)
-        except Exception:
-            pass  # session stopped; nothing to free
+        pass
 
 
 def checkpoint_generation(slot: str, df: DataFrame) -> DataFrame:
-    """``df.localCheckpoint(eager=False)`` under single-generation slot
-    lifecycle: releases ``slot``'s previous checkpoint first; the new one
-    lives until the next call or ``clear_tracked_caches``. Lazy — blocks
-    materialize inside the query's own first action, never in a separate
-    build-time job."""
+    """``df.localCheckpoint(eager=False)`` with one live generation per
+    ``slot``.
+
+    For iterative or diamond plans that read an intermediate more than
+    once per run. Contract:
+    - the call releases ``slot``'s previous checkpoint, so a slot pins at
+      most one generation;
+    - the new checkpoint lives until the next call for ``slot`` or
+      ``clear_tracked_caches``;
+    - it is lazy: blocks materialize inside the query's own first action,
+      never in a separate build-time job;
+    - nothing is reused across calls: checkpoint RDDs are run-specific and
+      the CacheManager never plan-matches them.
+    """
     prev = _CKPT_GEN.pop(slot, None)
     if prev is not None:
         release_checkpoint(prev)
     out = df.localCheckpoint(eager=False)
     _CKPT_GEN[slot] = out
     return out
-
-
-def _clear_ckpt_generations() -> int:
-    n = len(_CKPT_GEN)
-    for df in _CKPT_GEN.values():
-        release_checkpoint(df)
-    _CKPT_GEN.clear()
-    return n
-
-
-register_memo_clearer(_clear_ckpt_generations)

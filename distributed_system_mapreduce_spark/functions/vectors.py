@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import register_memo_clearer, track
+from ..cache import session_memo, track
 from ..exactmath import round_div, sql_round_div
 from ..plans.topk import salted_topk
 from ..registry import register
@@ -501,53 +501,23 @@ def lloyd_centroids(
     KMeans), which keeps each iteration's plan flat instead of compounding
     lineage. Cells that lose all members drop out (k can shrink).
 
-    Returns (cent_id, cent_emb array<double>).
-
-    Trained centroids are memoized per (session, corpus, k, iters) —
-    the same session-materialized-view contract as the PQ codebook memo:
-    Lloyd is deterministic given the seed and corpus, so sim_ann_ivf /
-    sim_ivf_nprobe_sweep / sim_ivfpq_recall and friends share ONE
-    training run instead of each re-paying {iters} collect rounds
-    (VERDICT r10 #5 — the iterative heavies' fixed cost is scheduling,
-    not data). The memo stores k·dim doubles: driver-bounded by design.
+    Returns (cent_id, cent_emb array<double>). Every call trains anew:
+    the registered IVF queries (sim_ann_ivf, sim_ivf_nprobe_sweep,
+    sim_ivfpq_recall) use fixed seeded centroids instead
+    (:func:`seeded_ivf_assign`, or the first 16 vectors), so this trainer
+    serves quality comparisons, not query traffic.
     """
     spark = emb_d.sparkSession
-    memo_key = (
-        spark.sparkContext.applicationId, emb_d.semanticHash(), k, iters,
-    )
-    cached = _LLOYD_MEMO.get(memo_key)
-    if cached is not None:
-        return spark.createDataFrame(
-            cached, "cent_id long, cent_emb array<double>"
-        )
     cents = (
         emb_d.orderBy("vec_id")
         .limit(k)
         .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb"))
     )
-    rows = None
     for _ in range(iters):
         mean = lloyd_recompute(ivf_assign(emb_d, cents, round_scores=False))
         rows = mean.collect()  # k x dim doubles — bounded, driver-sized
         cents = spark.createDataFrame(rows, "cent_id long, cent_emb array<double>")
-    if rows is not None:
-        _LLOYD_MEMO[memo_key] = rows
     return cents
-
-
-#: Session-scoped memo of IVF centroids (k·dim doubles per entry) — see
-#: the lloyd_centroids docstring; cleared through the cache registry like
-#: the PQ codebook and CC label memos.
-_LLOYD_MEMO: dict[tuple, list] = {}
-
-
-def _clear_lloyd_memo() -> int:
-    n = len(_LLOYD_MEMO)
-    _LLOYD_MEMO.clear()
-    return n
-
-
-register_memo_clearer(_clear_lloyd_memo)
 
 
 def lloyd_recompute(assign: DataFrame) -> DataFrame:
@@ -1350,21 +1320,6 @@ KMEANS_ITERS = 3
 #: quantized Gram matrix.
 KMEANS_ROUND = 6
 
-#: Session-scoped memo of embed_kmeans' final-round input centroids
-#: (K·dim doubles) — see the embed_kmeans docstring; cleared through the
-#: cache registry like the PQ/Lloyd/CC memos.
-_KMEANS_MEMO: dict[tuple, list] = {}
-
-
-def _clear_kmeans_memo() -> int:
-    n = len(_KMEANS_MEMO)
-    _KMEANS_MEMO.clear()
-    return n
-
-
-register_memo_clearer(_clear_kmeans_memo)
-
-
 def kmeans_choices(cents: list) -> "F.Column":
     """array<struct<d, i>> of squared-L2 distances from column ``e`` to
     each centroid — ``array_min`` over it is the argmin with the
@@ -1399,22 +1354,20 @@ def kmeans_assign(emb: DataFrame, cents: list) -> DataFrame:
     )
 
 
-def kmeans_entry_centroids(spark: SparkSession, emb: DataFrame) -> list:
+def kmeans_entry_centroids(
+    spark: SparkSession, emb: DataFrame, sf_dir: str
+) -> list:
     """The FINAL round's input centroids (the oracle's c_{iters-1}) for
-    the canonical (K, iters, rounding) Lloyd run over ``emb``.
+    the canonical (K, iters, rounding) Lloyd run over ``emb``, a
+    projection of ``sf_dir``'s embeddings.
 
-    Lloyd is deterministic given the init and corpus, so the result is
-    memoized per (session, corpus, params) — the PQ-codebook/CC-label
-    session-materialized-view contract: repeat callers skip the
-    KMEANS_ITERS collect rounds and rebuild only their own assignment
-    plan (VERDICT r10 #5). K·dim doubles: driver-bounded.
+    Lloyd is deterministic given the init and corpus, so the result is a
+    session memo keyed by ``emb``'s plan and the parameters: repeat
+    callers skip the KMEANS_ITERS collect rounds and rebuild only their
+    own assignment plan. K·dim doubles: driver-bounded.
     """
-    memo_key = (
-        spark.sparkContext.applicationId, emb.semanticHash(),
-        KMEANS_K, KMEANS_ITERS, KMEANS_ROUND,
-    )
-    entry_cents = _KMEANS_MEMO.get(memo_key)
-    if entry_cents is None:
+
+    def train() -> list:
         init = emb.orderBy("vec_id").limit(KMEANS_K).collect()
         if len(init) < KMEANS_K:
             # same guard class as embed_pca_top_component's empty-table
@@ -1443,8 +1396,15 @@ def kmeans_entry_centroids(spark: SparkSession, emb: DataFrame) -> list:
                 for r in means.collect()
             }
             cents = [got.get(i, cents[i]) for i in range(KMEANS_K)]
-        _KMEANS_MEMO[memo_key] = entry_cents
-    return entry_cents
+        return entry_cents
+
+    return session_memo(
+        spark,
+        f"kmeans_entry_centroids:{emb.semanticHash()}:"
+        f"{KMEANS_K}:{KMEANS_ITERS}:{KMEANS_ROUND}",
+        sf_dir,
+        train,
+    )
 
 
 def _kmeans_cte_chain() -> str:
@@ -1534,7 +1494,7 @@ def embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    entry_cents = kmeans_entry_centroids(spark, emb)
+    entry_cents = kmeans_entry_centroids(spark, emb, sf_dir)
     assigned = kmeans_assign(emb, entry_cents)
 
     # inertia and norms report against the centroids the FINAL assignment
@@ -1593,7 +1553,7 @@ def embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     tells a curation pipeline whether its embedding clusters are real
     before it stratifies sampling on them.
 
-    The model comes from the shared memoized Lloyd run
+    The model comes from the k-means session memo
     (:func:`kmeans_entry_centroids` — zero extra training passes when
     embed_kmeans already ran this session); scoring is ONE broadcast
     k-per-row pass: the same choices array gives a (the argmin struct)
@@ -1605,7 +1565,7 @@ def embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    cents = kmeans_entry_centroids(spark, emb)
+    cents = kmeans_entry_centroids(spark, emb, sf_dir)
     choices = kmeans_choices(cents)
     best = F.array_min(choices)
     scored = emb.select(
@@ -1800,27 +1760,13 @@ def pq_recompute(assign: DataFrame) -> DataFrame:
     )
 
 
-#: Session-scoped memo of trained PQ codebooks, keyed by (session id,
-#: corpus plan hash). The training loop's ACTIONS (PQ_ITERS collects) are
-#: invisible to Spark's CacheManager — tracking the sample frame dedupes
-#: the scan, but each caller still re-ran the full Lloyd loop (VERDICT r8
-#: #4: sim_pq_recall and sim_ivfpq_recall each paid ~4-5 s for identical
-#: codebooks). The memo stores the DRIVER-SIDE rows (K·dim doubles —
-#: kilobytes) and rebuilds the literal frame per caller, the same
-#: session-materialized-view contract as the CC label memo (dedup.py).
-_PQ_CODEBOOK_MEMO: dict[tuple, list] = {}
+def _pq_memo_name(kind: str, emb: DataFrame) -> str:
+    return (
+        f"{kind}:{emb.semanticHash()}:{PQ_M}:{PQ_K}:{PQ_ITERS}:{PQ_TRAIN_MOD}"
+    )
 
 
-def _clear_pq_memo() -> int:
-    n = len(_PQ_CODEBOOK_MEMO)
-    _PQ_CODEBOOK_MEMO.clear()
-    return n
-
-
-register_memo_clearer(_clear_pq_memo)
-
-
-def pq_codebooks(emb: DataFrame) -> DataFrame:
+def pq_codebooks(emb: DataFrame, sf_dir: str) -> DataFrame:
     """Train all M codebooks in ONE distributed Lloyd loop: the cell key is
     (m, cent_id), so adding subspaces never adds rounds — every iteration
     is one broadcast-join assignment plus one M·K·subdim-row shuffle,
@@ -1832,96 +1778,72 @@ def pq_codebooks(emb: DataFrame) -> DataFrame:
     scans only a deterministic 1-in-{PQ_TRAIN_MOD} key sample of the
     corpus (cached across rounds): the quantizer needs a distribution
     sample, not every vector — at 100 TB this is the difference between
-    an hours-long trainer and a constant-time one. Trained codebooks are
-    memoized per (session, corpus): Lloyd is deterministic given the seed
-    centroids and sample, so every caller in a session gets the identical
-    codebook without re-running the loop.
+    an hours-long trainer and a constant-time one. ``emb`` is a projection
+    of ``sf_dir``'s embeddings; the trained rows are a session memo keyed
+    by its plan (Lloyd is deterministic given the seed centroids and
+    sample), so every caller in a session gets the identical codebook
+    without re-running the loop.
     """
     spark = emb.sparkSession
-    memo_key = (
-        spark.sparkContext.applicationId,
-        emb.semanticHash(),
-        PQ_M, PQ_K, PQ_ITERS, PQ_TRAIN_MOD,
-    )
-    cached = _PQ_CODEBOOK_MEMO.get(memo_key)
-    if cached is not None:
-        return spark.createDataFrame(
-            cached, "m int, cent_id long, ce array<double>"
+    schema = "m int, cent_id long, ce array<double>"
+
+    def train() -> list:
+        sub = pq_subvectors(
+            emb.filter(F.pmod(F.col("vec_id"), F.lit(PQ_TRAIN_MOD)) == 0)
         )
-    sub = pq_subvectors(
-        emb.filter(F.pmod(F.col("vec_id"), F.lit(PQ_TRAIN_MOD)) == 0)
-    )
-    sub = track(sub)  # re-scored every Lloyd round
-    cents = pq_subvectors(emb.filter(F.col("vec_id") < PQ_K)).select(
-        "m", F.col("vec_id").alias("cent_id"), F.col("sv").alias("ce")
-    )
-    # fail loudly on an undersized codebook: seeding needs vec_ids 0..K-1
-    # present, else the quantizer silently trains K' < K codewords (ADVICE r7)
-    seed_n = cents.count()
-    if seed_n != PQ_M * PQ_K:
-        raise ValueError(
-            f"pq_codebooks: seed centroids {seed_n} != M*K = {PQ_M * PQ_K} "
-            f"(corpus lacks dense vec_ids 0..{PQ_K - 1})"
+        sub = track(sub)  # re-scored every Lloyd round
+        cents = pq_subvectors(emb.filter(F.col("vec_id") < PQ_K)).select(
+            "m", F.col("vec_id").alias("cent_id"), F.col("sv").alias("ce")
         )
-    for _ in range(PQ_ITERS):
-        rows = pq_recompute(pq_assign(sub, cents)).collect()
-        cents = spark.createDataFrame(
-            rows, "m int, cent_id long, ce array<double>"
-        )
-    _PQ_CODEBOOK_MEMO[memo_key] = rows
-    return cents
+        # fail loudly on an undersized codebook: seeding needs vec_ids
+        # 0..K-1 present, else the quantizer silently trains K' < K
+        # codewords
+        seed_n = cents.count()
+        if seed_n != PQ_M * PQ_K:
+            raise ValueError(
+                f"pq_codebooks: seed centroids {seed_n} != M*K = "
+                f"{PQ_M * PQ_K} (corpus lacks dense vec_ids 0..{PQ_K - 1})"
+            )
+        for _ in range(PQ_ITERS):
+            rows = pq_recompute(pq_assign(sub, cents)).collect()
+            cents = spark.createDataFrame(rows, schema)
+        return rows
+
+    rows = session_memo(
+        spark, _pq_memo_name("pq_codebooks", emb), sf_dir, train
+    )
+    return spark.createDataFrame(rows, schema)
 
 
-def pq_codes(emb: DataFrame) -> DataFrame:
+def pq_codes(emb: DataFrame, sf_dir: str) -> DataFrame:
     """Byte-code table ``(vec_id, m, cent_id)`` for the whole corpus,
     tracked-persisted: encoding assigns every subvector its argmin codeword
     (one broadcast join over the corpus — the most expensive non-training
     stage of the PQ path), and BOTH consumers (sim_pq_recall's exhaustive
     ADC and sim_ivfpq_recall's probed ADC) score from the identical code
-    table, so one materialization serves the family within a session
-    (VERDICT r10 #5). The projection to the three narrow columns happens
-    BEFORE the persist: caching the raw pq_assign output would freeze the
-    carried ``sv`` subvector arrays into the cache — the exact float
-    payload PQ exists to shed — and the first materialization would pay
-    to store it.
+    table, so one materialization serves the family within a session.
+    The projection to the three narrow columns happens BEFORE the
+    persist: caching the raw pq_assign output would freeze the carried
+    ``sv`` subvector arrays into the cache — the exact float payload PQ
+    exists to shed — and the first materialization would pay to store it.
 
-    The tracked FRAME (not just the codebook rows) is memoized per
-    (session, corpus): the codebook underneath is rebuilt from driver rows
-    via createDataFrame, whose RDD-backed plan never canonicalizes equal
-    across calls, so the CacheManager cannot dedupe repeat encodes —
-    without the frame memo every caller persisted and re-materialized its
-    own copy of the identical code table (measured ~2.3 s/call at sf0.1).
-    Same DataFrame-object memo contract as the backbone-CC labels
-    (operators/graph.py); the dict clears through the cache registry in
-    the same sweep that unpersists the tracked frame.
+    The tracked FRAME (not just the codebook rows) is a session memo: the
+    codebook underneath is rebuilt from driver rows via createDataFrame,
+    whose RDD-backed plan never canonicalizes equal across calls, so the
+    CacheManager cannot dedupe repeat encodes — without the frame memo
+    every caller persisted and re-materialized its own copy of the
+    identical code table (measured ~2.3 s/call at sf0.1).
     """
-    memo_key = (
-        emb.sparkSession.sparkContext.applicationId, emb.semanticHash(),
-        PQ_M, PQ_K, PQ_ITERS, PQ_TRAIN_MOD,
+    return session_memo(
+        emb.sparkSession,
+        _pq_memo_name("pq_codes", emb),
+        sf_dir,
+        lambda: track(
+            pq_assign(pq_subvectors(emb), pq_codebooks(emb, sf_dir)).select(
+                "vec_id", "m", "cent_id"
+            )
+        ),
     )
-    cached = _PQ_CODES_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    codes = track(
-        pq_assign(pq_subvectors(emb), pq_codebooks(emb)).select(
-            "vec_id", "m", "cent_id"
-        )
-    )
-    _PQ_CODES_MEMO[memo_key] = codes
-    return codes
-
-
-#: Session-scoped memo of the TRACKED code-table frame — see pq_codes.
-_PQ_CODES_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _clear_pq_codes_memo() -> int:
-    n = len(_PQ_CODES_MEMO)
-    _PQ_CODES_MEMO.clear()
-    return n
-
-
-register_memo_clearer(_clear_pq_codes_memo)
 
 
 #: recall@{PQ_TOPK} floor the exhaustive-ADC + exact-re-rank path must
@@ -1941,8 +1863,8 @@ def _pq_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    cents = pq_codebooks(emb)
-    codes = pq_codes(emb)
+    cents = pq_codebooks(emb, sf_dir)
+    codes = pq_codes(emb, sf_dir)
 
     q = emb.filter(F.col("vec_id") < PQ_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("e")
@@ -2285,8 +2207,8 @@ def _ivfpq_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # PQ stage: byte codes + per-query LUT, ADC only over the candidates
     # (codes tracked and shared with sim_pq_recall — one encode per session)
-    pq_cents = pq_codebooks(emb)
-    codes = pq_codes(emb).select(
+    pq_cents = pq_codebooks(emb, sf_dir)
+    codes = pq_codes(emb, sf_dir).select(
         "vec_id", "m", F.col("cent_id").alias("code")
     )
     lut = (

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import session_memo, track
 from ..plans.scan import chunked_running_sum
 from ..plans.topk import salted_topk
 from ..exactmath import round_div, sql_round_div
@@ -1609,23 +1609,6 @@ LOGREG_LR = 8.0
 #: full-batch training — is what's under test.
 LOGREG_POS_CHARS = 300
 
-#: Session-scoped memo of the trained weights (3 doubles) — the
-#: kmeans-centroid contract: repeat callers skip the LOGREG_STEPS
-#: one-row collects and rebuild only the scoring plan.
-_LOGREG_MEMO: dict[tuple, list] = {}
-
-
-def _clear_logreg_memo() -> int:
-    n = len(_LOGREG_MEMO)
-    _LOGREG_MEMO.clear()
-    return n
-
-
-from ..cache import register_memo_clearer  # noqa: E402
-
-register_memo_clearer(_clear_logreg_memo)
-
-
 def _logreg_sigma(z: Column) -> Column:
     """Rational 'fast sigmoid' 0.5 + z / (2 * (1 + |z|)) — the squashing
     link used INSTEAD of 1/(1+exp(-z)) deliberately: the training loop is
@@ -1656,14 +1639,19 @@ def logreg_weights(spark: SparkSession, sf_dir: str) -> list:
     (three gradient components, each a decimal(18,9) sum of per-row
     9 dp-quantized terms) collected to the driver — the MLlib
     driver-holds-the-model shape; the model is 3 scalars at any corpus
-    size. Weights re-quantize to 9 dp between steps.
+    size. Weights re-quantize to 9 dp between steps. The weights are a
+    session memo, so repeat callers skip the LOGREG_STEPS one-row
+    collects and rebuild only their scoring plan.
     """
-    key = (spark.sparkContext.applicationId, sf_dir,
-           LOGREG_STEPS, LOGREG_LR)
-    got = _LOGREG_MEMO.get(key)
-    if got is not None:
-        return got
-    feat = _logreg_features(spark, sf_dir)
+    return session_memo(
+        spark,
+        f"logreg_weights:{LOGREG_STEPS}:{LOGREG_LR}",
+        sf_dir,
+        lambda: _train_logreg(_logreg_features(spark, sf_dir)),
+    )
+
+
+def _train_logreg(feat: DataFrame) -> list:
     beta = [0.0, 0.0, 0.0]
     for _ in range(LOGREG_STEPS):
         z = F.lit(beta[0]) + F.lit(beta[1]) * F.col("x1") + F.lit(
@@ -1692,7 +1680,6 @@ def logreg_weights(spark: SparkSession, sf_dir: str) -> list:
             round(beta[j] - LOGREG_LR * (float(row[f"g{j}"]) / n), 9)
             for j in range(3)
         ]
-    _LOGREG_MEMO[key] = beta
     return beta
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import register_memo_clearer, track
+from ..cache import release_checkpoint, session_memo, track
 from ..exactmath import round_div_long, sql_round_div
 from ..registry import register
 from ..sources.io import load
@@ -282,31 +282,6 @@ CLUSTER_THRESHOLD = 0.5
 CC_MAX_ROUNDS = 50
 
 
-def _checkpoint_rdd(df: DataFrame):
-    """The JVM RDD backing a ``localCheckpoint``'ed DataFrame (whose analyzed
-    plan is a ``LogicalRDD`` wrapping the persisted internal RDD), or None if
-    the plan has a different shape. Lets the CC loop and the label-memo
-    clearer release checkpoint blocks EXPLICITLY instead of waiting on
-    ContextCleaner GC (ADVICE r3: ``_CC_LABELS_MEMO.clear`` only dropped
-    Python references, so blocks stayed pinned past the 'release')."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return None
-        return plan.rdd()
-    except Exception:
-        return None
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    rdd = _checkpoint_rdd(df)
-    if rdd is not None:
-        try:
-            rdd.unpersist(False)
-        except Exception:
-            pass  # session stopped; nothing to free
-
-
 def connected_components(
     edges_directed: DataFrame, max_rounds: int = CC_MAX_ROUNDS
 ) -> DataFrame:
@@ -396,7 +371,7 @@ def connected_components(
         # the agg materialized this round's checkpoint, so the previous
         # round's blocks (read exactly once, by that job) can be freed NOW —
         # otherwise every intermediate round pins O(nodes) for the session.
-        _release_checkpoint(prev_labels)
+        release_checkpoint(prev_labels)
         if new_sum == prev_sum:
             return labels
         prev_sum = new_sum
@@ -405,50 +380,10 @@ def connected_components(
     )
 
 
-#: Session-scoped memo of the corpus near-dup component labels, keyed by
-#: (session id, corpus dir, threshold). Connected components is ITERATIVE —
-#: its output plan reads run-specific checkpoint RDDs, so Spark's
-#: CacheManager can never match two runs the way it matches the persisted
-#: pair table. This memo is the engine-level equivalent: the dedup graph's
-#: labels are a materialized view that dedup_cluster AND dedup_survivors
-#: read (histogram vs corpus anti-join). Footprint: one row per node that
-#: appears in a near-dup pair — strictly smaller than the pair table that
-#: is already cached. Entries pin their checkpoint blocks for the session
-#: lifetime (same documented trade as the shingle cache).
-_CC_LABELS_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _clear_cc_memo() -> int:
-    """Drop the label memo AND unpersist each entry's checkpoint RDD (the
-    Python dict only holds references — the blocks live in the JVM until
-    explicitly unpersisted). Returns entries dropped so
-    ``clear_tracked_caches`` reports releases in persistent-RDD units."""
-    n = len(_CC_LABELS_MEMO)
-    for df in _CC_LABELS_MEMO.values():
-        _release_checkpoint(df)
-    _CC_LABELS_MEMO.clear()
-    return n
-
-
-register_memo_clearer(_clear_cc_memo)
-
-
-def _session_key(spark: SparkSession) -> str:
-    """Stable memo key for a session: applicationId, NOT id(spark) —
-    CPython reuses object ids after GC, so id() can alias a new session to
-    a stopped one whose checkpoint RDDs are gone (ADVICE r2)."""
-    return spark.sparkContext.applicationId
-
-
-def corpus_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id, label) components of the trigram-Jaccard >= CLUSTER_THRESHOLD
-    graph over ``documents``, memoized per (session, corpus)."""
-    key = (_session_key(spark), sf_dir, CLUSTER_THRESHOLD)
-    labels = _CC_LABELS_MEMO.get(key)
-    if labels is not None:
-        return labels
-    docs = load(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(docs).filter(F.col("jacc") >= CLUSTER_THRESHOLD)
+def _pair_graph_labels(pairs: DataFrame) -> DataFrame:
+    """(id, label) components of the undirected graph whose edges are the
+    ``pairs`` rows with jacc >= CLUSTER_THRESHOLD."""
+    pairs = pairs.filter(F.col("jacc") >= CLUSTER_THRESHOLD)
     edges = (
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .unionAll(
@@ -460,8 +395,27 @@ def corpus_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the labels plan reads only its checkpointed RDDs, so the edge cache
     # can be dropped here instead of lingering for the rest of the session
     edges.unpersist()
-    _CC_LABELS_MEMO[key] = labels
     return labels
+
+
+def corpus_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, label) components of the trigram-Jaccard >= CLUSTER_THRESHOLD
+    graph over ``documents``.
+
+    A session memo: the CC output plan reads run-specific checkpoint RDDs,
+    so the CacheManager can never match two runs the way it matches the
+    persisted pair table. dedup_cluster and dedup_survivors share one
+    label set, one row per node of a near-dup pair (smaller than the
+    cached pair table); its checkpoint blocks stay pinned until
+    ``clear_tracked_caches``."""
+    return session_memo(
+        spark,
+        f"corpus_cc_labels:{CLUSTER_THRESHOLD}",
+        sf_dir,
+        lambda: _pair_graph_labels(
+            jaccard_pairs(load(spark, sf_dir, "documents"))
+        ),
+    )
 
 
 @register(
@@ -1447,31 +1401,12 @@ def funnel_cc_labels(
     share labels only when they pass semantically identical survivor
     frames, so a future funnel variant (different thresholds, pre-filtered
     subset) can never receive labels computed from another frame."""
-    memo_key = (
-        _session_key(spark),
+    return session_memo(
+        spark,
+        f"funnel_cc_labels:{CLUSTER_THRESHOLD}:{exact.semanticHash()}",
         sf_dir,
-        CLUSTER_THRESHOLD,
-        "funnel",
-        exact.semanticHash(),
+        lambda: _pair_graph_labels(jaccard_pairs(exact)),
     )
-    labels = _CC_LABELS_MEMO.get(memo_key)
-    if labels is None:
-        pairs = jaccard_pairs(exact).filter(
-            F.col("jacc") >= CLUSTER_THRESHOLD
-        )
-        edges = (
-            pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-            .unionAll(
-                pairs.select(
-                    F.col("b_id").alias("src"), F.col("a_id").alias("dst")
-                )
-            )
-            .persist()
-        )
-        labels = connected_components(edges)
-        edges.unpersist()
-        _CC_LABELS_MEMO[memo_key] = labels
-    return labels
 
 
 @register("pipeline_dedup_corpus", oracle=_funnel_oracle())

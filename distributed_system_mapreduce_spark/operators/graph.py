@@ -34,7 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import checkpoint_generation, scalar_memo, track
+from ..cache import (
+    checkpoint_generation,
+    release_checkpoint,
+    session_memo,
+    track,
+)
 from ..exactmath import (
     round_div,
     round_div_long,
@@ -350,12 +355,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that at sf0.1 is 1-2 partitions of real work — fixed scheduling
     # overhead was ~60% of the query. Sizing is applied with EXPLICIT
     # repartitions on the loop keys, never by mutating session config.
-    # Both driver scalars ride the session sizing-memo (r16 optimization
-    # round, cache.scalar_memo): the tracked pair/degree frames are
-    # immutable for the session, so re-running their 1-row count jobs on
-    # every plan build was pure fixed cost.
-    n_dir_edges = 2 * scalar_memo(
-        spark, f"n_copurchase_pairs:{sf_dir}", pairs.count
+    # Both driver scalars are session memos (cache.session_memo): they
+    # are functions of the corpus, so their 1-row count jobs run once per
+    # session, not on every plan build.
+    n_dir_edges = 2 * session_memo(
+        spark, "n_copurchase_pairs", sf_dir, pairs.count
     )
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     loop_parts = max(1, min(default_parts, n_dir_edges // 200_000 + 1))
@@ -377,7 +381,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bounded driver scalar (like the CC loop), session-memoized as above
     n_nodes = float(
-        scalar_memo(spark, f"n_graph_vertices:{sf_dir}", deg.count)
+        session_memo(spark, "n_graph_vertices", sf_dir, deg.count)
     )
     if n_nodes == 0:
         # PageRank of the empty graph is the empty ranking — return the
@@ -433,53 +437,35 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 BACKBONE_SUPPORT = 2
 
 
-#: session-scoped memo of backbone component labels — the CC output plan
-#: reads run-specific checkpoint RDDs, so (like the corpus near-dup labels
-#: in operators/dedup.py) it is memoized per (session, corpus) and its
-#: checkpoint blocks are released through the cache registry's memo
-#: clearer, not leaked for the session lifetime.
-_BACKBONE_CC_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _clear_backbone_cc_memo() -> int:
-    from .dedup import _release_checkpoint
-
-    n = len(_BACKBONE_CC_MEMO)
-    for df in _BACKBONE_CC_MEMO.values():
-        _release_checkpoint(df)
-    _BACKBONE_CC_MEMO.clear()
-    return n
-
-
-from ..cache import register_memo_clearer  # noqa: E402
-
-register_memo_clearer(_clear_backbone_cc_memo)
-
-
-def backbone_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id, label) components of the support-thresholded co-purchase
-    backbone, memoized per (session, corpus)."""
-    from .dedup import _session_key, connected_components
-
-    key = (_session_key(spark), sf_dir, BACKBONE_SUPPORT)
-    labels = _BACKBONE_CC_MEMO.get(key)
-    if labels is not None:
-        return labels
-    co = (
+def _backbone_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric (src, dst) edges of the support-thresholded backbone."""
+    return _symmetric(
         copurchase_support(spark, sf_dir)
         .filter(F.col("support") >= BACKBONE_SUPPORT)
         .select("src", "dst")
     )
-    # persist the symmetric edge list for the loop's lifetime: every CC
-    # round joins against it, and without the persist each round would
-    # re-run the O(|lineitem|) pair rollup (measured: 18.6 s -> ~2 s at
-    # sf0.1). Dropped as soon as the labels plan only reads checkpoints —
-    # same lifecycle as corpus_cc_labels.
-    edges = _symmetric(co).persist()
-    labels = connected_components(edges)
-    edges.unpersist()
-    _BACKBONE_CC_MEMO[key] = labels
-    return labels
+
+
+def backbone_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, label) components of the support-thresholded co-purchase
+    backbone — a session memo, like the corpus near-dup labels in
+    operators/dedup.py (the CC output plan reads run-specific checkpoint
+    RDDs, which the CacheManager cannot match across runs)."""
+    from .dedup import connected_components
+
+    def build() -> DataFrame:
+        # persist the symmetric edge list for the loop's lifetime: every CC
+        # round joins against it, and without the persist each round would
+        # re-run the O(|lineitem|) pair rollup (measured: 18.6 s -> ~2 s at
+        # sf0.1). Dropped as soon as the labels plan only reads checkpoints.
+        edges = _backbone_sym(spark, sf_dir).persist()
+        labels = connected_components(edges)
+        edges.unpersist()
+        return labels
+
+    return session_memo(
+        spark, f"backbone_cc_labels:{BACKBONE_SUPPORT}", sf_dir, build
+    )
 
 
 @register(
@@ -599,18 +585,19 @@ def graph_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    # r16 optimization round: the basket total is a session constant of
-    # the corpus (cache.scalar_memo — previously a full distinct scan of
-    # lineitem on EVERY plan build), and the (support, ca, cb) join frame
-    # is referenced by BOTH rule directions, so without a materialization
-    # point the lineitem-wide item-count rollup ran once per branch.
+    # The basket total is a session memo of the corpus (otherwise a full
+    # distinct scan of lineitem on every plan build), and the
+    # (support, ca, cb) join frame is referenced by BOTH rule directions,
+    # so without a materialization point the lineitem-wide item-count
+    # rollup ran once per branch.
     # The frame is backbone-sized (pairs past the support threshold) —
     # the join/shuffle-heavy duplicated-subtree class where a
     # checkpoint_generation slot wins (see agg_weighted_median for the
     # opposite, fused-rollup case, measured and rejected).
-    n_orders = scalar_memo(
+    n_orders = session_memo(
         spark,
-        f"n_orders_distinct:{sf_dir}",
+        "n_orders_distinct",
+        sf_dir,
         li.select("l_orderkey").distinct().count,
     )
     item_cnt = li.groupBy(F.col("l_partkey").alias("part")).agg(
@@ -853,8 +840,6 @@ def kcore_peel(
     materializing action) and the predecessor's blocks are released as
     soon as the new generation is live.
     """
-    from .dedup import _release_checkpoint
-
     # Edge-proportional round sizing (the CC loop's heuristic): the peel
     # input is usually a heavily-filtered backbone — thousands of edges,
     # not millions — so without explicit sizing every round schedules
@@ -902,7 +887,7 @@ def kcore_peel(
     for _ in range(max_rounds):
         nxt = kcore_round(edges, k, loop_parts).localCheckpoint(eager=False)
         n_next = nxt.count()
-        _release_checkpoint(edges)
+        release_checkpoint(edges)
         edges = nxt
         rounds += 1
         if n_next == n_edges:
@@ -914,7 +899,7 @@ def kcore_peel(
         # counter and max_rounds budget.
         if n_next <= local_tail_max:
             rows = [(r[0], r[1]) for r in edges.collect()]
-            _release_checkpoint(edges)
+            release_checkpoint(edges)
             out, n_edges, rounds = _kcore_peel_local(
                 rows, k, n_edges, rounds, max_rounds
             )
@@ -926,67 +911,34 @@ def kcore_peel(
     return edges, n_edges, rounds
 
 
-#: session memo of the k-core peel's LOCAL fixpoint — the surviving
-#: symmetric edge rows + round count, keyed (session, corpus, k). Same
-#: lifecycle class as the backbone CC label memo (the iterative core's
-#: output is the memoized INTERMEDIATE; the summary row is still derived
-#: per run): populated only when the peel finished in driver memory
-#: (edges.isLocal() — bounded by KCORE_LOCAL_TAIL_MAX rows), so the
-#: distributed path at corpus scale is untouched. Cleared with the
-#: tracked caches.
-_KCORE_CORE_MEMO: dict[tuple, tuple[list, int]] = {}
-
-
-def _clear_kcore_core_memo() -> None:
-    _KCORE_CORE_MEMO.clear()
-    return None
-
-
-register_memo_clearer(_clear_kcore_core_memo)
-
-
 def _kcore_summary(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """(k, core nodes, core edges, rounds) of the backbone's k-core."""
-    from .dedup import _release_checkpoint, _session_key
+    sym = _backbone_sym(spark, sf_dir)
+    # The backbone is a deterministic filter of the tracked support table,
+    # so its symmetric edge count is a session memo: both k-core queries
+    # and every repeat build share one count job.
+    n_sym = session_memo(spark, "n_backbone_sym_edges", sf_dir, sym.count)
+    if n_sym > KCORE_LOCAL_TAIL_MAX:
+        edges, n_edges, rounds = kcore_peel(sym, k, n_edges=n_sym)
+        core_nodes = edges.select("src").distinct().count()
+        release_checkpoint(edges)
+        return spark.createDataFrame(
+            [(k, core_nodes, n_edges // 2, rounds)],
+            "k int, n_core_nodes long, n_core_edges long, n_rounds int",
+        )
 
-    memo_key = (_session_key(spark), sf_dir, k)
-    memo = _KCORE_CORE_MEMO.get(memo_key)
-    if memo is None:
-        backbone = (
-            copurchase_support(spark, sf_dir)
-            .filter(F.col("support") >= BACKBONE_SUPPORT)
-            .select("src", "dst")
+    def peel_local() -> tuple[list, int]:
+        # the same handoff decision (and the same local loop, shared round
+        # counter and budget) kcore_peel makes, inlined so the fixpoint
+        # rows are a session memo: repeat builds skip the backbone collect
+        # and the peel
+        rows0 = [(r[0], r[1]) for r in sym.collect()]
+        rows, _n, rounds = _kcore_peel_local(
+            rows0, k, n_sym, 0, KCORE_MAX_ROUNDS
         )
-        sym = _symmetric(backbone)
-        # session sizing-memo (r16, cache.scalar_memo): the backbone is a
-        # deterministic filter of the tracked support table, so its
-        # symmetric edge count is a session constant — both k-core queries
-        # and every bench sample share one count job instead of re-running
-        # it per build.
-        n_sym = scalar_memo(
-            spark, f"n_backbone_sym_edges:{sf_dir}", sym.count
-        )
-        if n_sym <= KCORE_LOCAL_TAIL_MAX:
-            # Same handoff decision (and the same local loop, shared
-            # round counter/budget) kcore_peel makes — inlined here so
-            # the fixpoint ROWS can be memoized: the r16 build-profile
-            # showed each warm build still paying the backbone collect
-            # plus two summary jobs for a peel whose input is a session
-            # constant.
-            rows0 = [(r[0], r[1]) for r in sym.collect()]
-            rows, _n, rounds = _kcore_peel_local(
-                rows0, k, n_sym, 0, KCORE_MAX_ROUNDS
-            )
-            _KCORE_CORE_MEMO[memo_key] = (rows, rounds)
-        else:
-            edges, n_edges, rounds = kcore_peel(sym, k, n_edges=n_sym)
-            core_nodes = edges.select("src").distinct().count()
-            _release_checkpoint(edges)
-            return spark.createDataFrame(
-                [(k, core_nodes, n_edges // 2, rounds)],
-                "k int, n_core_nodes long, n_core_edges long, n_rounds int",
-            )
-    rows, rounds = _KCORE_CORE_MEMO[memo_key]
+        return rows, rounds
+
+    rows, rounds = session_memo(spark, f"kcore_core:{k}", sf_dir, peel_local)
     core_nodes = len({s for s, _ in rows})
     return spark.createDataFrame(
         [(k, core_nodes, len(rows) // 2, rounds)],
@@ -1160,13 +1112,13 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the node key feeds the distinct with pre-placed data, so each level
     # is one edge-proportional exchange instead of a full-width one.
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # session sizing-memo (r16): shared with PageRank's edge count
+    # session memo shared with PageRank's edge count
     level_parts = max(
         1,
         min(
             default_parts,
-            2 * scalar_memo(
-                spark, f"n_copurchase_pairs:{sf_dir}", pairs.count
+            2 * session_memo(
+                spark, "n_copurchase_pairs", sf_dir, pairs.count
             ) // 200_000 + 1,
         ),
     )
@@ -1945,21 +1897,6 @@ def _lpa_labels_local(edges: "list[tuple[int, int]]", rounds: int) -> dict:
     return labels
 
 
-#: session memo of the local LPA fixpoint labels — keyed (session, corpus,
-#: rounds), the backbone-CC-labels lifecycle class (iterative core output
-#: memoized; the top-20 rollup still derived per run); populated only on
-#: the driver-local path, cleared with the tracked caches.
-_LPA_LABELS_MEMO: dict[tuple, dict] = {}
-
-
-def _clear_lpa_labels_memo() -> None:
-    _LPA_LABELS_MEMO.clear()
-    return None
-
-
-register_memo_clearer(_clear_lpa_labels_memo)
-
-
 @register("graph_label_propagation", oracle=_lpa_oracle())
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 communities of the co-purchase backbone after
@@ -1987,17 +1924,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from collections import Counter
 
-    from ..cache import track
-    from .dedup import _session_key
-
-    co = (
-        copurchase_support(spark, sf_dir)
-        .filter(F.col("support") >= BACKBONE_SUPPORT)
-        .select("src", "dst")
-    )
-    sym = _symmetric(co)
-    # Local-tail handoff (r16 optimization round — the kcore_peel /
-    # KCORE_LOCAL_TAIL_MAX move, same bound, same bounded-collect class):
+    sym = _backbone_sym(spark, sf_dir)
+    # Local-tail handoff (the kcore_peel / KCORE_LOCAL_TAIL_MAX move, same
+    # bound, same bounded-collect class):
     # at sf0.1 the 4 unrolled rounds are ~12 exchanges of pure stage
     # latency over a 7k-edge backbone. When the session-memoized backbone
     # count proves the graph driver-small, the synchronous rounds run in
@@ -2005,16 +1934,16 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fixpoint labels are memoized per (session, corpus, rounds) like
     # the backbone CC labels; the top-20 rollup is derived per run.
     # Corpus-scale graphs take the distributed plan untouched.
-    n_sym = scalar_memo(
-        spark, f"n_backbone_sym_edges:{sf_dir}", sym.count
-    )
+    n_sym = session_memo(spark, "n_backbone_sym_edges", sf_dir, sym.count)
     if n_sym <= KCORE_LOCAL_TAIL_MAX:
-        memo_key = (_session_key(spark), sf_dir, LPA_ROUNDS)
-        lab = _LPA_LABELS_MEMO.get(memo_key)
-        if lab is None:
-            rows = [(r[0], r[1]) for r in sym.collect()]
-            lab = _lpa_labels_local(rows, LPA_ROUNDS)
-            _LPA_LABELS_MEMO[memo_key] = lab
+        lab = session_memo(
+            spark,
+            f"lpa_labels:{LPA_ROUNDS}",
+            sf_dir,
+            lambda: _lpa_labels_local(
+                [(r[0], r[1]) for r in sym.collect()], LPA_ROUNDS
+            ),
+        )
         sizes_c = Counter(lab.values())
         top = sorted(sizes_c.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
         return spark.createDataFrame(

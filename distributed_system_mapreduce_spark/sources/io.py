@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..cache import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -63,93 +65,29 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Session-scoped memo of source DataFrames, keyed by (application id,
-#: sf_dir, table). ``spark.read.parquet`` lists the path and reads footers
-#: to infer the schema on EVERY call — measured 80-140 ms per repeat load
-#: at sf0.1, which across a few hundred load calls in a full bench sweep
-#: is tens of seconds of pure metadata re-derivation. A resident engine
-#: holds exactly this in its catalog (a metastore table's schema +
-#: snapshot), so the memo is the honest steady state: DataFrames are
-#: immutable and every caller composes fresh transforms on the shared
-#: leaf, so lineage/caching semantics are unchanged. Keyed per (session,
-#: sf_dir, table); each entry stores (path fingerprint, frame) where the
-#: fingerprint is (mtime_ns, size) of the table path (ADVICE r11): a
-#: harness that regenerates fixture files into the same sf_dir mid-session
-#: bumps the mtime, the fingerprint mismatches, and the entry is REPLACED
-#: (re-listing the files) instead of silently serving the stale snapshot —
-#: and superseded snapshots are evicted, not accumulated. Cleared through
-#: the cache registry with the other session memos.
-_TABLE_MEMO: dict[tuple, tuple] = {}
-
-
-def _path_fingerprint(path: str) -> tuple:
-    """Staleness fingerprint of ``path`` for the table memo: the path's own
-    (mtime_ns, size) plus, for a directory, the max (name, mtime_ns, size)
-    over its direct entries (ADVICE r12: an in-place overwrite of a part
-    file's CONTENTS changes the file's mtime but not the directory's, so
-    the directory stat alone can serve a stale file-listing snapshot).
-    One shallow scandir — no recursion; Spark table dirs are flat.
-    Non-local paths (s3://, hdfs://) stat-fail and fall back to a
-    constant — memo-forever, matching a catalog's snapshot pinning."""
-    import os
-
-    try:
-        st = os.stat(path)
-        entries: tuple = ()
-        if os.path.isdir(path):
-            with os.scandir(path) as it:
-                newest = None
-                for e in it:
-                    try:
-                        es = e.stat()
-                    except OSError:
-                        continue
-                    key = (es.st_mtime_ns, e.name, es.st_size)
-                    if newest is None or key > newest:
-                        newest = key
-                entries = (newest,)
-        return (st.st_mtime_ns, st.st_size) + entries
-    except OSError:
-        return ("unstattable",)
-
-
-def _clear_table_memo() -> int:
-    n = len(_TABLE_MEMO)
-    _TABLE_MEMO.clear()
-    return n
-
-
-from ..cache import register_memo_clearer  # noqa: E402
-
-register_memo_clearer(_clear_table_memo)
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-generated parquet table (TESTDATA.md).
 
     ``events`` gets its ``ts`` column normalized to TimestampType (µs) —
     see :func:`normalize_events_ts` for the two fixture encodings handled.
-    Frames are memoized per (session, sf_dir, table) — see _TABLE_MEMO.
+    Frames are session memos (:func:`..cache.session_memo`):
+    ``spark.read.parquet`` lists the path and reads footers on every call
+    (80-140 ms at sf0.1), so each (session, sf_dir, table) reads once, and
+    again after the files under ``sf_dir`` change. Callers compose fresh
+    transforms on the shared leaf, so lineage and caching are unchanged.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = table_path(sf_dir, name)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    fp = _path_fingerprint(path)
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None and memo[0] == fp:
-        return memo[1]
-    # fingerprint changed (fixture rewritten in place): REPLACE the entry
-    # rather than keying on the fingerprint, so superseded snapshots are
-    # evicted instead of accumulating one dead DataFrame per rewrite.
-    if name == "events":
-        # harmless when ts is already µs; required to read NANOS fixtures
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_events_ts(spark.read.parquet(path))
-    else:
-        df = spark.read.parquet(path)
-    _TABLE_MEMO[key] = (fp, df)
-    return df
+
+    def read() -> DataFrame:
+        if name == "events":
+            # harmless when ts is already µs; required to read NANOS fixtures
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            return normalize_events_ts(spark.read.parquet(path))
+        return spark.read.parquet(path)
+
+    return session_memo(spark, f"table:{name}", sf_dir, read)
 
 
 def read_text(spark: SparkSession, path: str) -> DataFrame:

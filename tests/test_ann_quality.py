@@ -271,5 +271,5 @@ def test_pq_codebooks_reduce_quantization_error(emb_d):
             F.sum(l2_sq(F.col("sv"), F.col("ce"))).alias("e")
         ).collect()[0]["e"]
 
-    trained = pq_codebooks(e_named)
+    trained = pq_codebooks(e_named, SF_DIR)
     assert total_err(trained) <= total_err(seed) + 1e-9

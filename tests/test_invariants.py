@@ -124,11 +124,9 @@ def test_corpus_cc_labels_memoized(spark):
 def test_tracked_caches_release(spark):
     """Every cross-query persist goes through the cache registry, so one
     clear_tracked_caches() releases the session's whole cached working set
-    (and drops the CC label memo) — the explicit lifecycle replacing the
-    round-2 rely-on-LRU story."""
+    and empties the session memo store."""
     from distributed_system_mapreduce_spark import cache
     from distributed_system_mapreduce_spark.operators.dedup import (
-        _CC_LABELS_MEMO,
         jaccard_pairs,
     )
 
@@ -144,7 +142,7 @@ def test_tracked_caches_release(spark):
     released = cache.clear_tracked_caches()
     assert released == n1
     assert cache.tracked_count() == 0
-    assert not _CC_LABELS_MEMO
+    assert not cache._MEMO
 
 
 def test_pipeline_family_shares_cc_label_memo(spark):
@@ -154,48 +152,159 @@ def test_pipeline_family_shares_cc_label_memo(spark):
     loop. Pins the cross-query work sharing PLANS.md claims (VERDICT r3
     "Next round" #6)."""
     from distributed_system_mapreduce_spark import cache
-    from distributed_system_mapreduce_spark.operators.dedup import (
-        _CC_LABELS_MEMO,
-    )
+
+    def cc_label_entries() -> dict:
+        return {k: v for k, v in cache._MEMO.items() if "cc_labels" in k[1]}
 
     cache.clear_tracked_caches()
     QUERIES["pipeline_dedup_corpus"](spark, SF_SMOKE).collect()
-    after_first = dict(_CC_LABELS_MEMO)
+    after_first = cc_label_entries()
     assert after_first, "funnel CC labels should be memoized"
     QUERIES["pipeline_train_corpus"](spark, SF_SMOKE).collect()
-    assert set(_CC_LABELS_MEMO) == set(after_first)
+    assert set(cc_label_entries()) == set(after_first)
     for k, frame in after_first.items():
-        assert _CC_LABELS_MEMO[k] is frame  # identity: memo hit, not rebuild
+        assert cache._MEMO[k] is frame  # identity: memo hit, not rebuild
 
 
 def test_memo_clear_releases_checkpoint_rdds(spark):
     """Dropping the label memo must unpersist its checkpoint RDD blocks in
-    the JVM, not just the Python references (ADVICE r3) — and the release
-    count must include the memo entries so bench accounting reconciles."""
+    the JVM, not just the Python references — and the release count must
+    include every memo entry (labels and source frames alike) so bench
+    accounting reconciles."""
     from distributed_system_mapreduce_spark import cache
     from distributed_system_mapreduce_spark.operators.dedup import (
-        _CC_LABELS_MEMO,
         corpus_cc_labels,
     )
-
-    from distributed_system_mapreduce_spark.sources.io import _TABLE_MEMO
 
     cache.clear_tracked_caches()
     jsc = spark.sparkContext._jsc.sc()
     base = jsc.getPersistentRDDs().size()
     corpus_cc_labels(spark, SF_SMOKE).count()
-    n_memo = len(_CC_LABELS_MEMO)
-    assert n_memo >= 1
+    assert any("cc_labels" in k[1] for k in cache._MEMO)
+    n_memo = len(cache._MEMO)
     assert jsc.getPersistentRDDs().size() > base  # checkpoint blocks pinned
     tracked_before = cache.tracked_count()
-    # the source-frame memo (r11, sources/io.py) clears through the same
-    # registry sweep, so its entries are part of the released count
-    n_tables = len(_TABLE_MEMO)
     released = cache.clear_tracked_caches()
-    assert released == tracked_before + n_memo + n_tables
-    assert not _CC_LABELS_MEMO
+    assert released == tracked_before + n_memo
+    assert not cache._MEMO
     # every RDD this build pinned (tracked frames + memo checkpoints) is
     # out of the JVM registry again — nothing left for ContextCleaner
+    assert jsc.getPersistentRDDs().size() <= base
+
+
+def test_session_memo_store_is_single():
+    """Source scan, no Spark: the only module-level memo dict in the
+    package is cache.py's session memo store, so a second hand-rolled
+    store (with its own clearer and no input-change check) cannot come
+    back unnoticed."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / (
+        "distributed_system_mapreduce_spark"
+    )
+    dict_calls = {"dict", "defaultdict", "OrderedDict"}
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            func = getattr(value, "func", None)
+            is_dict = isinstance(value, (ast.Dict, ast.DictComp)) or (
+                getattr(func, "id", getattr(func, "attr", None)) in dict_calls
+            )
+            found += [
+                (path.relative_to(root).as_posix(), t.id)
+                for t in targets
+                if is_dict
+                and isinstance(t, ast.Name)
+                and "MEMO" in t.id.upper()
+            ]
+    assert found == [("cache.py", "_MEMO")]
+
+
+#: strict row subsets written over a copy of sf0.001, one per table the
+#: memo-class queries read; each keeps every oracle passing in a fresh
+#: session (the PQ seeds need vec_ids 0..PQ_K-1, k-means needs >= KMEANS_K
+#: vectors)
+_REWRITE_KEEP = {
+    "documents": ("doc_id", lambda ids: ids % 4 != 0),
+    "lineitem": ("l_orderkey", lambda keys: keys % 2 != 0),
+    "embeddings": ("vec_id", lambda ids: ids < 60),
+}
+
+#: one oracled query per session-memo class: corpus and funnel CC labels,
+#: backbone CC labels, k-core and LPA fixpoints, sizing scalars, PQ
+#: codebooks and codes, k-means centroids, logistic-regression weights
+#: (every one also reads source-frame memos)
+_MEMO_CLASS_QUERIES = (
+    "dedup_cluster",
+    "pipeline_dedup_corpus",
+    "graph_components",
+    "graph_kcore",
+    "graph_label_propagation",
+    "graph_pagerank",
+    "sim_pq_recall",
+    "embed_kmeans",
+    "pipeline_quality_logreg",
+)
+
+
+def test_rewritten_input_invalidates_every_memo_class(spark, tmp_path):
+    """Rewriting the corpus files mid-session must not serve any result
+    built from the old files: after a strict-subset rewrite, every
+    memo-class query equals its DuckDB oracle on the NEW files, and one
+    clear_tracked_caches() still returns the JVM to its baseline."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_system_mapreduce_spark import cache
+    from distributed_system_mapreduce_spark.registry import ORACLES
+    from distributed_system_mapreduce_spark.testing import (
+        compare_frames,
+        duck_connection,
+    )
+
+    sf_dir = str(tmp_path / "sf")
+    (tmp_path / "sf").mkdir()
+    for t in TABLES:
+        # copyfile, not copytree: the fixtures are read-only
+        shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{sf_dir}/{t}.parquet")
+
+    def mismatches() -> list[str]:
+        con = duck_connection(sf_dir)
+        try:
+            return [
+                p
+                for name in _MEMO_CLASS_QUERIES
+                for p in compare_frames(
+                    QUERIES[name](spark, sf_dir).toPandas(),
+                    con.execute(ORACLES[name]).df(),
+                    name,
+                )
+            ]
+        finally:
+            con.close()
+
+    cache.clear_tracked_caches()
+    jsc = spark.sparkContext._jsc.sc()
+    base = jsc.getPersistentRDDs().size()
+    assert not mismatches()
+    for t, (col, keep) in _REWRITE_KEEP.items():
+        path = f"{sf_dir}/{t}.parquet"
+        table = pq.read_table(path)
+        subset = table.filter(pa.array(keep(table[col].to_numpy())))
+        assert 0 < subset.num_rows < table.num_rows
+        pq.write_table(subset, path)
+    assert not mismatches()
+    cache.clear_tracked_caches()
+    assert not cache._MEMO
     assert jsc.getPersistentRDDs().size() <= base
 
 

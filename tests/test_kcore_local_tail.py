@@ -16,9 +16,7 @@ import random
 
 import pytest
 
-from distributed_system_mapreduce_spark.operators.dedup import (
-    _release_checkpoint,
-)
+from distributed_system_mapreduce_spark.cache import release_checkpoint
 from distributed_system_mapreduce_spark.operators.graph import (
     _symmetric,
     kcore_peel,
@@ -49,8 +47,8 @@ def test_local_tail_matches_forced_distributed(spark, seed, k):
     dist, n_dist, r_dist = kcore_peel(sym, k, local_tail_max=0)
     loc_rows = sorted(map(tuple, loc.collect()))
     dist_rows = sorted(map(tuple, dist.collect()))
-    _release_checkpoint(loc)
-    _release_checkpoint(dist)
+    release_checkpoint(loc)
+    release_checkpoint(dist)
     assert (n_loc, r_loc) == (n_dist, r_dist)
     assert loc_rows == dist_rows
 
@@ -70,12 +68,12 @@ def test_midloop_handoff_matches_forced_distributed(spark):
 
     dist, n_dist, r_dist = kcore_peel(sym, 2, local_tail_max=0)
     dist_rows = sorted(map(tuple, dist.collect()))
-    _release_checkpoint(dist)
+    release_checkpoint(dist)
     assert r_dist >= 2, "fixture must peel for >= 2 rounds to test handoff"
 
     mixed, n_mixed, r_mixed = kcore_peel(sym, 2, local_tail_max=n0 - 1)
     mixed_rows = sorted(map(tuple, mixed.collect()))
-    _release_checkpoint(mixed)
+    release_checkpoint(mixed)
     assert (n_mixed, r_mixed) == (n_dist, r_dist)
     assert mixed_rows == dist_rows
 
@@ -92,4 +90,4 @@ def test_empty_core_local(spark):
     assert n_loc == n_dist == 0
     assert r_loc == r_dist
     assert loc.count() == dist.count() == 0
-    _release_checkpoint(dist)
+    release_checkpoint(dist)

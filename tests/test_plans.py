@@ -577,8 +577,8 @@ def test_pq_codes_frame_is_memoized_per_session(spark):
             "vec_id", F.col("embedding").cast("array<double>").alias("e")
         )
 
-    a = pq_codes(emb())
-    b = pq_codes(emb())
+    a = pq_codes(emb(), SF_DIR)
+    b = pq_codes(emb(), SF_DIR)
     assert a is b  # same tracked DataFrame object, one cache entry
 
 

@@ -218,9 +218,7 @@ def test_kcore_peel_matches_brute_force(spark, edges, k):
     """The distributed semi-join peel reaches the same fixpoint as a plain
     adjacency-dict peel on random graphs, for any k — the k-core is unique,
     so (core nodes, core edges) must agree exactly."""
-    from distributed_system_mapreduce_spark.operators.dedup import (
-        _release_checkpoint,
-    )
+    from distributed_system_mapreduce_spark.cache import release_checkpoint
     from distributed_system_mapreduce_spark.operators.graph import (
         _symmetric,
         kcore_peel,
@@ -232,7 +230,7 @@ def test_kcore_peel_matches_brute_force(spark, edges, k):
     pairs = spark.createDataFrame(canon, "src long, dst long")
     core, n_dir_edges, _rounds = kcore_peel(_symmetric(pairs), k)
     got = (core.select("src").distinct().count(), n_dir_edges // 2)
-    _release_checkpoint(core)
+    release_checkpoint(core)
     assert got == _brute_kcore(canon, k), (canon, k)
 
 

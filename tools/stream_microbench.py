@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Streaming-operator micro-bench (r17, VERDICT r16 #10).
+"""Streaming-operator micro-bench.
 
 The registered-query bench never exercises the streaming modules (they
 have no bench path by design — the driver contract is batch queries), so
@@ -17,7 +17,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -31,6 +33,8 @@ def main() -> None:
     ap.add_argument("--cpus", type=int, default=int(
         os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
+    if args.runs < 1:
+        ap.error("--runs must be >= 1")
 
     from pyspark.sql import functions as F
 
@@ -56,20 +60,21 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sf = args.sf_dir
 
+    # one-batch replay of the changelog projection through a parquet
+    # written once per invocation from --sf-dir, outside the timed runs
+    # (the events source parquet has NANOS timestamps the vanilla
+    # readStream path refuses; the CDC op keys on epoch-us)
+    tmp_dir = tempfile.mkdtemp(prefix="stream_bench_")
+    events_path = os.path.join(tmp_dir, "events")
+    load(spark, sf, "events").select(
+        "user_id", "event_id", "event_type", "value",
+        F.unix_micros("ts").alias("ts_epoch"),
+    ).write.parquet(events_path)
+
     def events_stream():
-        ev = load(spark, sf, "events")
         schema = ("user_id long, event_id long, event_type string, "
                   "value double, ts_epoch long")
-        # one-batch replay of the changelog projection through a temp
-        # parquet (the events source parquet has NANOS timestamps the
-        # vanilla readStream path refuses; the CDC op keys on epoch-us)
-        path = "/tmp/_stream_bench_events"
-        if not os.path.exists(path):
-            ev.select(
-                "user_id", "event_id", "event_type", "value",
-                F.unix_micros("ts").alias("ts_epoch"),
-            ).write.mode("overwrite").parquet(path)
-        return spark.readStream.schema(schema).parquet(path)
+        return spark.readStream.schema(schema).parquet(events_path)
 
     cases = {
         "dedup_exact_stream": lambda: run_available_now(
@@ -92,7 +97,7 @@ def main() -> None:
             rate_anomaly_stream(read_events_stream(spark, sf)), "mb_rate"),
     }
 
-    out: dict[str, float] = {}
+    out: dict[str, float | str] = {}
     for name, fn in sorted(cases.items()):
         best = None
         for _ in range(args.runs):
@@ -108,6 +113,7 @@ def main() -> None:
             out[name] = round(best, 3)
     print(json.dumps({"sf_dir": sf, "runs": args.runs, "seconds": out}))
     spark.stop()
+    shutil.rmtree(tmp_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":
