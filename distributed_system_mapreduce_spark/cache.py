@@ -1,4 +1,5 @@
-"""Session-lifetime state: tracked frames, session memos, checkpoint slots.
+"""Session-lifetime state: tracked frames, session memos, checkpoints and
+iterative loops.
 
 Some intermediates outlive the query builder that creates them, so no
 builder is positioned to release them. This module owns all of them, in
@@ -15,6 +16,10 @@ three kinds:
   weights) and driver sizing scalars;
 - checkpoint slots (``checkpoint_generation``): the one live
   ``localCheckpoint`` per call site.
+
+It also owns the two things every iterative driver loop shares: the
+checkpointed fixpoint loop (``fixpoint``) and its shuffle width
+(``loop_parts``). This is the only module that calls ``localCheckpoint``.
 
 ``clear_tracked_caches`` releases all three. Long-lived sessions (bench
 loops, notebooks) call it between logical phases; short-lived jobs never
@@ -200,3 +205,61 @@ def checkpoint_generation(slot: str, df: DataFrame) -> DataFrame:
     out = df.localCheckpoint(eager=False)
     _CKPT_GEN[slot] = out
     return out
+
+
+def loop_parts(spark, n_rows: int) -> int:
+    """Shuffle width for an iterative plan over ``n_rows`` rows: one
+    partition per 200k rows, at least 1, at most the session's
+    ``spark.sql.shuffle.partitions``.
+
+    Loops apply it with explicit ``repartition`` calls, never by setting
+    the session conf, which would leak into queries planned concurrently.
+    Checkpointed stages compile through ``.rdd``, where AQE cannot coalesce
+    them, so without it every round of a small graph would schedule a
+    default-width stage of near-empty tasks.
+    """
+    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(default_parts, n_rows // 200_000 + 1))
+
+
+def fixpoint(
+    initial: DataFrame,
+    step: "Callable[[DataFrame], DataFrame]",
+    measure: "Callable[[DataFrame], object]",
+    max_rounds: int,
+    name: str,
+    stop: "Callable[[object], bool] | None" = None,
+) -> tuple:
+    """Iterate ``step`` from ``initial`` until ``measure`` repeats; returns
+    (frame, measure, rounds, converged).
+
+    Contract:
+    - each generation is ``localCheckpoint(eager=False)``'ed, so plans stay
+      flat however many rounds run;
+    - ``measure`` runs one action on each generation, the one that
+      materializes it; the predecessor is released right after, so the
+      loop pins one generation at a time;
+    - a round converges when its measure equals the previous one; the
+      confirming round counts in ``rounds``;
+    - ``stop``, if given, is asked after each unconverged round; when it
+      returns True the loop ends there with ``converged`` False;
+    - the returned frame is a live checkpoint the caller releases with
+      ``release_checkpoint``;
+    - if ``max_rounds`` rounds pass without convergence or stop, the live
+      generation is released and a ``RuntimeError`` naming ``name`` is
+      raised.
+    """
+    frame = initial.localCheckpoint(eager=False)
+    m = measure(frame)
+    for rounds in range(1, max_rounds + 1):
+        nxt = step(frame).localCheckpoint(eager=False)
+        m_next = measure(nxt)
+        release_checkpoint(frame)
+        frame = nxt
+        if m_next == m:
+            return frame, m_next, rounds, True
+        m = m_next
+        if stop is not None and stop(m):
+            return frame, m, rounds, False
+    release_checkpoint(frame)
+    raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import release_checkpoint, session_memo, track
+from ..cache import fixpoint, loop_parts, session_memo, track
 from ..exactmath import round_div_long, sql_round_div
 from ..registry import register
 from ..sources.io import load
@@ -296,106 +296,75 @@ def connected_components(
     2014) without its edge rewrites.
 
     ``edges_directed`` must contain both (src, dst) and (dst, src) for each
-    undirected edge. Driver involvement per round is one scalar, MLlib's
-    convergence pattern; labels are localCheckpoint'ed per round so the plan
-    stays flat (a durable checkpoint dir on a cluster). Convergence is
-    detected by Σ label: min-propagation only ever DECREASES labels, so the
-    sum is strictly monotone until fixpoint — one scan-agg over the
-    checkpointed labels replaces an old⋈new comparison join per round.
-    Checkpoints are LAZY (eager=False): the convergence agg is the action
-    that materializes each round's labels, so every round costs exactly ONE
-    Spark job instead of a checkpoint job plus an agg job.
-
-    Loop parallelism is sized from the EDGE COUNT, not the session's
-    shuffle-partition default: checkpointing compiles through ``.rdd``, so
-    AQE's small-shuffle coalescing never sees these stages, and a
-    1000-partition cluster default would schedule 1000 near-empty tasks per
-    round for a near-dup graph that filtered down to thousands of edges.
-    One partition per ~200k edges (floor 1, cap = session default) keeps
-    round cost proportional to the graph, which is exactly what AQE would
-    have chosen. Sizing is applied with EXPLICIT hash repartitions on the
-    loop's join/agg keys — never by mutating the session-global
-    spark.sql.shuffle.partitions, which would leak into queries planned
-    concurrently in the same session (ADVICE r2). ``localCheckpoint``
-    preserves the physical partitioning into its LogicalRDD, so each
-    round's edges⋈labels join reuses both sides' hash placement with no
-    extra exchange.
+    undirected edge; it is persisted for the loop (every round joins it)
+    and unpersisted before return. The rounds run on ``cache.fixpoint`` at
+    ``cache.loop_parts`` width with Σ label as the measure: min-propagation
+    only ever decreases labels, so the sum is strictly monotone until the
+    fixpoint. The returned labels are a live checkpoint.
     """
     spark = edges_directed.sparkSession
-    n_edges = edges_directed.count()
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(1, min(default_parts, n_edges // 200_000 + 1))
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    edges = edges_directed.repartition(loop_parts, "src")
-    nodes = (
-        edges_directed.select(F.col("src").alias("id"))
-        .repartition(loop_parts, "id")
-        .distinct()
-    )
-    labels = (
-        nodes.withColumn("label", F.col("id")).localCheckpoint(eager=False)
-    )
-    prev_sum = labels.agg(label_sum).collect()[0]["s"]
-    for _ in range(max_rounds):
-        prev_labels = labels
-        msgs = (
-            edges.join(labels, edges.src == labels.id)
-            .select(F.col("dst").alias("id"), "label")
+    edges_directed = edges_directed.persist()
+    try:
+        parts = loop_parts(spark, edges_directed.count())
+        edges = edges_directed.repartition(parts, "src")
+        nodes = (
+            edges_directed.select(F.col("src").alias("id"))
+            .repartition(parts, "id")
+            .distinct()
         )
-        propagated = (
-            msgs.unionAll(labels)
-            .repartition(loop_parts, "id")
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
-        # pointer jumping: replace each label by ITS label (labels are
-        # node ids, so every label has a row). Compresses chains
-        # geometrically.
-        parent = propagated.select(
-            F.col("id").alias("p_id"), F.col("label").alias("p_label")
-        )
-        labels = (
-            propagated.repartition(loop_parts, "label")
-            .join(parent, propagated.label == parent.p_id, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("p_label"), F.col("label")),
-                ).alias("label"),
+
+        def step(labels: DataFrame) -> DataFrame:
+            msgs = (
+                edges.join(labels, edges.src == labels.id)
+                .select(F.col("dst").alias("id"), "label")
             )
-            .repartition(loop_parts, "id")
-            .localCheckpoint(eager=False)
+            propagated = (
+                msgs.unionAll(labels)
+                .repartition(parts, "id")
+                .groupBy("id")
+                .agg(F.min("label").alias("label"))
+            )
+            # pointer jumping: replace each label by ITS label (labels are
+            # node ids, so every label has a row)
+            parent = propagated.select(
+                F.col("id").alias("p_id"), F.col("label").alias("p_label")
+            )
+            return (
+                propagated.repartition(parts, "label")
+                .join(parent, propagated.label == parent.p_id, "left")
+                .select(
+                    "id",
+                    F.least(
+                        F.col("label"),
+                        F.coalesce(F.col("p_label"), F.col("label")),
+                    ).alias("label"),
+                )
+                .repartition(parts, "id")
+            )
+
+        label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+        labels, _, _, _ = fixpoint(
+            nodes.withColumn("label", F.col("id")),
+            step,
+            lambda df: df.agg(label_sum).collect()[0]["s"],
+            max_rounds,
+            "connected_components",
         )
-        new_sum = labels.agg(label_sum).collect()[0]["s"]
-        # the agg materialized this round's checkpoint, so the previous
-        # round's blocks (read exactly once, by that job) can be freed NOW —
-        # otherwise every intermediate round pins O(nodes) for the session.
-        release_checkpoint(prev_labels)
-        if new_sum == prev_sum:
-            return labels
-        prev_sum = new_sum
-    raise RuntimeError(
-        f"connected_components did not converge in {max_rounds} rounds"
-    )
+    finally:
+        edges_directed.unpersist()
+    return labels
 
 
 def _pair_graph_labels(pairs: DataFrame) -> DataFrame:
     """(id, label) components of the undirected graph whose edges are the
     ``pairs`` rows with jacc >= CLUSTER_THRESHOLD."""
     pairs = pairs.filter(F.col("jacc") >= CLUSTER_THRESHOLD)
-    edges = (
+    return connected_components(
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .unionAll(
             pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
         )
-        .persist()
     )
-    labels = connected_components(edges)
-    # the labels plan reads only its checkpointed RDDs, so the edge cache
-    # can be dropped here instead of lingering for the rest of the session
-    edges.unpersist()
-    return labels
 
 
 def corpus_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,13 +20,12 @@ Scale notes (100 TB):
   per-edge intersection of the two endpoints' out-adjacency arrays, which
   keeps the shuffled volume at O(|E|) instead of materializing the
   sum(outdeg^2) wedge set.
-- **PageRank** runs a fixed number of synchronous iterations as a driver
-  loop (the same shape as the connected-components loop in
-  ``operators/dedup.py``: each round is one join + one partial-aggregated
-  shuffle over the edge table, cached once). The only driver-side scalar is
-  the vertex count. At cluster scale the rank frame would be checkpointed
-  every few rounds to truncate lineage, exactly as the CC loop does; eight
-  lazy rounds stay well inside Catalyst's plan budget here.
+- **PageRank** runs a fixed number of synchronous rounds, unrolled into
+  one lazy plan: each round is one join + one partial-aggregated shuffle
+  over the edge table, cached once. The only driver-side scalar is the
+  vertex count; eight rounds stay well inside Catalyst's plan budget.
+- **Connected components and the k-core peel** run to a data-dependent
+  fixpoint on ``cache.fixpoint``, one checkpointed generation per round.
 """
 
 from __future__ import annotations
@@ -36,6 +35,8 @@ from pyspark.sql import functions as F
 
 from ..cache import (
     checkpoint_generation,
+    fixpoint,
+    loop_parts,
     release_checkpoint,
     session_memo,
     track,
@@ -348,38 +349,27 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pairs = copurchase_pairs(spark, sf_dir)
     deg = _degrees(pairs)
-    # Edge-proportional round sizing, same heuristic as the CC loop
-    # (operators/dedup.py): one partition per ~200k directed edges, floor 1,
-    # cap = session default. Without it each of the 8 rounds schedules a
-    # full shuffle.partitions-wide stage (32-200 tasks) over a rank frame
-    # that at sf0.1 is 1-2 partitions of real work — fixed scheduling
-    # overhead was ~60% of the query. Sizing is applied with EXPLICIT
-    # repartitions on the loop keys, never by mutating session config.
-    # Both driver scalars are session memos (cache.session_memo): they
-    # are functions of the corpus, so their 1-row count jobs run once per
-    # session, not on every plan build.
+    # Both driver scalars are session memos: they are functions of the
+    # corpus, so their count jobs run once per session.
     n_dir_edges = 2 * session_memo(
         spark, "n_copurchase_pairs", sf_dir, pairs.count
     )
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(1, min(default_parts, n_dir_edges // 200_000 + 1))
     # Edge list with the source's out-degree attached once, hash-placed on
     # DST (the round's aggregation key) and cached for reuse across all 8
     # rounds. Placement on dst is the round-cost trick: the rank frame is
     # vertex-sized, so AQE broadcasts it into the join, the broadcast join
     # preserves the streamed (edge) side's dst-hash placement, and the
     # groupBy("dst") then needs NO exchange — each round is a single
-    # edge-proportional stage (loop_parts tasks) plus a broadcast build,
-    # instead of a full shuffle.partitions-wide shuffle. At cluster scale,
+    # edge-proportional stage (cache.loop_parts width) plus a broadcast
+    # build, instead of a default-width shuffle. At cluster scale,
     # where the vertex frame outgrows broadcast, AQE falls back to a
     # shuffled join and the round degrades gracefully to the standard
     # two-shuffle Pregel shape.
     edges_w = track(
         _symmetric(pairs)
         .join(deg.select(F.col("id").alias("src"), "deg"), "src")
-        .repartition(loop_parts, "dst")
+        .repartition(loop_parts(spark, n_dir_edges), "dst")
     )
-    # bounded driver scalar (like the CC loop), session-memoized as above
     n_nodes = float(
         session_memo(spark, "n_graph_vertices", sf_dir, deg.count)
     )
@@ -398,9 +388,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work to one equi-join + one aggregated shuffle.
     #
     # Broadcast decision, made ONCE with the exact vertex count instead of
-    # per-round by AQE (VERDICT r10 #5): AQE only converts to broadcast
-    # after materializing each round's shuffle, so the 8 rounds each paid a
-    # full exchange before the runtime re-plan — ~60% of the warm query.
+    # per-round by AQE: AQE only converts to broadcast after materializing
+    # each round's shuffle, so the 8 rounds each paid a full exchange
+    # before the runtime re-plan — ~60% of the warm query.
     # With the count already on the driver, hint the broadcast explicitly
     # when the rank frame is provably small (<= _RANK_BCAST_MAX_VERTICES
     # rows of (long, double) — tens of MB) and every round compiles
@@ -453,18 +443,11 @@ def backbone_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     RDDs, which the CacheManager cannot match across runs)."""
     from .dedup import connected_components
 
-    def build() -> DataFrame:
-        # persist the symmetric edge list for the loop's lifetime: every CC
-        # round joins against it, and without the persist each round would
-        # re-run the O(|lineitem|) pair rollup (measured: 18.6 s -> ~2 s at
-        # sf0.1). Dropped as soon as the labels plan only reads checkpoints.
-        edges = _backbone_sym(spark, sf_dir).persist()
-        labels = connected_components(edges)
-        edges.unpersist()
-        return labels
-
     return session_memo(
-        spark, f"backbone_cc_labels:{BACKBONE_SUPPORT}", sf_dir, build
+        spark,
+        f"backbone_cc_labels:{BACKBONE_SUPPORT}",
+        sf_dir,
+        lambda: connected_components(_backbone_sym(spark, sf_dir)),
     )
 
 
@@ -503,10 +486,9 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     support >= {BACKBONE_SUPPORT}), reported as a component-size histogram.
 
     Reuses the engine's pointer-jumping CC primitive
-    (operators/dedup.py::connected_components — O(log diameter) rounds,
-    lazy per-round localCheckpoints, edge-count-sized loop shuffles) on a
-    second graph, demonstrating it as a library operator rather than a
-    dedup-special. The support filter is a HAVING over the same
+    (operators/dedup.py::connected_components — O(log diameter) rounds on
+    ``cache.fixpoint``) on a second graph, demonstrating it as a library
+    operator rather than a dedup-special. The support filter is a HAVING over the same
     one-shuffle pair rollup the full edge build uses; the backbone is
     orders of magnitude sparser than the raw co-occurrence graph, which is
     exactly why a support threshold is the first thing a market-basket
@@ -732,11 +714,10 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCORE_K = 2
 KCORE_MAX_ROUNDS = 50
 
-#: Local-tail handoff bound for the k-core peel (r16 optimization round,
-#: guide §5 "the driver should do almost no data work" — and its converse:
-#: work that is PROVABLY driver-small should not pay distributed fixed
-#: costs). When the surviving symmetric edge count — already on the driver
-#: as the loop's convergence scalar, no extra job — is <= this bound, the
+#: Local-tail handoff bound for the k-core peel: work that is PROVABLY
+#: driver-small should not pay distributed fixed costs. When the surviving
+#: symmetric edge count — already on the driver as the loop's convergence
+#: scalar, no extra job — is <= this bound, the
 #: remaining rounds run as a plain in-memory peel: 100k (src, dst) longs is
 #: ~1.6 MB collected, the same bounded-collect class as the MMR pool and
 #: the CC convergence scalars. The payoff is the iterative-algorithm tail
@@ -750,26 +731,22 @@ KCORE_MAX_ROUNDS = 50
 KCORE_LOCAL_TAIL_MAX = 100_000
 
 
-def kcore_round(edges: DataFrame, k: int, loop_parts: int = 0) -> DataFrame:
+def kcore_round(edges: DataFrame, k: int) -> DataFrame:
     """ONE peel round: degree rollup over the surviving symmetric edge
     list, then a semi-join keeping edges with BOTH endpoints alive. The
-    loop body of :func:`kcore_peel`, exposed (pre-localCheckpoint) so the
+    loop body of :func:`kcore_peel`, exposed (pre-checkpoint) so the
     registry-wide plan sweep can screen the iterative query's per-round
     plan — the stage that actually runs at scale — instead of the final
-    LocalTableScan (VERDICT r6 #7).
+    LocalTableScan.
 
-    No per-round repartition (r12, VERDICT r11 #4): generation 0 is
-    hash-placed on src once in :func:`kcore_peel`, the alive list
-    broadcasts at peel scale so both semi-joins preserve that placement,
-    and localCheckpoint carries it into the next generation — the
-    explicit re-placement was a redundant exchange every round (measured
+    No per-round repartition: generation 0 is hash-placed on src once in
+    :func:`kcore_peel`, the alive list broadcasts at peel scale so both
+    semi-joins preserve that placement, and the checkpoint carries it into
+    the next generation (dropping the per-round re-placement measured
     2.12 s → 1.52 s for the sf0.1 k=2 peel). Where alive outgrows the
     broadcast threshold the dst semi-join shuffles and the next round's
-    degree rollup re-exchanges on src — exactly what the explicit
-    repartition would have cost anyway. ``loop_parts`` is retained for
-    signature stability; placement is generation 0's job now.
+    degree rollup re-exchanges on src.
     """
-    del loop_parts
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     alive = deg.filter(F.col("deg") >= k).select("src")
     return (
@@ -819,129 +796,63 @@ def kcore_peel(
 ) -> tuple[DataFrame, int, int]:
     """Peel a SYMMETRIC edge list to its k-core fixpoint.
 
-    Returns (surviving symmetric edges — a live localCheckpoint the caller
-    releases, or a driver-built local frame when the tail finished under
-    ``local_tail_max`` (release is then a no-op), surviving directed-edge
-    count, peel rounds). Shared by the registered backbone queries (any k)
-    and the randomized property test, which pits it against a
-    plain-Python reference peel on Erdos-Renyi graphs.
+    Returns (surviving symmetric edges, surviving directed-edge count, peel
+    rounds). The frame is a live checkpoint the caller releases with
+    ``cache.release_checkpoint`` (a no-op when the peel finished locally).
+    Shared by the registered backbone queries (any k) and the randomized
+    property test, which pits it against a plain-Python reference peel.
 
-    Each round is one degree rollup over the surviving edge list plus a
-    semi-join keeping edges with BOTH endpoints alive; the convergence
-    scalar is the surviving-edge count (strictly decreasing until
-    fixpoint). Round cost shrinks with the graph; peeled frames are
-    re-persisted and the predecessor released each round, so the loop
-    holds one generation of state (the CC loop's lifecycle).
-
-    localCheckpoint, not persist: each round's frame must become a flat
-    LogicalRDD, or the semi-join lineage compounds and even RENDERING
-    the cached plan's name OOMs the driver after enough rounds (hit at
-    sf0.1). Lazy checkpoints cost one job per round (the count is the
-    materializing action) and the predecessor's blocks are released as
-    soon as the new generation is live.
+    Each round is one :func:`kcore_round` on ``cache.fixpoint``; the
+    measure is the surviving-edge count, strictly decreasing until the
+    fixpoint. Once that count is <= ``local_tail_max`` (at the start, or
+    after any round) the remaining rounds run in driver memory
+    (:func:`_kcore_peel_local`) with the same round counter and budget, so
+    the result and ``rounds`` equal the all-distributed peel's. ``n_edges``,
+    if given, must be the exact row count of ``edges_sym``.
     """
-    # Edge-proportional round sizing (the CC loop's heuristic): the peel
-    # input is usually a heavily-filtered backbone — thousands of edges,
-    # not millions — so without explicit sizing every round schedules
-    # shuffle.partitions-wide stages of near-empty tasks. Each generation
-    # is re-placed on src at loop_parts; localCheckpoint preserves the
-    # placement, so the next round's degree rollup and src semi-join need
-    # no exchange. The sizing count runs the (cheap, usually cached)
-    # upstream once before generation 0 is checkpointed — unless the
-    # caller already holds it (r16: _kcore_summary session-memoizes the
-    # backbone count, so repeated builds skip this job; the value MUST be
-    # the frame's exact row count — it seeds the convergence comparison).
+    spark = edges_sym.sparkSession
     if n_edges is None:
         n_edges = edges_sym.count()
-    spark = edges_sym.sparkSession
-    schema = edges_sym.schema
-    # Local-tail handoff (r16 optimization round, KCORE_LOCAL_TAIL_MAX
-    # note): the convergence count is already on the driver, so when it
-    # proves the survivor set driver-small the remaining rounds skip the
-    # per-round distributed fixed costs entirely — one bounded collect,
-    # then the same loop in memory. Measured at sf0.1 (7,146-edge
-    # backbone, 6 rounds): 3.8 s warm -> ~0.3 s, identical output
-    # including the round count (tests/test_kcore_local_tail.py pins
-    # local == forced-distributed on random graphs).
-    if n_edges <= local_tail_max:
-        rows = [(r[0], r[1]) for r in edges_sym.collect()]
-        out, n_edges, rounds = _kcore_peel_local(
-            rows, k, n_edges, 0, max_rounds
-        )
-        return spark.createDataFrame(out, schema), n_edges, rounds
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(1, min(default_parts, n_edges // 200_000 + 1))
-    edges = edges_sym.repartition(loop_parts, "src").localCheckpoint(
-        eager=False
-    )
-    edges.count()  # materialize generation 0
-    # (r12 note: a size-guarded AQE bypass around this loop was measured
-    # and REJECTED — isolated peel timings improved ~30%, but the full
-    # registered query ran 1.5-1.8x SLOWER under the scope: with adaptive
-    # planning off, the alive-list semi-joins plan statically against the
-    # checkpoint's unknown size estimate and demote to full-width
-    # sort-merge joins, costing more than AQE's per-stage barrier saves.
-    # AQE stays on; the round's real win was dropping the redundant
-    # per-round repartition, see kcore_round.)
     rounds = 0
-    for _ in range(max_rounds):
-        nxt = kcore_round(edges, k, loop_parts).localCheckpoint(eager=False)
-        n_next = nxt.count()
-        release_checkpoint(edges)
-        edges = nxt
-        rounds += 1
-        if n_next == n_edges:
-            break
-        n_edges = n_next
-        # Mid-loop handoff: once the peel has shrunk the survivor set under
-        # the bound (proven by this round's convergence count — no extra
-        # job), the dwindling tail finishes locally with the shared round
-        # counter and max_rounds budget.
-        if n_next <= local_tail_max:
-            rows = [(r[0], r[1]) for r in edges.collect()]
-            release_checkpoint(edges)
-            out, n_edges, rounds = _kcore_peel_local(
-                rows, k, n_edges, rounds, max_rounds
-            )
-            return spark.createDataFrame(out, schema), n_edges, rounds
+    if n_edges <= local_tail_max:
+        tail = edges_sym.collect()
     else:
-        raise RuntimeError(
-            f"k-core peel did not converge in {max_rounds} rounds"
+        # AQE stays on around this loop: with adaptive planning off the
+        # alive-list semi-joins plan statically against the checkpoint's
+        # unknown size and demote to full-width sort-merge joins.
+        edges, n_edges, rounds, converged = fixpoint(
+            edges_sym.repartition(loop_parts(spark, n_edges), "src"),
+            lambda e: kcore_round(e, k),
+            DataFrame.count,
+            max_rounds,
+            "k-core peel",
+            stop=lambda n: n <= local_tail_max,
         )
-    return edges, n_edges, rounds
+        if converged:
+            return edges, n_edges, rounds
+        tail = edges.collect()
+        release_checkpoint(edges)
+    out, n_edges, rounds = _kcore_peel_local(
+        [(r[0], r[1]) for r in tail], k, n_edges, rounds, max_rounds
+    )
+    return spark.createDataFrame(out, edges_sym.schema), n_edges, rounds
 
 
 def _kcore_summary(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """(k, core nodes, core edges, rounds) of the backbone's k-core."""
-    sym = _backbone_sym(spark, sf_dir)
-    # The backbone is a deterministic filter of the tracked support table,
-    # so its symmetric edge count is a session memo: both k-core queries
-    # and every repeat build share one count job.
-    n_sym = session_memo(spark, "n_backbone_sym_edges", sf_dir, sym.count)
-    if n_sym > KCORE_LOCAL_TAIL_MAX:
+    """(k, core nodes, core edges, rounds) of the backbone's k-core, a
+    session memo."""
+
+    def build() -> tuple:
+        sym = _backbone_sym(spark, sf_dir)
+        # shared by both k-core queries and graph_label_propagation
+        n_sym = session_memo(spark, "n_backbone_sym_edges", sf_dir, sym.count)
         edges, n_edges, rounds = kcore_peel(sym, k, n_edges=n_sym)
         core_nodes = edges.select("src").distinct().count()
         release_checkpoint(edges)
-        return spark.createDataFrame(
-            [(k, core_nodes, n_edges // 2, rounds)],
-            "k int, n_core_nodes long, n_core_edges long, n_rounds int",
-        )
+        return (k, core_nodes, n_edges // 2, rounds)
 
-    def peel_local() -> tuple[list, int]:
-        # the same handoff decision (and the same local loop, shared round
-        # counter and budget) kcore_peel makes, inlined so the fixpoint
-        # rows are a session memo: repeat builds skip the backbone collect
-        # and the peel
-        rows0 = [(r[0], r[1]) for r in sym.collect()]
-        rows, _n, rounds = _kcore_peel_local(
-            rows0, k, n_sym, 0, KCORE_MAX_ROUNDS
-        )
-        return rows, rounds
-
-    rows, rounds = session_memo(spark, f"kcore_core:{k}", sf_dir, peel_local)
-    core_nodes = len({s for s, _ in rows})
     return spark.createDataFrame(
-        [(k, core_nodes, len(rows) // 2, rounds)],
+        [session_memo(spark, f"kcore_summary:{k}", sf_dir, build)],
         "k int, n_core_nodes long, n_core_edges long, n_rounds int",
     )
 
@@ -1104,23 +1015,14 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     )
-    # Edge-proportional level sizing (VERDICT r10 #5), the same heuristic
-    # as the PageRank/CC loops: each level's frontier dedup and the
-    # downstream min-hop rollup are vertex-sized frames, so letting them
-    # default to shuffle.partitions-wide exchanges made fixed task
-    # scheduling ~60% of the warm query. The explicit hash repartition on
-    # the node key feeds the distinct with pre-placed data, so each level
-    # is one edge-proportional exchange instead of a full-width one.
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # session memo shared with PageRank's edge count
-    level_parts = max(
-        1,
-        min(
-            default_parts,
-            2 * session_memo(
-                spark, "n_copurchase_pairs", sf_dir, pairs.count
-            ) // 200_000 + 1,
-        ),
+    # Each level's frontier dedup and the downstream min-hop rollup are
+    # vertex-sized frames: an explicit hash repartition on the node key at
+    # cache.loop_parts width makes each level one edge-proportional
+    # exchange instead of a default-width one. The edge count is a session
+    # memo shared with PageRank.
+    level_parts = loop_parts(
+        spark,
+        2 * session_memo(spark, "n_copurchase_pairs", sf_dir, pairs.count),
     )
     src0 = edges.agg(F.min("src").alias("node"))
     frontier = src0

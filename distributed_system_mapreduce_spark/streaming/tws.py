@@ -15,8 +15,7 @@ shim links the vendored pure-Python protobuf runtime from the local
 Google Cloud SDK onto sys.path/PYTHONPATH, and with the RocksDB state
 store provider (``configure_tws`` — typed state needs multiple column
 families) the runner starts and the batch-equality test runs for real.
-The probe contract stays — exactly like the Delta/Iceberg connectors
-(sources/table_formats.py), the processor and plan builder are importable
+The probe contract stays: the processor and plan builder are importable
 everywhere, and ``tws_runtime_available()`` tells callers whether THIS
 environment can execute them (tests/test_streaming.py skips with the
 actionable reason where it can't).

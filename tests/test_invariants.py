@@ -227,6 +227,118 @@ def test_session_memo_store_is_single():
     assert found == [("cache.py", "_MEMO")]
 
 
+def test_checkpoints_and_loop_sizing_live_in_cache():
+    """Source scan, no Spark: cache.py is the only module that calls
+    ``localCheckpoint``, and ``cache.loop_parts`` is the only reader of
+    ``spark.sql.shuffle.partitions`` (session.py only sets it in the
+    builder config), so the checkpoint lifecycle and the loop-sizing rule
+    each live in one place."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / (
+        "distributed_system_mapreduce_spark"
+    )
+    key = "spark.sql.shuffle.partitions"
+    checkpoint_calls, readers, setters = set(), [], set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        parent = {
+            child: node
+            for node in ast.walk(tree)
+            for child in ast.iter_child_nodes(node)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "localCheckpoint"
+            ):
+                checkpoint_calls.add(rel)
+            if not (isinstance(node, ast.Constant) and node.value == key):
+                continue
+            up = parent[node]
+            if isinstance(up, ast.Call) and getattr(up.func, "attr", None) == (
+                "config"
+            ):
+                setters.add(rel)
+                continue
+            while not isinstance(up, (ast.FunctionDef, ast.Module)):
+                up = parent[up]
+            readers.append((rel, getattr(up, "name", None)))
+    assert checkpoint_calls == {"cache.py"}
+    assert readers == [("cache.py", "loop_parts")]
+    assert setters == {"session.py"}
+
+
+def test_loop_parts_boundaries(spark):
+    """One partition per 200k rows, at least 1, capped at the session's
+    shuffle-partition default."""
+    from distributed_system_mapreduce_spark.cache import loop_parts
+
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert cap >= 2
+    assert [loop_parts(spark, n) for n in (0, 199_999, 200_000)] == [1, 1, 2]
+    assert loop_parts(spark, 200_000 * cap) == cap
+    assert loop_parts(spark, 10**12) == cap
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_fixpoint_raises_naming_the_loop(spark):
+    """A loop that runs out of rounds fails loudly, names itself, and
+    leaves no generation pinned."""
+    from distributed_system_mapreduce_spark.cache import fixpoint
+
+    before = _persistent_rdd_ids(spark)
+    counter = spark.createDataFrame([(1,), (2,)], "x long")
+    with pytest.raises(RuntimeError, match="runaway_counter"):
+        fixpoint(
+            counter,
+            lambda df: df.select((F.col("x") + 1).alias("x")),
+            lambda df: df.agg(F.sum("x")).collect()[0][0],
+            3,
+            "runaway_counter",
+        )
+    assert _persistent_rdd_ids(spark) <= before
+
+
+def test_fixpoint_pins_one_generation_and_releases_it(spark):
+    """Halving to zero: the loop converges on the first repeated measure
+    (the confirming round counts), keeps exactly one checkpoint live, and
+    after the caller releases the returned frame no generation of the
+    loop stays in the JVM's persistent-RDD registry. ``stop`` ends the
+    loop early, unconverged."""
+    from distributed_system_mapreduce_spark.cache import (
+        fixpoint,
+        release_checkpoint,
+    )
+
+    def halve(df):
+        return df.select((F.col("x") / 2).cast("long").alias("x"))
+
+    def total(df):
+        return df.agg(F.sum("x")).collect()[0][0]
+
+    before = _persistent_rdd_ids(spark)
+    start = spark.createDataFrame([(40,), (17,), (9,)], "x long")
+    out, m, rounds, converged = fixpoint(start, halve, total, 20, "halving")
+    assert (m, rounds, converged) == (0, 7, True)
+    assert sorted(r.x for r in out.collect()) == [0, 0, 0]
+    assert len(_persistent_rdd_ids(spark) - before) == 1
+    release_checkpoint(out)
+    assert _persistent_rdd_ids(spark) <= before
+
+    out, m, rounds, converged = fixpoint(
+        start, halve, total, 20, "halving", stop=lambda s: s < 10
+    )
+    assert (m, rounds, converged) == (8, 3, False)
+    release_checkpoint(out)
+    assert _persistent_rdd_ids(spark) <= before
+
+
 #: strict row subsets written over a copy of sf0.001, one per table the
 #: memo-class queries read; each keeps every oracle passing in a fresh
 #: session (the PQ seeds need vec_ids 0..PQ_K-1, k-means needs >= KMEANS_K

@@ -54,43 +54,6 @@ def test_text_input(spark, tmp_path):
     assert df.columns == ["value"]
 
 
-def test_table_formats_gated(spark, tmp_path):
-    """Delta/Iceberg connectors: available → roundtrip, absent → one clean
-    TableFormatUnavailable (never an opaque ClassNotFound from deep inside)."""
-    import pytest
-
-    from distributed_system_mapreduce_spark.sources import table_formats as tf
-
-    df = sio.load(spark, SF_SMOKE, "region")
-    if tf._delta_available(spark):
-        out = str(tmp_path / "region_delta")
-        tf.write_delta(df, out)
-        assert tf.read_delta(spark, out).count() == df.count()
-    else:
-        with pytest.raises(tf.TableFormatUnavailable):
-            tf.write_delta(df, str(tmp_path / "region_delta"))
-    if not tf._iceberg_available(spark):
-        with pytest.raises(tf.TableFormatUnavailable):
-            tf.read_iceberg(spark, "local.db.t")
-
-
-def test_avro_gated(spark, tmp_path):
-    """spark-avro is an external module: available → roundtrip, absent → one
-    clean TableFormatUnavailable."""
-    import pytest
-
-    from distributed_system_mapreduce_spark.sources import table_formats as tf
-
-    df = sio.load(spark, SF_SMOKE, "region")
-    if tf._avro_available(spark):
-        out = str(tmp_path / "region_avro")
-        tf.write_avro(df, out)
-        assert tf.read_avro(spark, out).count() == df.count()
-    else:
-        with pytest.raises(tf.TableFormatUnavailable):
-            tf.write_avro(df, str(tmp_path / "region_avro"))
-
-
 def test_read_json_skip_bad_quarantines_corrupt_rows(spark, tmp_path):
     """OSDI'04 §4.6 parity: malformed records must not kill the job NOR
     vanish silently — they surface in _corrupt_record for quarantine."""

@@ -431,7 +431,7 @@ def _internal_frames(spark):
     pq_asg = pq_assign(pq_sub, pq_cents)
     return {
         # label: (frame, allow_bnlj, allow_arrow)
-        "kcore_round": (kcore_round(edges, 2, 4), False, False),
+        "kcore_round": (kcore_round(edges, 2), False, False),
         "kmeans_assign": (assign, True, False),  # k-row broadcast grid
         "kmeans_recompute": (lloyd_recompute(assign), True, False),
         "mmr_cand_pool": (cand, True, False),  # 1-row query broadcast
@@ -586,7 +586,8 @@ def test_bfs_levels_keep_explicit_repartition(spark):
     """r13 (VERDICT r12 #2): the per-level repartition(level_parts, node)
     ahead of each frontier distinct was AUDITED, not assumed — dropping it
     (plain distinct: default-width exchange per level) measured SLOWER at
-    sf0.1 (tools/probe_bfs_r13.py; 64-wide reducers under the
+    sf0.1 (the probe script is in git: ``git show
+    70a868e:tools/probe_bfs_r13.py``; 64-wide reducers under the
     parallelism-first AQE policy vs the edge-proportional width), and an
     AQE REBALANCE hint was within host noise. The explicit sizing is
     load-bearing, so pin that it stays in the plan: one REPARTITION_BY_NUM
