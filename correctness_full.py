@@ -1,142 +1,22 @@
 #!/usr/bin/env python
-"""Full-registry correctness artifact (ADVICE r3 #1).
+"""Full-registry oracle parity at sf0.01, the driver's own check scale.
 
 The driver's CORRECTNESS_r{N}.json covers only the first 50 registered
-queries, so queries past the window carry no recorded evidence. This script
-runs the SAME compare (row count + schema + order-insensitive value hash vs
-the DuckDB oracle at sf0.01, rows-only smoke where no oracle is declared)
-over EVERY registered query and writes CORRECTNESS_LOCAL.json next to this
-file — the committed record that the whole surface, not just the driver
-window, holds parity.
+queries; this writes CORRECTNESS_LOCAL.json, the committed record that every
+registered query holds parity. It is ``tools/parity_bigsf.py`` with the
+sf0.01 defaults and takes the same options.
 
-Usage: python correctness_full.py   (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
+Usage: python correctness_full.py [--sf-dir /root/testdata/sf0.01]
+           [--budget 120] [--out CORRECTNESS_LOCAL.json]
+           [--only a,b,c] [--changed-only] [--merge]
 """
 
-from __future__ import annotations
-
-import hashlib
-import json
 import os
-import subprocess
 import sys
 
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 
-def _provenance() -> dict:
-    """Pin WHAT tree the artifact was generated from (VERDICT r4 #7): the
-    current git HEAD plus a sha256 over the package + entry sources, so a
-    future reader can detect a stale artifact without rerunning the sweep
-    (the tree hash also catches uncommitted edits, which HEAD alone
-    misses). ``source_dirty`` (VERDICT r13 #5) makes a pre-commit run
-    self-describing: r13's ledger recorded the PREVIOUS head because the
-    sweep ran on a dirty tree just before its source commit landed, which
-    read as stale to an auditor even though source_sha256 was current —
-    now the artifact says outright whether git_head fully describes the
-    sources it hashed. The close ritual runs this AFTER the last source
-    commit, so the committed artifact should always say dirty=false."""
-    root = os.path.dirname(os.path.abspath(__file__))
-    try:
-        head = subprocess.run(
-            ["git", "rev-parse", "HEAD"],
-            cwd=root, capture_output=True, text=True, check=True,
-        ).stdout.strip()
-    except Exception:
-        head = None
-    try:
-        status = subprocess.run(
-            ["git", "status", "--porcelain", "--",
-             "__spark_entry__.py", "distributed_system_mapreduce_spark"],
-            cwd=root, capture_output=True, text=True, check=True,
-        ).stdout.strip()
-        dirty = bool(status)
-    except Exception:
-        dirty = None
-    digest = hashlib.sha256()
-    paths = [os.path.join(root, "__spark_entry__.py")]
-    pkg = os.path.join(root, "distributed_system_mapreduce_spark")
-    for dirpath, _dirs, files in sorted(os.walk(pkg)):
-        paths.extend(
-            os.path.join(dirpath, f) for f in sorted(files)
-            if f.endswith(".py")
-        )
-    for p in paths:
-        digest.update(os.path.relpath(p, root).encode())
-        with open(p, "rb") as fh:
-            digest.update(fh.read())
-    return {
-        "git_head": head,
-        "source_dirty": dirty,
-        "source_sha256": digest.hexdigest(),
-    }
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-
-    from distributed_system_mapreduce_spark.registry import ORACLES, QUERIES
-    from distributed_system_mapreduce_spark.session import get_spark
-    from distributed_system_mapreduce_spark.testing import (
-        canonical_rows,
-        duck_connection,
-    )
-
-    spark = get_spark("dsmr-correctness-full")
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duck_connection(sf_dir)
-
-    results: dict[str, dict] = {}
-    n_fail = 0
-    for name in QUERIES:
-        rec: dict = {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        try:
-            sdf = QUERIES[name](spark, sf_dir).toPandas()
-            rec["spark_rows"] = len(sdf)
-            if name in ORACLES:
-                odf = con.execute(ORACLES[name]).df()
-                rec["oracle_rows"] = len(odf)
-                rec["rows_match"] = len(sdf) == len(odf)
-                rec["schema_match"] = sorted(sdf.columns) == sorted(odf.columns)
-                rec["hash_match"] = (
-                    rec["rows_match"]
-                    and rec["schema_match"]
-                    and canonical_rows(sdf) == canonical_rows(odf)
-                )
-                if not rec["hash_match"]:
-                    n_fail += 1
-            else:
-                rec["err"] = "no_oracle"
-        except Exception as exc:  # record, keep sweeping
-            rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
-            n_fail += 1
-        results[name] = rec
-
-    out = {
-        "provenance": _provenance(),
-        "sf_dir": sf_dir,
-        "queries_n": len(QUERIES),
-        "oracled_n": sum(1 for n in QUERIES if n in ORACLES),
-        "failed_n": n_fail,
-        "results": results,
-    }
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "CORRECTNESS_LOCAL.json"
-    )
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(
-        json.dumps(
-            {k: out[k] for k in ("sf_dir", "queries_n", "oracled_n", "failed_n")}
-        )
-    )
-    spark.stop()
-    sys.exit(1 if n_fail else 0)
-
+from parity_bigsf import main  # noqa: E402
 
 if __name__ == "__main__":
-    main()
+    main(sf_dir="/root/testdata/sf0.01", out="CORRECTNESS_LOCAL.json")

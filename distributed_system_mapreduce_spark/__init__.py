@@ -41,7 +41,7 @@ from .operators import (  # noqa: F401
 #: Canonical registration order. The driver's correctness harness checks the
 #: first 50 keys of ``registry.QUERIES`` in iteration order, so the 46
 #: SURVEY.md §2 contract keys come first (in §2 section order), followed by
-#: the four highest-value extended queries; everything else after.
+#: four extended queries in rotating slots 47-50; everything else after.
 CONTRACT_ORDER: tuple[str, ...] = (
     # §2.1 scans
     "scan_lineitem",
@@ -98,140 +98,9 @@ CONTRACT_ORDER: tuple[str, ...] = (
     "window_tumbling",
     "window_sliding",
     "window_session",
-    # slots 47-50: rotated per round so extended queries accumulate
-    # driver-verified CORRECTNESS rows. Banked so far:
-    #   r2: join_asof, dedup_cluster, agg_percentiles, funnel_conversion
-    #   r3: dedup_survivors, pipeline_dedup_corpus, text_bm25_topk,
-    #       sim_ann_recall
-    #   r4: pipeline_train_corpus, corpus_decontaminate, sample_stratified,
-    #       text_unigram_logprob
-    #   r5: hybrid_rrf_topk, dedup_exact_substring, events_rate_anomaly,
-    #       embed_outliers
-    #   r6: graph_components, sim_quantized_topk, events_user_features,
-    #       pipeline_sequence_pack
-    # Rotation queue (re-ranked per VERDICT r4 #5: value over recency, so
-    # every operator family has at least one driver-verified row by r8):
-    #   r7: graph_pagerank (iterative-loop witness), dedup_simhash64
-    #       (bit-block LSH family), embed_kmeans (clustering family),
-    #       events_series_topk (time-series similarity, new in r5)
-    #   r8: sql_market_share (TPC-H-style multiway), dedup_incremental
-    #       (batch-probes-index), events_retention_cohort (cohort family),
-    #       data_quality_checks (validation family)
-    #   r9: agg_approx_error (hash-checked HLL++ quality bound — promoted
-    #       the one §2 rows-only row to a measured-quality driver row,
-    #       VERDICT r6 #8), dedup_winnow (re-verified post r7 BIGINT
-    #       rework), sim_mmr_topk (re-verified post r7 hardening),
-    #       text_collocations (PMI family) — all four driver-green in
-    #       CORRECTNESS_r09.
-    #   r10: dedup_minhash_est_error (hash-checked MinHash quality,
-    #       new r7), agg_cms_heavy_hitters (hash-checked count-min bound,
-    #       new r7), orders_rfm_segments (segmentation family, re-planned
-    #       through chunked_ntile in r9), events_transition_matrix
-    #       (Markov family) — all four driver-green in CORRECTNESS_r10.
-    #   r11: join_bloom_pruned (runtime-filter family, new r7),
-    #       layout_zorder_cluster (data-layout family, new r7),
-    #       part_skyline_brand (skyline family, new r7),
-    #       pipeline_epoch_shuffle (training-order family, new r7)
-    #       — all four driver-green in CORRECTNESS_r11.
-    #   r12: sample_weighted_reservoir (E-S weighted sampling,
-    #       new r7), compact_file_bins (lakehouse maintenance, new r7),
-    #       events_ohlc_daily (hypertable downsample, new r7),
-    #       sim_pq_recall (PQ quality witness, new r7; promoted to a
-    #       hash-checked recall-bound oracle in r11 alongside
-    #       sim_ivfpq_recall) — all four driver-green in CORRECTNESS_r12.
-    #   r13: embed_pca_top_component
-    #       (variance/eigenvalue bound oracle, r12 promotion),
-    #       dedup_simhash_block_quality (pigeonhole-recall +
-    #       precision-floor oracle, new r12), graph_adamic_adar_capped and
-    #       graph_common_neighbors_capped (capped-wedge 100TB path, new
-    #       r12, hash-oracled top-20 parity) — all four driver-green in
-    #       CORRECTNESS_r13.
-    #   r14 (active, per VERDICT r13 #1): eval_auc (distributed
-    #       Mann-Whitney AUC, new r7), eval_calibration_bins (reliability
-    #       rollup, new r7), cdc_merge_upserts (lakehouse MERGE witness,
-    #       new r7), cdc_scd2_history (change-compressed SCD2, new r9 —
-    #       VERDICT r13 named the CDC pair over events_seasonal_index so
-    #       both CDC shapes get hard driver rows in one window; seasonal
-    #       index requeues to the overflow pool)
-    #   r15 (re-ranked per VERDICT r13 #4 — the multimodal family has
-    #       zero driver rows and two of its queries gained real
-    #       byte-derived oracles in r13): multimodal_media_features,
-    #       multimodal_phash_dedup (probed at x16 in r14: alpha 0.34),
-    #       graph_bfs_hops (single-plan bounded traversal, new r7),
-    #       eval_ndcg_at_k (retrieval ranking eval, new r7)
-    #       (displaced to r16+: mv_incremental_refresh,
-    #       text_bpe_merge_step)
-    #   r16: eval_confusion_centroid (prototype-classifier eval, new r7),
-    #       join_interval_overlap (range-join family, banked locally
-    #       since r2), orders_abc_pareto (running-share window family),
-    #       eval_pr_auc (average precision, new r8)
-    #   r17: sim_ivf_nprobe_sweep (IVF quality/cost curve, new r8),
-    #       corpus_ngram_overlap (memorization-risk audit, new r8),
-    #       pipeline_curriculum_order (schedule manifest, new r8),
-    #       orders_ship_latency (date-math percentiles, new r8)
-    #   r18: join_asof_tolerance (tolerance as-of, new r8),
-    #       orders_repeat_purchase_curve (retention curve, new r8),
-    #       events_inactivity_churn (lifecycle segments, new r8),
-    #       sim_ivfpq_recall (composed-ANN witness, new r8; promoted to a
-    #       hash-checked recall-bound oracle in r11 per VERDICT r10 #6)
-    #   r19: graph_adamic_adar (link-prediction family, new r9),
-    #       eval_f1_macro (class-balanced eval, new r9),
-    #       agg_weighted_median (chunked-scan threshold crossing, new r9),
-    #       events_seasonal_index (dow seasonality, new r7 — displaced
-    #       from r14 by cdc_scd2_history)
-    #   r20: events_burstiness (decimal moment sums, new r9),
-    #       text_source_bigram_overlap (provenance audit, new r9),
-    #       graph_degree_gini (chunked-rank Gini, new r9),
-    #       sql_returned_items (Q10 salted top-k, new r9)
-    #   overflow pool: orders_ship_latency_sketch (new r15 — rank-space
-    #       GK quality bound, the measured justification for the exact
-    #       percentile rollup's 100 TB swap; full oracle);
-    #       events_dau_mau_ratio, json_modal_prop,
-    #       text_char_entropy, pipeline_mix_rebalance (all new r9);
-    #       text_pii_scrub + pipeline_chunk_windows (new r13: privacy gate
-    #       and RAG chunker, both full-oracle — strong swap-ins for any
-    #       freed slot since their families' driver rows predate them);
-    #       r13 second-pass additions (all full-oracle), ranked for
-    #       swap-in: pipeline_quality_logreg (in-engine GD training — a
-    #       NEW capability class, highest swap-in priority),
-    #       graph_clustering_coeff + graph_modularity (graph-shape audit
-    #       pair), eval_regression_metrics + eval_spearman_corr +
-    #       eval_cohens_kappa + eval_log_loss + eval_brier_score
-    #       (eval-family depth), events_acf + events_changepoint +
-    #       events_mad_outliers (forecasting/monitoring trio),
-    #       text_bigram_logprob, embed_silhouette, agg_distinct_rollup
-    #   (dropped from queue, lower value: sample_weighted_mix — stratified
-    #    cousin already banked r4; graph_triangle_count — same plan shape
-    #    as graph_common_neighbors; events_gap_fill — exercised transitively
-    #    by events_series_topk's dense grid.)
-    #   (r11 note: graph_kcore/graph_kcore_k3, agg_hll_union and
-    #    agg_percentile_sketch_error gained full/bound oracles this round —
-    #    strong swap-in candidates for any later slot whose family is
-    #    already driver-covered by then; graph_kcore would be the graph
-    #    family's first hash-checked driver row.)
-    #   (r12 note: embed_pca_top_component (variance/eigenvalue bound
-    #    oracle, VERDICT r11 #2) and the new dedup_simhash_block_quality
-    #    (pigeonhole-recall + precision-floor oracle, VERDICT r11 #6)
-    #    joined the oracled pool — queue the simhash quality row for the
-    #    first slot freed after r13 so the bit-block LSH family gets a
-    #    driver-verified quality floor like MinHash's.)
-    #   r14 outcome: eval_auc, eval_calibration_bins, cdc_merge_upserts,
-    #    cdc_scd2_history — all four driver-green in CORRECTNESS_r14;
-    #    rotated out to make room for the r15 queue below (VERDICT r14 #2).
-    #   r15 outcome: multimodal_media_features, multimodal_phash_dedup,
-    #    graph_bfs_hops, eval_ndcg_at_k — all four driver-green
-    #    (hash_match) in CORRECTNESS_r15; rotated out per VERDICT r15 #1.
-    #   r16 outcome: eval_confusion_centroid, join_interval_overlap,
-    #    orders_abc_pareto, eval_pr_auc — all four driver-green
-    #    (hash_match) in CORRECTNESS_r16; rotated out per VERDICT r16 #9
-    #    for the r17 queue planned above. Driver-verified coverage
-    #    122/237 -> 126/237.
-    # r17 active window (the queue planned at the r17 line above): the
-    # IVF quality/cost curve, the memorization-risk audit, the curriculum
-    # schedule manifest, and the date-math percentile rollup — the first
-    # two also carry this optimization round's sim-family and
-    # histogram-percentile rewrites, so the driver hash-verifies them in
-    # the same window the rewrites land.
+    # slots 47-50: rotated each round so extended queries accumulate
+    # driver-verified rows; the banked history is derived from
+    # CORRECTNESS_r*.json by tools/driver_ledger.py.
     "sim_ivf_nprobe_sweep",
     "corpus_ngram_overlap",
     "pipeline_curriculum_order",

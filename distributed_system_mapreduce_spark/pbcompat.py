@@ -135,44 +135,22 @@ def _ensure_protobuf_impl() -> tuple[bool, str]:
             link = os.path.join(gdir, "protobuf")
             # Recreate the link unless it already points exactly at src —
             # a stale link to a moved/removed SDK must never be reused.
-            # The repair is ATOMIC (temp-name symlink + os.replace) so two
-            # same-user processes racing on the shared shim dir can't
-            # observe a half-repaired state or memoize a spurious failure
-            # from each other's unlink/symlink interleaving.
-            if os.path.lexists(link):
+            # Temp-name symlink + os.replace is atomic, so a same-user
+            # process racing on the shared shim dir sees either the old
+            # link or the repaired one, and whoever replaces last leaves
+            # a link to src either way.
+            try:
+                current = os.readlink(link)
+            except OSError:
+                current = None
+            if current != src:
+                tmp = link + f".tmp{os.getpid()}"
                 try:
-                    current = os.readlink(link)
-                except OSError:
-                    current = None
-                if current != src:
-                    tmp = link + f".tmp{os.getpid()}"
-                    try:
-                        os.symlink(src, tmp)
-                        os.replace(tmp, link)
-                    finally:
-                        if os.path.lexists(tmp):
-                            os.unlink(tmp)
-            else:
-                try:
-                    os.symlink(src, link)
-                except FileExistsError:
-                    # concurrent creator won — but its target may be a
-                    # different vendored dir, so re-run the
-                    # readlink-and-repair branch instead of trusting it
-                    # (ADVICE r12: _import_ok alone can pass against a
-                    # stale importable target and memoize success)
-                    try:
-                        current = os.readlink(link)
-                    except OSError:
-                        current = None
-                    if current != src:
-                        tmp = link + f".tmp{os.getpid()}"
-                        try:
-                            os.symlink(src, tmp)
-                            os.replace(tmp, link)
-                        finally:
-                            if os.path.lexists(tmp):
-                                os.unlink(tmp)
+                    os.symlink(src, tmp)
+                    os.replace(tmp, link)
+                finally:
+                    if os.path.lexists(tmp):
+                        os.unlink(tmp)
             if shim not in sys.path:
                 sys.path.insert(0, shim)
             # JVM-spawned Python workers resolve imports from PYTHONPATH —

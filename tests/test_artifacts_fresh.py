@@ -1,17 +1,15 @@
-"""Committed-artifact freshness gate (VERDICT r8 #1c).
+"""Committed parity-artifact gates, applied to both artifacts of the one
+parity runner (tools/parity_bigsf.py):
 
-``CORRECTNESS_LOCAL.json`` is the committed record that the FULL registry
-(not just the driver's 50-query window) holds oracle parity. Rounds 5-8
-each shipped a stale copy — generated several commits before the snapshot,
-so its query list and provenance lagged the registry it claimed to cover.
-This test turns that process failure into a red test: the artifact must
-have been regenerated from the EXACT package sources being tested.
+- ``CORRECTNESS_LOCAL.json`` (sf0.01, ``python correctness_full.py``);
+- ``PARITY_SF01.json`` (sf0.1, ``python tools/parity_bigsf.py``).
 
-The check is pure file I/O (no Spark): compare the artifact's recorded
-``provenance.source_sha256`` against a fresh hash of the current package
-tree, and its ``queries_n`` against the live registry size. Regenerate
-with ``python correctness_full.py`` (~minutes) as the final commit of any
-round that touched the package.
+Each artifact must have been generated from the exact package sources being
+tested (per-file sha256 stamp), by a clean tree (so ``git_head`` names the
+sources), at its own scale factor, over every registered query, with no
+failed query. ``oracle_timeout`` is accepted only at sf0.1, where the
+recursive-CTE oracles are budgeted. The gates are pure file I/O (no Spark);
+``--changed-only`` re-runs only the queries a source edit can affect.
 """
 
 from __future__ import annotations
@@ -23,135 +21,153 @@ import sys
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ARTIFACT = os.path.join(ROOT, "CORRECTNESS_LOCAL.json")
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+import parity_bigsf  # noqa: E402
+
+#: artifact -> (regenerating command, sf_dir basename, accepted ``err`` values)
+ARTIFACTS = {
+    "CORRECTNESS_LOCAL.json": (
+        "python correctness_full.py", "sf0.01", (None, "no_oracle"),
+    ),
+    "PARITY_SF01.json": (
+        "python tools/parity_bigsf.py", "sf0.1",
+        (None, "no_oracle", "oracle_timeout"),
+    ),
+}
 
 
-def _load():
-    assert os.path.exists(ARTIFACT), (
-        "CORRECTNESS_LOCAL.json missing — run `python correctness_full.py`"
+@pytest.fixture(scope="module")
+def artifacts() -> dict[str, dict]:
+    loaded = {}
+    for name, (cmd, _sf, _ok) in ARTIFACTS.items():
+        path = os.path.join(ROOT, name)
+        assert os.path.exists(path), f"{name} missing — run `{cmd}`"
+        with open(path) as fh:
+            loaded[name] = json.load(fh)
+    return loaded
+
+
+def _report(problems: dict[str, object]) -> str:
+    return "\n".join(
+        f"{name}: {problem} — rerun `{ARTIFACTS[name][0]} --changed-only` "
+        "after the last source commit and commit the refreshed artifact"
+        for name, problem in problems.items()
     )
-    with open(ARTIFACT) as fh:
-        return json.load(fh)
 
 
-def test_artifact_matches_current_sources():
-    """The artifact's provenance hash must equal a hash of the sources as
-    they exist NOW — any package edit without regeneration is a failure."""
-    sys.path.insert(0, ROOT)
-    try:
-        from correctness_full import _provenance
-    finally:
-        sys.path.remove(ROOT)
-    art = _load()
-    prov = art.get("provenance") or {}
-    current = _provenance()["source_sha256"]
-    assert prov.get("source_sha256") == current, (
-        "CORRECTNESS_LOCAL.json is stale: provenance.source_sha256 "
-        f"{str(prov.get('source_sha256'))[:12]}… does not match the current "
-        f"package hash {current[:12]}… — rerun `python correctness_full.py` "
-        "and commit the refreshed artifact."
-    )
+def test_artifact_matches_current_sources(artifacts):
+    current = parity_bigsf._file_hashes()
+    stale = {}
+    for name, art in artifacts.items():
+        stamped = (art.get("provenance") or {}).get("source_files") or {}
+        changed = sorted(
+            f for f in set(stamped) | set(current)
+            if stamped.get(f) != current.get(f)
+        )
+        if changed:
+            stale[name] = f"stale for {changed}"
+    assert not stale, _report(stale)
 
 
-def test_artifact_covers_full_registry():
+def test_artifact_provenance_head_is_clean(artifacts):
+    dirty = {}
+    for name, art in artifacts.items():
+        flag = (art.get("provenance") or {}).get("source_dirty")
+        if flag is not False:
+            dirty[name] = f"provenance.source_dirty={flag!r}"
+    assert not dirty, _report(dirty)
+
+
+def test_artifact_records_its_scale_factor(artifacts):
+    wrong = {}
+    for name, art in artifacts.items():
+        sf_dir = (art.get("summary") or {}).get("sf_dir")
+        if os.path.basename(str(sf_dir)) != ARTIFACTS[name][1]:
+            wrong[name] = (
+                f"summary.sf_dir={sf_dir!r}, expected a {ARTIFACTS[name][1]} dir"
+            )
+    assert not wrong, _report(wrong)
+
+
+def test_artifact_covers_full_registry(artifacts):
     from distributed_system_mapreduce_spark.registry import QUERIES
 
-    art = _load()
-    n = art.get("queries_n", len(art.get("results", {})))
-    assert n == len(QUERIES), (
-        f"artifact covers {n} queries but the registry holds {len(QUERIES)}"
+    uncovered = {}
+    for name, art in artifacts.items():
+        results = set(art.get("results") or {})
+        if results != set(QUERIES):
+            uncovered[name] = (
+                f"missing {sorted(set(QUERIES) - results)}, "
+                f"unregistered {sorted(results - set(QUERIES))}"
+            )
+    assert not uncovered, _report(uncovered)
+
+
+def test_artifact_reports_zero_failures(artifacts):
+    failed = {}
+    for name, art in artifacts.items():
+        accepted = ARTIFACTS[name][2]
+        bad = {
+            q: rec.get("err") for q, rec in (art.get("results") or {}).items()
+            if rec.get("err") not in accepted
+        }
+        n_failed = (art.get("summary") or {}).get("failed")
+        if n_failed != 0 or bad:
+            failed[name] = f"summary.failed={n_failed!r}, errors {bad}"
+    assert not failed, _report(failed)
+
+
+def _fake_query(module: str):
+    def query(spark, sf_dir):
+        return None
+
+    query.__module__ = module
+    return query
+
+
+def test_changed_only_selects_queries_of_changed_modules(monkeypatch):
+    """``--changed-only`` re-runs exactly the queries a source edit can
+    affect: those defined in a changed module plus never-seen ones, and
+    everything when the artifact has no stamp or a changed file defines no
+    query (a shared helper's effect radius is unknown)."""
+    import distributed_system_mapreduce_spark  # noqa: F401  (loads modules)
+
+    pkg = "distributed_system_mapreduce_spark"
+    graph, rel, helper = (
+        f"{pkg}/operators/graph.py", f"{pkg}/operators/relational.py",
+        f"{pkg}/exactmath.py",
     )
-
-
-def test_artifact_reports_zero_failures():
-    art = _load()
-    assert art.get("failed_n") == 0, art.get("failed_n")
-    bad = [
-        k for k, v in art.get("results", {}).items()
-        # "no_oracle" marks the declared rows-only queries, not a failure
-        if isinstance(v, dict) and v.get("err") not in (None, "no_oracle")
-    ]
-    assert not bad, bad
-
-
-PARITY_ARTIFACT = os.path.join(ROOT, "PARITY_SF01.json")
-
-
-def _load_parity():
-    assert os.path.exists(PARITY_ARTIFACT), (
-        "PARITY_SF01.json missing — run `python tools/parity_bigsf.py`"
-    )
-    with open(PARITY_ARTIFACT) as fh:
-        return json.load(fh)
-
-
-def test_parity_sf01_matches_current_sources():
-    """VERDICT r15 #4: the sf0.1 parity sweep caught the only two real
-    correctness bugs found in three rounds, so its artifact is enforced
-    fresh exactly like CORRECTNESS_LOCAL.json — per-file, so the failure
-    names WHICH module changed and the fix is a targeted
-    `python tools/parity_bigsf.py --changed-only --merge`, not a full
-    re-sweep."""
-    sys.path.insert(0, os.path.join(ROOT, "tools"))
-    try:
-        from parity_bigsf import _file_hashes
-    finally:
-        sys.path.remove(os.path.join(ROOT, "tools"))
-    art = _load_parity()
-    stamped = (art.get("provenance") or {}).get("source_files")
-    assert stamped, (
-        "PARITY_SF01.json predates per-file provenance stamping — rerun "
-        "`python tools/parity_bigsf.py` to regenerate with a stamp."
-    )
-    current = _file_hashes()
-    changed = sorted(
-        f for f in set(stamped) | set(current)
-        if stamped.get(f) != current.get(f)
-    )
-    assert not changed, (
-        f"PARITY_SF01.json is stale for {changed} — rerun "
-        "`python tools/parity_bigsf.py --changed-only --merge` and commit "
-        "the refreshed artifact."
-    )
-
-
-def test_parity_sf01_covers_full_registry_with_zero_failures():
-    from distributed_system_mapreduce_spark.registry import QUERIES
-
-    art = _load_parity()
-    results = art.get("results") or {}
-    missing = sorted(set(QUERIES) - set(results))
-    assert not missing, f"PARITY_SF01.json missing queries: {missing}"
-    summary = art.get("summary") or {}
-    assert summary.get("failed") == 0, summary
-    bad = {
-        k: v.get("err") for k, v in results.items()
-        if isinstance(v, dict)
-        and v.get("err") not in (None, "no_oracle", "oracle_timeout")
+    queries = {
+        "g1": _fake_query(f"{pkg}.operators.graph"),
+        "g2": _fake_query(f"{pkg}.operators.graph"),
+        "r1": _fake_query(f"{pkg}.operators.relational"),
+        "r2": _fake_query(f"{pkg}.operators.relational"),
     }
-    assert not bad, bad
+    stamp = {graph: "g", rel: "r", helper: "h"}
+
+    def select(seen: list[str], current: dict) -> list[str] | None:
+        monkeypatch.setattr(parity_bigsf, "_file_hashes", lambda: current)
+        artifact = {"provenance": {"source_files": stamp},
+                    "results": {q: {} for q in seen}}
+        return parity_bigsf._changed_queries(artifact, queries)
+
+    assert parity_bigsf._changed_queries({"results": {}}, queries) is None
+    assert select(["g1", "g2", "r1"], dict(stamp)) == ["r2"]
+    assert select(list(queries), {**stamp, graph: "g'"}) == ["g1", "g2"]
+    assert select(list(queries), {**stamp, helper: "h'"}) is None
 
 
-def test_parity_sf01_provenance_head_is_clean():
-    art = _load_parity()
-    prov = art.get("provenance") or {}
-    assert prov.get("source_dirty") is False, (
-        f"provenance.source_dirty={prov.get('source_dirty')!r} — rerun "
-        "`python tools/parity_bigsf.py --changed-only --merge` AFTER the "
-        "last source-touching commit."
-    )
-
-
-def test_artifact_provenance_head_is_clean():
-    """VERDICT r13 #5: the committed artifact's ledger must be generated
-    from a CLEAN tree, so provenance.git_head fully describes the hashed
-    sources (r13 shipped an artifact whose git_head lagged the last source
-    commit because the sweep ran pre-commit on a dirty tree). A missing
-    source_dirty key means the artifact predates the field — regenerate."""
-    art = _load()
-    prov = art.get("provenance") or {}
-    assert prov.get("source_dirty") is False, (
-        f"provenance.source_dirty={prov.get('source_dirty')!r} — rerun "
-        "`python correctness_full.py` AFTER the last source-touching "
-        "commit so git_head names the tree the sweep actually ran on."
-    )
+def test_runner_refuses_to_clobber_or_mix_artifacts(tmp_path):
+    """``--only`` without ``--merge`` must not replace a committed artifact
+    with a subset, and a merge must not fold rows of one scale factor into
+    an artifact recorded at another."""
+    out = tmp_path / "artifact.json"
+    body = json.dumps({"summary": {"sf_dir": "/data/sf0.01"}, "results": {}})
+    out.write_text(body)
+    for argv in (
+        ["--only", "word_count", "--out", str(out)],
+        ["--changed-only", "--sf-dir", "/data/sf0.1", "--out", str(out)],
+    ):
+        with pytest.raises(SystemExit, match="refusing"):
+            parity_bigsf.main(argv)
+        assert out.read_text() == body
