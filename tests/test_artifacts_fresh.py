@@ -49,8 +49,9 @@ def artifacts() -> dict[str, dict]:
 
 def _report(problems: dict[str, object]) -> str:
     return "\n".join(
-        f"{name}: {problem} — rerun `{ARTIFACTS[name][0]} --changed-only` "
-        "after the last source commit and commit the refreshed artifact"
+        f"{name}: {problem} — rerun `{ARTIFACTS[name][0]}` (with "
+        "--changed-only when only sources changed) after the last source "
+        "commit and commit the refreshed artifact"
         for name, problem in problems.items()
     )
 
@@ -84,7 +85,7 @@ def test_artifact_records_its_scale_factor(artifacts):
         sf_dir = (art.get("summary") or {}).get("sf_dir")
         if os.path.basename(str(sf_dir)) != ARTIFACTS[name][1]:
             wrong[name] = (
-                f"summary.sf_dir={sf_dir!r}, expected a {ARTIFACTS[name][1]} dir"
+                f"summary.sf_dir={sf_dir!r}, expected .../{ARTIFACTS[name][1]}"
             )
     assert not wrong, _report(wrong)
 

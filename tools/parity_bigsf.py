@@ -203,7 +203,9 @@ def _oracle_frame(sql: str, sf_dir: str, out_path: str, budget: float):
     status, payload = outcome
     if status == "err":
         return None, f"oracle: {payload}"
-    return pd.read_parquet(payload), None
+    odf = pd.read_parquet(payload)
+    os.unlink(payload)
+    return odf, None
 
 
 def _run(names: list[str], sf_dir: str, budget: float) -> dict[str, dict]:
