@@ -61,15 +61,15 @@ SLOW_ORACLE_BUDGETS: dict[str, float] = {
     "graph_common_neighbors": 900.0,  # exact triangle-per-edge enumeration
 }
 
-#: Sources whose contents the artifacts stamp: the driver entry and the package.
-SOURCES = ("__spark_entry__.py", "distributed_system_mapreduce_spark")
+#: Sources the artifacts stamp: the driver entry and the package.
+ENTRY, PACKAGE = "__spark_entry__.py", "distributed_system_mapreduce_spark"
 
 
 def _file_hashes() -> dict[str, str]:
     """Per-file sha256 of every package source and the driver entry, so the
     freshness test can name which file changed."""
-    paths = [os.path.join(REPO_ROOT, SOURCES[0])]
-    for dirpath, _dirs, files in sorted(os.walk(os.path.join(REPO_ROOT, SOURCES[1]))):
+    paths = [os.path.join(REPO_ROOT, ENTRY)]
+    for dirpath, _dirs, files in sorted(os.walk(os.path.join(REPO_ROOT, PACKAGE))):
         paths.extend(
             os.path.join(dirpath, f) for f in sorted(files) if f.endswith(".py")
         )
@@ -93,7 +93,7 @@ def _provenance() -> dict:
     """What tree the artifact was generated from. ``source_dirty`` says
     whether ``git_head`` fully describes the hashed sources: a sweep run
     before its source commit lands records the previous head."""
-    status = _git("status", "--porcelain", "--", *SOURCES)
+    status = _git("status", "--porcelain", "--", ENTRY, PACKAGE)
     return {
         "git_head": _git("rev-parse", "HEAD"),
         "source_dirty": None if status is None else bool(status),
