@@ -47,8 +47,14 @@ def artifacts() -> dict[str, dict]:
     return loaded
 
 
-def _report(problems: dict[str, object]) -> str:
-    return "\n".join(
+def _check(gate, artifacts: dict[str, dict], names) -> None:
+    """Apply one gate to the named artifacts; ``gate(name, art)`` returns a
+    problem string or None."""
+    problems = {
+        name: problem for name in names
+        if (problem := gate(name, artifacts[name])) is not None
+    }
+    assert not problems, "\n".join(
         f"{name}: {problem} — rerun `{ARTIFACTS[name][0]}` (with "
         "--changed-only when only sources changed) after the last source "
         "commit and commit the refreshed artifact"
@@ -56,66 +62,86 @@ def _report(problems: dict[str, object]) -> str:
     )
 
 
-def test_artifact_matches_current_sources(artifacts):
+def _stale(name: str, art: dict) -> str | None:
+    stamped = (art.get("provenance") or {}).get("source_files") or {}
     current = parity_bigsf._file_hashes()
-    stale = {}
-    for name, art in artifacts.items():
-        stamped = (art.get("provenance") or {}).get("source_files") or {}
-        changed = sorted(
-            f for f in set(stamped) | set(current)
-            if stamped.get(f) != current.get(f)
-        )
-        if changed:
-            stale[name] = f"stale for {changed}"
-    assert not stale, _report(stale)
+    changed = sorted(
+        f for f in set(stamped) | set(current)
+        if stamped.get(f) != current.get(f)
+    )
+    return f"stale for {changed}" if changed else None
+
+
+def _dirty(name: str, art: dict) -> str | None:
+    flag = (art.get("provenance") or {}).get("source_dirty")
+    return None if flag is False else f"provenance.source_dirty={flag!r}"
+
+
+def _wrong_sf(name: str, art: dict) -> str | None:
+    sf_dir = (art.get("summary") or {}).get("sf_dir")
+    if os.path.basename(str(sf_dir)) == ARTIFACTS[name][1]:
+        return None
+    return f"summary.sf_dir={sf_dir!r}, expected .../{ARTIFACTS[name][1]}"
+
+
+def _uncovered(name: str, art: dict) -> str | None:
+    from distributed_system_mapreduce_spark.registry import QUERIES
+
+    results = set(art.get("results") or {})
+    if results == set(QUERIES):
+        return None
+    return (
+        f"missing {sorted(set(QUERIES) - results)}, "
+        f"unregistered {sorted(results - set(QUERIES))}"
+    )
+
+
+def _failures(name: str, art: dict) -> str | None:
+    accepted = ARTIFACTS[name][2]
+    bad = {
+        q: rec.get("err") for q, rec in (art.get("results") or {}).items()
+        if rec.get("err") not in accepted
+    }
+    n_failed = (art.get("summary") or {}).get("failed")
+    if n_failed == 0 and not bad:
+        return None
+    return f"summary.failed={n_failed!r}, errors {bad}"
+
+
+LOCAL, SF01 = "CORRECTNESS_LOCAL.json", "PARITY_SF01.json"
+
+
+def test_artifact_matches_current_sources(artifacts):
+    _check(_stale, artifacts, [LOCAL])
+
+
+def test_parity_sf01_matches_current_sources(artifacts):
+    _check(_stale, artifacts, [SF01])
 
 
 def test_artifact_provenance_head_is_clean(artifacts):
-    dirty = {}
-    for name, art in artifacts.items():
-        flag = (art.get("provenance") or {}).get("source_dirty")
-        if flag is not False:
-            dirty[name] = f"provenance.source_dirty={flag!r}"
-    assert not dirty, _report(dirty)
+    _check(_dirty, artifacts, [LOCAL])
+
+
+def test_parity_sf01_provenance_head_is_clean(artifacts):
+    _check(_dirty, artifacts, [SF01])
 
 
 def test_artifact_records_its_scale_factor(artifacts):
-    wrong = {}
-    for name, art in artifacts.items():
-        sf_dir = (art.get("summary") or {}).get("sf_dir")
-        if os.path.basename(str(sf_dir)) != ARTIFACTS[name][1]:
-            wrong[name] = (
-                f"summary.sf_dir={sf_dir!r}, expected .../{ARTIFACTS[name][1]}"
-            )
-    assert not wrong, _report(wrong)
+    _check(_wrong_sf, artifacts, ARTIFACTS)
 
 
 def test_artifact_covers_full_registry(artifacts):
-    from distributed_system_mapreduce_spark.registry import QUERIES
-
-    uncovered = {}
-    for name, art in artifacts.items():
-        results = set(art.get("results") or {})
-        if results != set(QUERIES):
-            uncovered[name] = (
-                f"missing {sorted(set(QUERIES) - results)}, "
-                f"unregistered {sorted(results - set(QUERIES))}"
-            )
-    assert not uncovered, _report(uncovered)
+    _check(_uncovered, artifacts, [LOCAL])
 
 
 def test_artifact_reports_zero_failures(artifacts):
-    failed = {}
-    for name, art in artifacts.items():
-        accepted = ARTIFACTS[name][2]
-        bad = {
-            q: rec.get("err") for q, rec in (art.get("results") or {}).items()
-            if rec.get("err") not in accepted
-        }
-        n_failed = (art.get("summary") or {}).get("failed")
-        if n_failed != 0 or bad:
-            failed[name] = f"summary.failed={n_failed!r}, errors {bad}"
-    assert not failed, _report(failed)
+    _check(_failures, artifacts, [LOCAL])
+
+
+def test_parity_sf01_covers_full_registry_with_zero_failures(artifacts):
+    _check(_uncovered, artifacts, [SF01])
+    _check(_failures, artifacts, [SF01])
 
 
 def _fake_query(module: str):
