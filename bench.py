@@ -3,15 +3,18 @@
 
 Runs every registered query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints TWO JSON lines:
-first the full per-query detail ({"detail": ..., "queries": {name: sec}}),
-then — LAST, so a front-truncating tail capture always keeps it intact
-(BENCH_r02.json recorded parsed:null because the single giant line lost its
-head) — one compact summary line {"metric", "value", "unit", "sf", "n",
-"stat", "baseline_suite_value", "queries_n"}. The per-query map is also
-written to BENCH_DETAIL.json next to this script.
+first the full per-query detail ({"detail": ..., "queries": {name: sec},
+"first_sample", "layers"}), then — LAST, so a front-truncating tail capture
+always keeps it intact (BENCH_r02.json recorded parsed:null because the
+single giant line lost its head) — one compact summary line {"metric",
+"value", "unit", "sf", "n", "stat", "baseline_suite_value", "queries_n",
+"cold_total", "build_total", "plan_total", ...}. The detail is also written
+to BENCH_DETAIL.json next to this script.
 
 Each query is forced through the noop sink (full distributed materialization,
-no driver collect). Only the JSON lines go to stdout; Spark logs to stderr.
+no driver collect) by :func:`sweep`, the one timing loop over registered
+queries; tools/scale_probe.py times its replica scales through it too. Only
+the JSON lines go to stdout; Spark logs to stderr.
 """
 
 from __future__ import annotations
@@ -51,6 +54,40 @@ BASELINE_SUITE: frozenset[str] = frozenset({
 })
 
 
+def sweep(spark, sf_dir: str, names: list[str], n_runs: int) -> dict:
+    """Time each query in ``names`` over ``n_runs`` interleaved passes (each
+    pass runs every query once, in the given order); returns, per query, one
+    ``(build_s, plan_s, exec_s)`` per pass.
+
+    A sample is the builder call (``build_s``) plus the noop-sink write
+    (``exec_s``, which includes the write's own planning), so ``build_s +
+    exec_s`` is the sample. ``plan_s`` is timed after the write, outside the
+    sample: Catalyst analysis, optimization and physical planning of the
+    built frame (``executedPlan``; under AQE no stage runs).
+
+    The host is shared and a single sample can read 2-3x slow under
+    transient load (BASELINE.md's own warning); interleaving means a load
+    burst degrades at most one sample per query instead of all samples of
+    whichever query it lands on. Each sample rebuilds the query plan (fresh
+    lineage, no shuffle-stage skipping), so every sample pays every
+    exchange; only explicitly persisted intermediates and session memos
+    carry across samples, which is the steady state of a resident engine.
+    """
+    from distributed_system_mapreduce_spark.registry import QUERIES
+
+    samples: dict[str, list[tuple[float, float, float]]] = {n: [] for n in names}
+    for _ in range(n_runs):
+        for name in names:
+            t0 = time.perf_counter()
+            df = QUERIES[name](spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            df._jdf.queryExecution().executedPlan()
+            samples[name].append((t1 - t0, time.perf_counter() - t2, t2 - t1))
+    return samples
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -83,45 +120,32 @@ def main() -> None:
 
     # warm the JVM/codegen path once so per-query numbers measure the
     # queries, not first-touch class loading
-    warm = QUERIES.get("scan_lineitem") or next(iter(QUERIES.values()))
-    warm(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    sweep(spark, sf_dir, ["scan_lineitem" if "scan_lineitem" in QUERIES
+                          else next(iter(QUERIES))], 1)
 
-    # best-of-3 per query, passes INTERLEAVED (3 full-suite sweeps, min per
-    # query). The host is shared and a single sample can read 2-3x slow
-    # under transient load (BASELINE.md's own warning); the min is the
-    # honest cost of the plan, and it is the SAME statistic BASELINE.md's
-    # 37.5 s was measured with (best-of-2), so cross-round comparisons are
-    # apples-to-apples. Interleaving means a load burst degrades at most one
-    # sample per query instead of all samples of whichever query it lands
-    # on. Each sample rebuilds the query plan (fresh lineage — no
-    # shuffle-stage skipping), so the min still pays every exchange; only
-    # explicitly persist()'d intermediates carry across samples, which is
-    # the steady state of a resident engine and the regime every round
-    # measures.
+    # best-of-n per query: the min is the honest cost of the plan, and the
+    # SAME statistic BASELINE.md's 37.5 s was measured with (best-of-2), so
+    # cross-round comparisons are apples-to-apples.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    samples: dict[str, list[float]] = {name: [] for name in QUERIES}
-    for _ in range(n_runs):
-        for name in sorted(QUERIES):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-    # first-sweep seconds per query, kept alongside the min and used in no
-    # total: for memo/tracked-cache-backed queries the min is a warm
-    # replay. The first sample is cold only for the first query (in sorted
-    # order) that builds each shared memo or cache; later consumers of the
-    # same entry already read it warm in their first sample.
-    first_sample = {
-        name: round(samples[name][0], 3) for name in sorted(QUERIES)
+    names = sorted(QUERIES)
+    samples = sweep(spark, sf_dir, names, n_runs)
+    walls = {name: [b + e for b, _p, e in samples[name]] for name in names}
+    # first-sweep seconds per query, kept alongside the min: for
+    # memo/tracked-cache-backed queries the min is a warm replay. The first
+    # sample is cold only for the first query (in sorted order) that builds
+    # each shared memo or cache; later consumers of the same entry already
+    # read it warm. cold_total, their sum, is what one fresh process pays
+    # for the whole sorted pass, not the sum of each query's own cold cost.
+    first_sample = {name: round(walls[name][0], 3) for name in names}
+    best = {name: min(walls[name]) for name in names}
+    timings = {name: round(best[name], 3) for name in names}
+    # per-layer min over the samples (each layer's min may come from a
+    # different pass, so the three need not sum to the query's min)
+    layers = {
+        name: {k: round(min(v), 3)
+               for k, v in zip(("build_s", "plan_s", "exec_s"), zip(*samples[name]))}
+        for name in names
     }
-    timings: dict[str, float] = {}
-    total = 0.0
-    baseline_suite_total = 0.0
-    for name in sorted(QUERIES):
-        best = min(samples[name])
-        timings[name] = round(best, 3)
-        total += best
-        if name in BASELINE_SUITE:
-            baseline_suite_total += best
 
     # cached-footprint accounting: distinct persisted RDDs stay a small
     # constant across the whole loop (CacheManager dedupes identical plans;
@@ -142,14 +166,18 @@ def main() -> None:
 
     summary = {
         "metric": "t2_suite_seconds",
-        "value": round(total, 3),
+        "value": round(sum(best.values()), 3),
         "unit": "sec",
         "sf": sf,
         "n": n_runs,
         "stat": "min",
-        "baseline_suite_value": round(baseline_suite_total, 3),
+        "baseline_suite_value": round(
+            sum(best[n] for n in names if n in BASELINE_SUITE), 3),
         "baseline_suite_n": sum(1 for q in BASELINE_SUITE if q in QUERIES),
         "queries_n": len(QUERIES),
+        "cold_total": round(sum(walls[name][0] for name in names), 3),
+        "build_total": round(sum(layers[n]["build_s"] for n in names), 3),
+        "plan_total": round(sum(layers[n]["plan_s"] for n in names), 3),
         "cached_plans": cached_plans,
         "caches_released": caches_released,
         "cached_after_release": cached_after_release,
@@ -257,7 +285,7 @@ def main() -> None:
         )
 
     detail = {"detail": "per_query_min_seconds", "queries": timings,
-              "first_sample": first_sample, **summary}
+              "first_sample": first_sample, "layers": layers, **summary}
     if subset is None and common:
         detail["per_query_delta"] = per_query_delta
     if subset is None:

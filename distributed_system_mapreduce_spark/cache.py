@@ -19,7 +19,9 @@ three kinds:
 
 It also owns the two things every iterative driver loop shares: the
 checkpointed fixpoint loop (``fixpoint``) and its shuffle width
-(``loop_parts``). This is the only module that calls ``localCheckpoint``.
+(``loop_parts``), and the width of compute-bound stages (``task_slots``,
+``spread``). This is the only module that calls ``localCheckpoint`` or
+reads a partition count from the session.
 
 ``clear_tracked_caches`` releases all three. Long-lived sessions (bench
 loops, notebooks) call it between logical phases; short-lived jobs never
@@ -220,6 +222,24 @@ def loop_parts(spark, n_rows: int) -> int:
     """
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(default_parts, n_rows // 200_000 + 1))
+
+
+def task_slots(spark) -> int:
+    """The session's ``defaultParallelism``: one partition per task slot,
+    the width at which a compute-bound stage keeps every core busy."""
+    return spark.sparkContext.defaultParallelism
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition the STREAMED side of a compute-bound join to
+    :func:`task_slots` partitions (round-robin).
+
+    Small parquet inputs arrive as one partition (one row group), which
+    serializes BroadcastNestedLoopJoin onto a single core. At 100 TB inputs
+    are already wide and this round-robin exchange is cheap relative to the
+    O(n·m) dot-product work it parallelizes.
+    """
+    return df.repartition(task_slots(df.sparkSession))
 
 
 def fixpoint(

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import session_memo, track
+from ..cache import session_memo, spread, track
 from ..exactmath import round_div, sql_round_div
 from ..plans.topk import salted_topk
 from ..registry import register
@@ -34,18 +34,6 @@ from ..sources.io import load
 #: refuse brute-force all-pairs above this many vectors — callers must use
 #: the LSH-bucketed path instead (100 TB mandate, SURVEY.md §7.3.8).
 ALL_PAIRS_LIMIT = 100_000
-
-
-def spread(df: DataFrame) -> DataFrame:
-    """Repartition the STREAMED side of a compute-bound join to full
-    parallelism.
-
-    Small parquet inputs arrive as one partition (one row group), which
-    serializes BroadcastNestedLoopJoin onto a single core. At 100 TB inputs
-    are already wide and this round-robin exchange is cheap relative to the
-    O(n·m) dot-product work it parallelizes.
-    """
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import session_memo, track
+from ..cache import session_memo, spread, track
 from ..plans.scan import chunked_running_sum
 from ..plans.topk import salted_topk
 from ..exactmath import round_div, sql_round_div
@@ -1826,7 +1826,6 @@ def corpus_dup_threshold_curve(
     the cut is engine-exact.
     """
     from .dedup import jaccard_pairs
-    from ..functions.vectors import spread
 
     docs = load(spark, sf_dir, "documents")
     pairs = jaccard_pairs(spread(docs))

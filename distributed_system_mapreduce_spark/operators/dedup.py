@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import fixpoint, loop_parts, session_memo, track
+from ..cache import fixpoint, loop_parts, session_memo, spread, task_slots, track
 from ..exactmath import round_div_long, sql_round_div
 from ..registry import register
 from ..sources.io import load
@@ -180,7 +180,6 @@ def jaccard_pairs(
     the difference between a skewed straggler and a balanced shuffle at
     corpus scale. The hot set is tiny by construction, so it broadcasts.
     """
-    from ..functions.vectors import spread
 
     # persisted: this subtree is read 4x inside one jaccard_pairs plan (the
     # hot-shingle groupBy, BOTH sides of the self-join, the per-doc sizes)
@@ -491,7 +490,6 @@ def corpus_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the returned lazy plans), so it cannot be unpersisted here; it is
     tracked in the cache registry for bulk release between session phases.
     """
-    from ..functions.vectors import spread
 
     return track(
         spread(load(spark, sf_dir, "documents")).transform(shingle_hashes)
@@ -852,7 +850,6 @@ def _simhash_vals(docs: DataFrame, bits: int) -> DataFrame:
     part, and callers read it several times (within-value agg + both sides
     of the block self-join). Caching makes the corpus scan happen once.
     """
-    from ..functions.vectors import spread
 
     return track(
         spread(docs)
@@ -967,7 +964,6 @@ def simhash_block_quality(
     aggregate so the whole audit is a single-action frame (the registered
     query unions both widths and collects once).
     """
-    from ..functions.vectors import spread
 
     vals = track(
         spread(docs)
@@ -1479,7 +1475,6 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale this is the cheapest member of the dedup family: the
     shuffle carries (hash, doc_id) pairs bounded by total token count.
     """
-    from ..functions.vectors import spread
 
     docs = load(spark, sf_dir, "documents")
     grams = (
@@ -1577,7 +1572,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle survive with a null match.
     """
     docs = load(spark, sf_dir, "documents")
-    from ..functions.vectors import spread
 
     is_new = (F.col("doc_id") % INCR_BATCH_MOD) == INCR_BATCH_SLOT
     sh0 = (
@@ -1690,7 +1684,7 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     and micro-batches get their parallelism from the source (ADVICE r7:
     keeps this builder batch-and-stream-safe like its siblings)."""
     if not docs.isStreaming:
-        par = docs.sparkSession.sparkContext.defaultParallelism
+        par = task_slots(docs.sparkSession)
         if docs.rdd.getNumPartitions() < par:
             docs = docs.repartition(par, "doc_id")
     hashed = docs.select(

@@ -35,7 +35,7 @@ from decimal import Decimal as PyDecimal
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import spread, track
 from ..plans.topk import salted_topk
 from ..exactmath import round_div, round_div_long, sql_round_div
 from ..registry import register
@@ -336,7 +336,7 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, and the survivor re-rank sees Q*buckets*k rows. Everything
     after the rank filter is Q-row-bounded.
     """
-    from ..functions.vectors import dot, spread
+    from ..functions.vectors import dot
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < NDCG_QUERIES).select(
@@ -440,7 +440,7 @@ def centroid_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     to every label centroid — the shared k-per-row scored grid behind
     eval_confusion_centroid / eval_f1_macro (argmin) and
     eval_topk_accuracy (rank membership)."""
-    from ..functions.vectors import EMBED_DIM, label_centroids, spread
+    from ..functions.vectors import EMBED_DIM, label_centroids
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -528,7 +528,7 @@ def eval_mrr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     set so misses surface as explicit zeros (a dropped row would silently
     inflate the average).
     """
-    from ..functions.vectors import dot, spread
+    from ..functions.vectors import dot
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < NDCG_QUERIES).select(

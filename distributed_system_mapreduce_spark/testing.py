@@ -47,16 +47,18 @@ def _canon_cell(v):
         if v != v:  # NaT
             return "<null>"
         return v.isoformat()
+    if isinstance(v, np.datetime64):  # cells of a frame with only timestamp columns
+        return _canon_cell(pd.Timestamp(v))
     return repr(v)
 
 
 def canonical_rows(df: pd.DataFrame) -> list[tuple]:
+    """Sorted rows of canonical cells, columns in name order. The frame is
+    interleaved once with ``to_numpy``, which yields the cells ``df.iloc[i][c]``
+    yields (an all-numeric frame upcasts its ints to float in both), without
+    building a row Series per row."""
     cols = sorted(df.columns)
-    rows = [
-        tuple(_canon_cell(df.iloc[i][c]) for c in cols) for i in range(len(df))
-    ]
-    rows.sort()
-    return rows
+    return sorted(tuple(_canon_cell(v) for v in row) for row in df[cols].to_numpy())
 
 
 def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str) -> list[str]:

@@ -13,10 +13,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 import distributed_system_mapreduce_spark  # noqa: F401
+from distributed_system_mapreduce_spark.cache import spread
 from distributed_system_mapreduce_spark.functions.vectors import (
     dot,
     lloyd_centroids,
-    spread,
 )
 from distributed_system_mapreduce_spark.sources.io import load
 

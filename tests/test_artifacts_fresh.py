@@ -198,3 +198,19 @@ def test_runner_refuses_to_clobber_or_mix_artifacts(tmp_path):
         with pytest.raises(SystemExit, match="refusing"):
             parity_bigsf.main(argv)
         assert out.read_text() == body
+
+
+def test_oracle_frame_returns_the_frame_or_the_oracle_error(tmp_path):
+    """No Spark: one budgeted DuckDB run in a worker process returns the
+    result frame for a good SQL and ``"oracle: ..."`` for a failing one."""
+    from conftest import SF_SMOKE
+
+    odf, err = parity_bigsf._oracle_frame(
+        "select 1 as x", SF_SMOKE, str(tmp_path / "ok.parquet"), 120.0,
+    )
+    assert err is None and odf["x"].tolist() == [1]
+    assert not (tmp_path / "ok.parquet").exists()
+    odf, err = parity_bigsf._oracle_frame(
+        "select * from no_such_table", SF_SMOKE, str(tmp_path / "bad.parquet"), 120.0,
+    )
+    assert odf is None and err.startswith("oracle: "), err

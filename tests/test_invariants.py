@@ -96,6 +96,41 @@ def test_determinism_double_run(name, spark):
     assert a == b
 
 
+def _canonical_rows_per_cell(df):
+    """Reference form of ``canonical_rows``: one ``df.iloc[i][c]`` per cell."""
+    from distributed_system_mapreduce_spark.testing import _canon_cell
+
+    cols = sorted(df.columns)
+    return sorted(
+        tuple(_canon_cell(df.iloc[i][c]) for c in cols) for i in range(len(df))
+    )
+
+
+def test_canonical_rows_matches_the_per_cell_reference():
+    """No Spark: the interleaved ``canonical_rows`` gives the rows the
+    per-cell reference gives, on a mixed frame (int, float, NaN, None, str,
+    list, timestamp and NaT cells), on an all-numeric frame (whose ints
+    upcast to float in both forms) and on a timestamp-only frame."""
+    import numpy as np
+    import pandas as pd
+
+    ts = pd.Timestamp("2024-01-02 03:04:05")
+    mixed = pd.DataFrame({
+        "i": [3, 1, 2],
+        "f": [1.5, np.nan, 0.25],
+        "o": pd.Series([None, "x", [1, 2]], dtype=object),
+        "s": ["c", "a", "b"],
+        "t": [ts, pd.NaT, ts],
+    })
+    numeric = pd.DataFrame({"i": [1, 2], "f": [0.5, np.nan]})
+    stamps = pd.DataFrame({"t": [ts, pd.NaT]})
+    for df in (mixed, numeric, stamps):
+        assert canonical_rows(df) == _canonical_rows_per_cell(df)
+    # columns in name order (f, i); the int column reads as floats
+    assert canonical_rows(numeric) == [("0.5", "1.0"), ("<nan>", "2.0")]
+    assert canonical_rows(stamps) == [("2024-01-02T03:04:05",), ("<null>",)]
+
+
 def test_survivors_count_equals_total_clusters(spark):
     """One survivor per near-dup cluster (incl. singleton clusters), so
     |dedup_survivors| == Σ n_clusters of the dedup_cluster histogram —
@@ -229,10 +264,11 @@ def test_session_memo_store_is_single():
 
 def test_checkpoints_and_loop_sizing_live_in_cache():
     """Source scan, no Spark: cache.py is the only module that calls
-    ``localCheckpoint``, and ``cache.loop_parts`` is the only reader of
+    ``localCheckpoint``, ``cache.loop_parts`` is the only reader of
     ``spark.sql.shuffle.partitions`` (session.py only sets it in the
-    builder config), so the checkpoint lifecycle and the loop-sizing rule
-    each live in one place."""
+    builder config), and ``cache.task_slots`` the only reader of
+    ``defaultParallelism``, so the checkpoint lifecycle and each
+    partition-sizing rule live in one place."""
     import ast
     import pathlib
 
@@ -240,7 +276,7 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
         "distributed_system_mapreduce_spark"
     )
     key = "spark.sql.shuffle.partitions"
-    checkpoint_calls, readers, setters = set(), [], set()
+    checkpoint_calls, readers, slot_readers, setters = set(), [], [], set()
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         tree = ast.parse(path.read_text())
@@ -249,12 +285,21 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
             for node in ast.walk(tree)
             for child in ast.iter_child_nodes(node)
         }
+
+        def scope(node):
+            up = parent[node]
+            while not isinstance(up, (ast.FunctionDef, ast.Module)):
+                up = parent[up]
+            return (rel, getattr(up, "name", None))
+
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Call)
                 and getattr(node.func, "attr", None) == "localCheckpoint"
             ):
                 checkpoint_calls.add(rel)
+            if isinstance(node, ast.Attribute) and node.attr == "defaultParallelism":
+                slot_readers.append(scope(node))
             if not (isinstance(node, ast.Constant) and node.value == key):
                 continue
             up = parent[node]
@@ -263,11 +308,10 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
             ):
                 setters.add(rel)
                 continue
-            while not isinstance(up, (ast.FunctionDef, ast.Module)):
-                up = parent[up]
-            readers.append((rel, getattr(up, "name", None)))
+            readers.append(scope(node))
     assert checkpoint_calls == {"cache.py"}
     assert readers == [("cache.py", "loop_parts")]
+    assert slot_readers == [("cache.py", "task_slots")]
     assert setters == {"session.py"}
 
 

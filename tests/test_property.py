@@ -217,7 +217,9 @@ def _brute_kcore(edges: list[tuple[int, int]], k: int) -> tuple[int, int]:
 def test_kcore_peel_matches_brute_force(spark, edges, k):
     """The distributed semi-join peel reaches the same fixpoint as a plain
     adjacency-dict peel on random graphs, for any k — the k-core is unique,
-    so (core nodes, core edges) must agree exactly."""
+    so (core nodes, core edges) must agree exactly. ``local_tail_max=0``
+    keeps every round distributed: these graphs all fit the default local
+    tail, which would peel them in driver memory."""
     from distributed_system_mapreduce_spark.cache import release_checkpoint
     from distributed_system_mapreduce_spark.operators.graph import (
         _symmetric,
@@ -228,7 +230,7 @@ def test_kcore_peel_matches_brute_force(spark, edges, k):
     if not canon:
         return
     pairs = spark.createDataFrame(canon, "src long, dst long")
-    core, n_dir_edges, _rounds = kcore_peel(_symmetric(pairs), k)
+    core, n_dir_edges, _rounds = kcore_peel(_symmetric(pairs), k, local_tail_max=0)
     got = (core.select("src").distinct().count(), n_dir_edges // 2)
     release_checkpoint(core)
     assert got == _brute_kcore(canon, k), (canon, k)

@@ -7,6 +7,8 @@ AFTER every change). Usage:
     python tools/explain_dump.py --out plans/r16 --tag before q1 q2 ...
     python tools/explain_dump.py --out plans/r16 --tag after  q1 q2 ...
 
+``--sf-dir`` defaults to /root/testdata/sf0.1, the bench scale.
+
 Writes ``<out>/<query>_<tag>.txt`` holding the formatted physical plan
 (initial AQE plan — plan SHAPE is what the round's claims are checked
 against; runtime re-optimization only merges/splits exchanges' partitions).
@@ -27,8 +29,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", required=True)
     ap.add_argument("--tag", required=True)
-    ap.add_argument("--sf-dir", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 

@@ -174,8 +174,13 @@ def _oracle_frame(sql: str, sf_dir: str, out_path: str, budget: float):
     else ``(None, err)`` with ``err`` ``"oracle_timeout"`` or ``"oracle: ..."``."""
     import pandas as pd
 
-    q: mp.Queue = mp.Queue()
-    proc = mp.Process(target=_oracle_worker, args=(sql, sf_dir, out_path, q))
+    # Never fork this process: it holds live Py4J gateway sockets, which a
+    # forked child would share. A forkserver is a fresh interpreter; it
+    # imports the DuckDB side once and forks each worker from itself.
+    ctx = mp.get_context("forkserver")
+    ctx.set_forkserver_preload(["distributed_system_mapreduce_spark.testing"])
+    q = ctx.Queue()
+    proc = ctx.Process(target=_oracle_worker, args=(sql, sf_dir, out_path, q))
     proc.start()
     # Poll the queue while the worker runs, never join-then-get: a worker
     # killed before it reports (OOM on a runaway CTE) would hang the get.

@@ -3,10 +3,11 @@
 actually scale, instead of arguing from plan shape alone.
 
 Builds deterministic xR replicas of the sf0.1 fixture into /tmp (the driver
-testdata stays read-only), runs the heaviest registered queries at each
-scale, and fits a per-query scaling exponent alpha from t ~ c * R^alpha by
-least squares over log-log points. alpha ~ 1 is linear (what a 100 TB
-deployment needs), alpha >> 1 names the next fix.
+testdata stays read-only), times the heaviest registered queries at each
+scale with bench.py's ``sweep`` (min over ``--runs`` interleaved passes of
+the builder call plus noop write), and fits a per-query scaling exponent
+alpha from t ~ c * R^alpha by least squares over log-log points. alpha ~ 1
+is linear (what a 100 TB deployment needs), alpha >> 1 names the next fix.
 
 Replication is key-offset, not duplication — each replica is DISJOINT new
 data with the same statistics, so dedup/graph/join cardinalities grow the
@@ -39,7 +40,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -192,8 +192,8 @@ def main() -> None:
     scales = [int(x) for x in args.replicas.split(",")]
     names = args.queries.split(",")
 
+    from bench import sweep
     from distributed_system_mapreduce_spark.cache import clear_tracked_caches
-    from distributed_system_mapreduce_spark.registry import QUERIES
     from distributed_system_mapreduce_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -204,15 +204,9 @@ def main() -> None:
     for reps in scales:
         d = os.path.join(args.out, f"x{reps}")
         build_replica_dir(spark, args.src, d, reps)
+        samples = sweep(spark, d, names, args.runs)
         for n in names:
-            best = math.inf
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                QUERIES[n](spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            timings[n][reps] = round(best, 3)
+            timings[n][reps] = round(min(b + e for b, _p, e in samples[n]), 3)
         # caches must not carry one scale's artifacts into the next
         clear_tracked_caches()
         print(

@@ -9,7 +9,8 @@ sf-dir parquet into the in-memory sink (the exact harness
 tests/test_streaming.py proves batch-equal), min-of-N end-to-end seconds
 per operator, one JSON line to stdout.
 
-Usage: python tools/stream_microbench.py [--sf-dir DIR] [--runs 2]
+Usage: python tools/stream_microbench.py [--sf-dir /root/testdata/sf0.01]
+           [--runs 2]
 """
 
 from __future__ import annotations
@@ -27,8 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--cpus", type=int, default=int(
         os.environ.get("SPARK_GRAFT_CPUS", "32")))
