@@ -1,5 +1,5 @@
-"""bench.py's stdout contract, run as the driver runs it (a subprocess) on a
-two-query ``--subset`` at sf0.001."""
+"""bench.py's stdout contract, run as a subprocess on a two-query
+``--subset`` at sf0.001."""
 
 from __future__ import annotations
 
@@ -15,8 +15,8 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 def test_bench_subset_records_layers_and_prints_summary_last():
-    """Two stdout lines, the compact summary last (under the driver's
-    2000-char tail) carrying the cold/build/plan totals; each query's
+    """Two stdout lines, the compact summary last (under the 2000 chars a
+    stdout tail capture keeps) carrying the cold/build/plan totals; each query's
     ``build_s + exec_s`` is its sample (one pass, so the min is that sample);
     a subset run leaves BENCH_DETAIL.json as it was."""
     names = ["count_by_key", "word_count"]

@@ -7,7 +7,7 @@ AFTER every change). Usage:
     python tools/explain_dump.py --out plans/r16 --tag before q1 q2 ...
     python tools/explain_dump.py --out plans/r16 --tag after  q1 q2 ...
 
-``--sf-dir`` defaults to /root/testdata/sf0.1, the bench scale.
+``--sf-dir`` defaults to the sf0.1 fixture, the bench scale.
 
 Writes ``<out>/<query>_<tag>.txt`` holding the formatted physical plan
 (initial AQE plan — plan SHAPE is what the round's claims are checked

@@ -9,8 +9,9 @@ sf-dir parquet into the in-memory sink (the exact harness
 tests/test_streaming.py proves batch-equal), min-of-N end-to-end seconds
 per operator, one JSON line to stdout.
 
-Usage: python tools/stream_microbench.py [--sf-dir /root/testdata/sf0.01]
-           [--runs 2]
+Usage: python tools/stream_microbench.py [--sf-dir DIR] [--runs 2]
+
+``--sf-dir`` defaults to the sf0.01 fixture.
 """
 
 from __future__ import annotations
