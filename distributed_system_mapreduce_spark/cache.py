@@ -17,11 +17,12 @@ three kinds:
 - checkpoint slots (``checkpoint_generation``): the one live
   ``localCheckpoint`` per call site.
 
-It also owns the two things every iterative driver loop shares: the
-checkpointed fixpoint loop (``fixpoint``) and its shuffle width
-(``loop_parts``), and the width of compute-bound stages (``task_slots``,
-``spread``). This is the only module that calls ``localCheckpoint`` or
-reads a partition count from the session.
+It also owns what every iterative driver loop shares: the checkpointed
+fixpoint loop (``fixpoint``), its shuffle width (``loop_parts``) and its
+local tail (``local_rows`` under ``LOCAL_TAIL_MAX``), and the width of
+compute-bound stages (``task_slots``, ``spread``). This is the only
+module that calls ``localCheckpoint``, reads a partition count from the
+session or collects a graph loop's frame to finish it locally.
 
 ``clear_tracked_caches`` releases all three. Long-lived sessions (bench
 loops, notebooks) call it between logical phases; short-lived jobs never
@@ -53,6 +54,13 @@ _MEMO: dict[tuple, object] = {}
 _SEEN_FINGERPRINTS: dict[tuple, tuple] = {}
 #: live checkpoint per checkpoint_generation slot
 _CKPT_GEN: dict[str, DataFrame] = {}
+
+#: largest edge list a graph loop finishes in driver memory (100k
+#: (src, dst) longs is ~1.6 MB collected). Each distributed round costs
+#: several stage jobs of fixed latency whatever its size, so below this
+#: bound the local finish wins; above it every round stays distributed.
+#: Read on each call: a test sets it to 0 to force the distributed path.
+LOCAL_TAIL_MAX = 100_000
 
 
 def track(
@@ -242,16 +250,29 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(task_slots(df.sparkSession))
 
 
+def local_rows(df: DataFrame, n_rows: int) -> "list[tuple] | None":
+    """``df``'s rows as tuples when ``n_rows``, its exact row count, is at
+    most :data:`LOCAL_TAIL_MAX`; None (and no job) otherwise.
+
+    The one local-tail rule of the graph loops: a driver-small graph
+    finishes in Python instead of paying a distributed round's fixed stage
+    latency. The bound is read on each call.
+    """
+    if n_rows > LOCAL_TAIL_MAX:
+        return None
+    return [tuple(r) for r in df.collect()]
+
+
 def fixpoint(
     initial: DataFrame,
     step: "Callable[[DataFrame], DataFrame]",
     measure: "Callable[[DataFrame], object]",
     max_rounds: int,
     name: str,
-    stop: "Callable[[object], bool] | None" = None,
-) -> tuple:
+    finish: "Callable[[list, int, int], object] | None" = None,
+) -> object:
     """Iterate ``step`` from ``initial`` until ``measure`` repeats; returns
-    (frame, measure, rounds, converged).
+    (frame, measure, rounds), or what ``finish`` returns.
 
     Contract:
     - each generation is ``localCheckpoint(eager=False)``'ed, so plans stay
@@ -261,25 +282,33 @@ def fixpoint(
       loop pins one generation at a time;
     - a round converges when its measure equals the previous one; the
       confirming round counts in ``rounds``;
-    - ``stop``, if given, is asked after each unconverged round; when it
-      returns True the loop ends there with ``converged`` False;
-    - the returned frame is a live checkpoint the caller releases with
+    - ``finish``, if given, makes ``measure`` the generation's row count:
+      whenever that count passes :func:`local_rows` (at the start or after
+      any unconverged round), the live generation is collected and
+      released and the loop returns ``finish(rows, measure, rounds)``, so
+      the caller carries on in driver memory with the same round counter;
+    - a returned frame is a live checkpoint the caller releases with
       ``release_checkpoint``;
-    - if ``max_rounds`` rounds pass without convergence or stop, the live
-      generation is released and a ``RuntimeError`` naming ``name`` is
-      raised.
+    - if ``max_rounds`` rounds pass without convergence or a local finish,
+      the live generation is released and a ``RuntimeError`` naming
+      ``name`` is raised.
     """
     frame = initial.localCheckpoint(eager=False)
     m = measure(frame)
-    for rounds in range(1, max_rounds + 1):
+    rounds = 0
+    while True:
+        rows = None if finish is None else local_rows(frame, m)
+        if rows is not None:
+            release_checkpoint(frame)
+            return finish(rows, m, rounds)
+        if rounds == max_rounds:
+            release_checkpoint(frame)
+            raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
+        rounds += 1
         nxt = step(frame).localCheckpoint(eager=False)
         m_next = measure(nxt)
         release_checkpoint(frame)
         frame = nxt
         if m_next == m:
-            return frame, m_next, rounds, True
+            return frame, m, rounds
         m = m_next
-        if stop is not None and stop(m):
-            return frame, m, rounds, False
-    release_checkpoint(frame)
-    raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")

@@ -26,7 +26,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import fixpoint, loop_parts, session_memo, spread, task_slots, track
+from ..cache import (
+    fixpoint,
+    local_rows,
+    loop_parts,
+    session_memo,
+    spread,
+    task_slots,
+    track,
+)
 from ..exactmath import round_div_long, sql_round_div
 from ..registry import register
 from ..sources.io import load
@@ -43,7 +51,6 @@ from ..sources.io import load
 #: under the affine family; seeded xxhash64 restores the e[est] = jacc
 #: guarantee (verified by that query's oracle-pinned tolerance check).
 MINHASH_N_PERMS = 16
-MINHASH_PRIME = 2_147_483_647
 MINHASH_BANDS = 4  # 4 bands x 4 rows
 
 
@@ -281,6 +288,27 @@ CLUSTER_THRESHOLD = 0.5
 CC_MAX_ROUNDS = 50
 
 
+def _min_labels(edges: "list[tuple]") -> dict:
+    """Min-id component label per node of an edge list: union-find whose
+    union hangs the larger root under the smaller, so every root is its
+    component's min id."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def connected_components(
     edges_directed: DataFrame, max_rounds: int = CC_MAX_ROUNDS
 ) -> DataFrame:
@@ -300,11 +328,25 @@ def connected_components(
     ``cache.loop_parts`` width with Σ label as the measure: min-propagation
     only ever decreases labels, so the sum is strictly monotone until the
     fixpoint. The returned labels are a live checkpoint.
+
+    An edge list that passes ``cache.local_rows`` is labeled in driver
+    memory instead (:func:`_min_labels`, the same min-id labels), and the
+    labels come back as a local frame with the distributed path's columns
+    and types.
     """
     spark = edges_directed.sparkSession
     edges_directed = edges_directed.persist()
     try:
-        parts = loop_parts(spark, edges_directed.count())
+        n_edges = edges_directed.count()
+        rows = local_rows(edges_directed, n_edges)
+        if rows is not None:
+            return spark.createDataFrame(
+                list(_min_labels(rows).items()),
+                edges_directed.select(
+                    F.col("src").alias("id"), F.col("dst").alias("label")
+                ).schema,
+            )
+        parts = loop_parts(spark, n_edges)
         edges = edges_directed.repartition(parts, "src")
         nodes = (
             edges_directed.select(F.col("src").alias("id"))
@@ -342,7 +384,7 @@ def connected_components(
             )
 
         label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        labels, _, _, _ = fixpoint(
+        labels, _, _ = fixpoint(
             nodes.withColumn("label", F.col("id")),
             step,
             lambda df: df.agg(label_sum).collect()[0]["s"],
@@ -374,8 +416,8 @@ def corpus_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the CacheManager can never match two runs the way it matches the
     persisted pair table. dedup_cluster and dedup_survivors share one
     label set, one row per node of a near-dup pair (smaller than the
-    cached pair table); its checkpoint blocks stay pinned until
-    ``clear_tracked_caches``."""
+    cached pair table); when the distributed loop built it, its checkpoint
+    blocks stay pinned until ``clear_tracked_caches``."""
     return session_memo(
         spark,
         f"corpus_cc_labels:{CLUSTER_THRESHOLD}",

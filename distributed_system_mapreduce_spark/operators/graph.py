@@ -25,7 +25,8 @@ Scale notes (100 TB):
   over the edge table, cached once. The only driver-side scalar is the
   vertex count; eight rounds stay well inside Catalyst's plan budget.
 - **Connected components and the k-core peel** run to a data-dependent
-  fixpoint on ``cache.fixpoint``, one checkpointed generation per round.
+  fixpoint on ``cache.fixpoint``, one checkpointed generation per round;
+  a graph within ``cache.LOCAL_TAIL_MAX`` edges finishes in driver memory.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from pyspark.sql import functions as F
 from ..cache import (
     checkpoint_generation,
     fixpoint,
+    local_rows,
     loop_parts,
     release_checkpoint,
     session_memo,
@@ -426,6 +428,33 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the standard market-basket support threshold.
 BACKBONE_SUPPORT = 2
 
+#: DuckDB CTE prefix shared by the backbone oracles: ``co`` holds the
+#: support >= BACKBONE_SUPPORT pairs (src < dst), ``bedges`` their
+#: symmetric (src, dst) list.
+_BACKBONE_SQL = f"""
+    co as materialized (
+      select a.l_partkey as src, b.l_partkey as dst
+      from (select distinct l_orderkey, l_partkey from lineitem) a
+      join (select distinct l_orderkey, l_partkey from lineitem) b
+        on a.l_orderkey = b.l_orderkey and a.l_partkey < b.l_partkey
+      group by all
+      having count(*) >= {BACKBONE_SUPPORT}),
+    bedges as materialized (
+      select src, dst from co
+      union all
+      select dst as src, src as dst from co)"""
+
+#: _BACKBONE_SQL plus the backbone's component labels by a recursive
+#: reachability closure: ``blabels`` maps each backbone node to the min
+#: id it reaches. Requires a WITH RECURSIVE context.
+_BACKBONE_LABELS_SQL = f"""{_BACKBONE_SQL},
+    bnodes as (select distinct src as id from bedges),
+    reach as (
+      select id as src, id as dst from bnodes
+      union
+      select r.src, e.dst from reach r join bedges e on r.dst = e.src),
+    blabels as (select src as id, min(dst) as label from reach group by src)"""
+
 
 def _backbone_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric (src, dst) edges of the support-thresholded backbone."""
@@ -454,25 +483,8 @@ def backbone_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_components",
     oracle=f"""
-    with recursive
-    co as (
-      select a.l_partkey as src, b.l_partkey as dst
-      from (select distinct l_orderkey, l_partkey from lineitem) a
-      join (select distinct l_orderkey, l_partkey from lineitem) b
-        on a.l_orderkey = b.l_orderkey and a.l_partkey < b.l_partkey
-      group by all
-      having count(*) >= {BACKBONE_SUPPORT}),
-    edges as (
-      select src, dst from co
-      union all
-      select dst as src, src as dst from co),
-    nodes as (select distinct src as id from edges),
-    reach as (
-      select id as src, id as dst from nodes
-      union
-      select r.src, e.dst from reach r join edges e on r.dst = e.src),
-    labels as (select src as id, min(dst) as label from reach group by src),
-    csizes as (select label, count(*) as component_size from labels
+    with recursive {_BACKBONE_LABELS_SQL},
+    csizes as (select label, count(*) as component_size from blabels
                group by label)
     select cast(component_size as bigint) as component_size,
            cast(count(*) as bigint) as n_components
@@ -487,8 +499,10 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reuses the engine's pointer-jumping CC primitive
     (operators/dedup.py::connected_components — O(log diameter) rounds on
-    ``cache.fixpoint``) on a second graph, demonstrating it as a library
-    operator rather than a dedup-special. The support filter is a HAVING over the same
+    ``cache.fixpoint``, or a driver-memory union-find for a backbone
+    within ``cache.LOCAL_TAIL_MAX`` edges) on a second graph,
+    demonstrating it as a library operator rather than a dedup-special.
+    The support filter is a HAVING over the same
     one-shuffle pair rollup the full edge build uses; the backbone is
     orders of magnitude sparser than the raw co-occurrence graph, which is
     exactly why a support threshold is the first thing a market-basket
@@ -714,23 +728,6 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCORE_K = 2
 KCORE_MAX_ROUNDS = 50
 
-#: Local-tail handoff bound for the k-core peel: work that is PROVABLY
-#: driver-small should not pay distributed fixed costs. When the surviving
-#: symmetric edge count — already on the driver as the loop's convergence
-#: scalar, no extra job — is <= this bound, the
-#: remaining rounds run as a plain in-memory peel: 100k (src, dst) longs is
-#: ~1.6 MB collected, the same bounded-collect class as the MMR pool and
-#: the CC convergence scalars. The payoff is the iterative-algorithm tail
-#: problem: each distributed round costs 3-4 AQE stage jobs of driver
-#: latency regardless of data size (measured at sf0.1: 0.3-0.7 s/round over
-#: a 7k-edge backbone shrinking to 6 edges — >95% fixed overhead), so the
-#: dwindling tail rounds dominate the peel. At 100 TB the early
-#: corpus-sized rounds stay fully distributed; the handoff fires only once
-#: the survivor set is provably tiny (the GraphX/Pregel "finish small
-#: frontiers locally" move).
-KCORE_LOCAL_TAIL_MAX = 100_000
-
-
 def kcore_round(edges: DataFrame, k: int) -> DataFrame:
     """ONE peel round: degree rollup over the surviving symmetric edge
     list, then a semi-join keeping edges with BOTH endpoints alive. The
@@ -791,21 +788,21 @@ def kcore_peel(
     edges_sym: DataFrame,
     k: int,
     max_rounds: int = KCORE_MAX_ROUNDS,
-    local_tail_max: int = KCORE_LOCAL_TAIL_MAX,
     n_edges: int | None = None,
-) -> tuple[DataFrame, int, int]:
+) -> tuple:
     """Peel a SYMMETRIC edge list to its k-core fixpoint.
 
-    Returns (surviving symmetric edges, surviving directed-edge count, peel
-    rounds). The frame is a live checkpoint the caller releases with
-    ``cache.release_checkpoint`` (a no-op when the peel finished locally).
-    Shared by the registered backbone queries (any k) and the randomized
-    property test, which pits it against a plain-Python reference peel.
+    Returns (core, surviving directed-edge count, peel rounds). ``core``
+    is the surviving symmetric edges: a list of (src, dst) tuples when the
+    peel finished in driver memory, else a live checkpoint the caller
+    releases with ``cache.release_checkpoint``. Shared by the registered
+    backbone queries (any k) and the randomized property test, which pits
+    it against a plain-Python reference peel.
 
     Each round is one :func:`kcore_round` on ``cache.fixpoint``; the
     measure is the surviving-edge count, strictly decreasing until the
-    fixpoint. Once that count is <= ``local_tail_max`` (at the start, or
-    after any round) the remaining rounds run in driver memory
+    fixpoint. Once that count is within ``cache.LOCAL_TAIL_MAX`` (at the
+    start, or after any round) the remaining rounds run in driver memory
     (:func:`_kcore_peel_local`) with the same round counter and budget, so
     the result and ``rounds`` equal the all-distributed peel's. ``n_edges``,
     if given, must be the exact row count of ``edges_sym``.
@@ -813,29 +810,19 @@ def kcore_peel(
     spark = edges_sym.sparkSession
     if n_edges is None:
         n_edges = edges_sym.count()
-    rounds = 0
-    if n_edges <= local_tail_max:
-        tail = edges_sym.collect()
-    else:
-        # AQE stays on around this loop: with adaptive planning off the
-        # alive-list semi-joins plan statically against the checkpoint's
-        # unknown size and demote to full-width sort-merge joins.
-        edges, n_edges, rounds, converged = fixpoint(
-            edges_sym.repartition(loop_parts(spark, n_edges), "src"),
-            lambda e: kcore_round(e, k),
-            DataFrame.count,
-            max_rounds,
-            "k-core peel",
-            stop=lambda n: n <= local_tail_max,
-        )
-        if converged:
-            return edges, n_edges, rounds
-        tail = edges.collect()
-        release_checkpoint(edges)
-    out, n_edges, rounds = _kcore_peel_local(
-        [(r[0], r[1]) for r in tail], k, n_edges, rounds, max_rounds
+    # AQE stays on around this loop: with adaptive planning off the
+    # alive-list semi-joins plan statically against the checkpoint's
+    # unknown size and demote to full-width sort-merge joins.
+    return fixpoint(
+        edges_sym.repartition(loop_parts(spark, n_edges), "src"),
+        lambda e: kcore_round(e, k),
+        DataFrame.count,
+        max_rounds,
+        "k-core peel",
+        finish=lambda rows, n, rounds: _kcore_peel_local(
+            rows, k, n, rounds, max_rounds
+        ),
     )
-    return spark.createDataFrame(out, edges_sym.schema), n_edges, rounds
 
 
 def _kcore_summary(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -846,9 +833,12 @@ def _kcore_summary(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         sym = _backbone_sym(spark, sf_dir)
         # shared by both k-core queries and graph_label_propagation
         n_sym = session_memo(spark, "n_backbone_sym_edges", sf_dir, sym.count)
-        edges, n_edges, rounds = kcore_peel(sym, k, n_edges=n_sym)
-        core_nodes = edges.select("src").distinct().count()
-        release_checkpoint(edges)
+        core, n_edges, rounds = kcore_peel(sym, k, n_edges=n_sym)
+        if isinstance(core, list):
+            core_nodes = len({src for src, _ in core})
+        else:
+            core_nodes = core.select("src").distinct().count()
+            release_checkpoint(core)
         return (k, core_nodes, n_edges // 2, rounds)
 
     return spark.createDataFrame(
@@ -896,18 +886,8 @@ def _kcore_oracle(k: int, unroll: int = KCORE_ORACLE_UNROLL) -> str:
         for i in range(unroll + 1)
     )
     return f"""
-    with
-    co as materialized (
-      select a.l_partkey as src, b.l_partkey as dst
-      from (select distinct l_orderkey, l_partkey from lineitem) a
-      join (select distinct l_orderkey, l_partkey from lineitem) b
-        on a.l_orderkey = b.l_orderkey and a.l_partkey < b.l_partkey
-      group by all
-      having count(*) >= {BACKBONE_SUPPORT}),
-    e0 as materialized (
-      select src, dst from co
-      union all
-      select dst as src, src as dst from co),{",".join(rounds)},
+    with {_BACKBONE_SQL},
+    e0 as (select src, dst from bedges),{",".join(rounds)},
     counts as (
       {counts}),
     fix as (
@@ -1588,24 +1568,7 @@ def clustering_capped_from_pairs(
 @register(
     "graph_modularity",
     oracle=f"""
-    with recursive
-    co as (
-      select a.l_partkey as src, b.l_partkey as dst
-      from (select distinct l_orderkey, l_partkey from lineitem) a
-      join (select distinct l_orderkey, l_partkey from lineitem) b
-        on a.l_orderkey = b.l_orderkey and a.l_partkey < b.l_partkey
-      group by all
-      having count(*) >= {BACKBONE_SUPPORT}),
-    bedges as (
-      select src, dst from co
-      union all
-      select dst as src, src as dst from co),
-    bnodes as (select distinct src as id from bedges),
-    reach as (
-      select id as src, id as dst from bnodes
-      union
-      select r.src, e.dst from reach r join bedges e on r.dst = e.src),
-    blabels as (select src as id, min(dst) as label from reach group by src),
+    with recursive {_BACKBONE_LABELS_SQL},
     {_PAIRS_SQL},
     vlab as (
       select deg.id, deg.deg, coalesce(b.label, deg.id) as label
@@ -1721,17 +1684,7 @@ def _lpa_oracle(rounds: int = LPA_ROUNDS) -> str:
         )
     chain = ",".join(steps)
     return f"""
-    with co as materialized (
-      select a.l_partkey as src, b.l_partkey as dst
-      from (select distinct l_orderkey, l_partkey from lineitem) a
-      join (select distinct l_orderkey, l_partkey from lineitem) b
-        on a.l_orderkey = b.l_orderkey and a.l_partkey < b.l_partkey
-      group by all
-      having count(*) >= {BACKBONE_SUPPORT}),
-    bedges as materialized (
-      select src, dst from co
-      union all
-      select dst as src, src as dst from co),
+    with {_BACKBONE_SQL},
     l0 as materialized (
       select distinct src as id, src as lbl from bedges),
     {chain},
@@ -1827,25 +1780,21 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections import Counter
 
     sym = _backbone_sym(spark, sf_dir)
-    # Local-tail handoff (the kcore_peel / KCORE_LOCAL_TAIL_MAX move, same
-    # bound, same bounded-collect class):
-    # at sf0.1 the 4 unrolled rounds are ~12 exchanges of pure stage
-    # latency over a 7k-edge backbone. When the session-memoized backbone
-    # count proves the graph driver-small, the synchronous rounds run in
-    # memory (bit-identical rule, pinned against lpa_labels below) and
-    # the fixpoint labels are memoized per (session, corpus, rounds) like
-    # the backbone CC labels; the top-20 rollup is derived per run.
-    # Corpus-scale graphs take the distributed plan untouched.
+    # Local tail (cache.local_rows): at sf0.1 the 4 unrolled rounds are ~12
+    # exchanges of pure stage latency over a 7k-edge backbone. A
+    # driver-small backbone runs the synchronous rounds in memory
+    # (bit-identical rule, pinned against lpa_labels in the tests); its
+    # labels are memoized per (session, corpus, rounds) like the backbone
+    # CC labels, and the top-20 rollup is derived per run. Larger graphs
+    # take the distributed plan (memo value None).
     n_sym = session_memo(spark, "n_backbone_sym_edges", sf_dir, sym.count)
-    if n_sym <= KCORE_LOCAL_TAIL_MAX:
-        lab = session_memo(
-            spark,
-            f"lpa_labels:{LPA_ROUNDS}",
-            sf_dir,
-            lambda: _lpa_labels_local(
-                [(r[0], r[1]) for r in sym.collect()], LPA_ROUNDS
-            ),
-        )
+
+    def local_labels():
+        rows = local_rows(sym, n_sym)
+        return None if rows is None else _lpa_labels_local(rows, LPA_ROUNDS)
+
+    lab = session_memo(spark, f"lpa_labels:{LPA_ROUNDS}", sf_dir, local_labels)
+    if lab is not None:
         sizes_c = Counter(lab.values())
         top = sorted(sizes_c.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
         return spark.createDataFrame(

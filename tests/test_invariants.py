@@ -201,16 +201,18 @@ def test_pipeline_family_shares_cc_label_memo(spark):
         assert cache._MEMO[k] is frame  # identity: memo hit, not rebuild
 
 
-def test_memo_clear_releases_checkpoint_rdds(spark):
+def test_memo_clear_releases_checkpoint_rdds(spark, monkeypatch):
     """Dropping the label memo must unpersist its checkpoint RDD blocks in
     the JVM, not just the Python references — and the release count must
     include every memo entry (labels and source frames alike) so bench
-    accounting reconciles."""
+    accounting reconciles. ``cache.LOCAL_TAIL_MAX`` is 0 so the labels
+    come from the distributed loop, whose checkpoint the memo pins."""
     from distributed_system_mapreduce_spark import cache
     from distributed_system_mapreduce_spark.operators.dedup import (
         corpus_cc_labels,
     )
 
+    monkeypatch.setattr(cache, "LOCAL_TAIL_MAX", 0)
     cache.clear_tracked_caches()
     jsc = spark.sparkContext._jsc.sc()
     base = jsc.getPersistentRDDs().size()
@@ -266,9 +268,11 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
     """Source scan, no Spark: cache.py is the only module that calls
     ``localCheckpoint``, ``cache.loop_parts`` is the only reader of
     ``spark.sql.shuffle.partitions`` (session.py only sets it in the
-    builder config), and ``cache.task_slots`` the only reader of
-    ``defaultParallelism``, so the checkpoint lifecycle and each
-    partition-sizing rule live in one place."""
+    builder config), ``cache.task_slots`` the only reader of
+    ``defaultParallelism``, and ``LOCAL_TAIL_MAX`` is assigned and named
+    only in cache.py with no ``local_tail_max`` parameter anywhere else,
+    so the checkpoint lifecycle, each partition-sizing rule and the graph
+    loops' local-tail bound live in one place."""
     import ast
     import pathlib
 
@@ -277,6 +281,7 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
     )
     key = "spark.sql.shuffle.partitions"
     checkpoint_calls, readers, slot_readers, setters = set(), [], [], set()
+    bound_assigners, bound_users, bound_params = set(), set(), []
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         tree = ast.parse(path.read_text())
@@ -298,6 +303,18 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
                 and getattr(node.func, "attr", None) == "localCheckpoint"
             ):
                 checkpoint_calls.add(rel)
+            if isinstance(node, ast.Assign) and any(
+                getattr(t, "id", None) == "LOCAL_TAIL_MAX" for t in node.targets
+            ):
+                bound_assigners.add(rel)
+            if "LOCAL_TAIL_MAX" in (
+                getattr(node, "id", None),
+                getattr(node, "attr", None),
+                getattr(node, "name", None),
+            ):
+                bound_users.add(rel)
+            if isinstance(node, ast.arg) and node.arg == "local_tail_max":
+                bound_params.append(scope(node))
             if isinstance(node, ast.Attribute) and node.attr == "defaultParallelism":
                 slot_readers.append(scope(node))
             if not (isinstance(node, ast.Constant) and node.value == key):
@@ -313,6 +330,9 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
     assert readers == [("cache.py", "loop_parts")]
     assert slot_readers == [("cache.py", "task_slots")]
     assert setters == {"session.py"}
+    assert bound_assigners == {"cache.py"}
+    assert bound_users == {"cache.py"}
+    assert [s for s in bound_params if s[0] != "cache.py"] == []
 
 
 def test_loop_parts_boundaries(spark):
@@ -349,12 +369,15 @@ def test_fixpoint_raises_naming_the_loop(spark):
     assert _persistent_rdd_ids(spark) <= before
 
 
-def test_fixpoint_pins_one_generation_and_releases_it(spark):
+def test_fixpoint_pins_one_generation_and_releases_it(spark, monkeypatch):
     """Halving to zero: the loop converges on the first repeated measure
     (the confirming round counts), keeps exactly one checkpoint live, and
     after the caller releases the returned frame no generation of the
-    loop stays in the JVM's persistent-RDD registry. ``stop`` ends the
-    loop early, unconverged."""
+    loop stays in the JVM's persistent-RDD registry. With ``finish``, a
+    generation whose row count is within ``cache.LOCAL_TAIL_MAX`` (at the
+    start or after an unconverged round) is collected, released and
+    handed to ``finish`` with the round counter."""
+    from distributed_system_mapreduce_spark import cache
     from distributed_system_mapreduce_spark.cache import (
         fixpoint,
         release_checkpoint,
@@ -368,17 +391,32 @@ def test_fixpoint_pins_one_generation_and_releases_it(spark):
 
     before = _persistent_rdd_ids(spark)
     start = spark.createDataFrame([(40,), (17,), (9,)], "x long")
-    out, m, rounds, converged = fixpoint(start, halve, total, 20, "halving")
-    assert (m, rounds, converged) == (0, 7, True)
+    out, m, rounds = fixpoint(start, halve, total, 20, "halving")
+    assert (m, rounds) == (0, 7)
     assert sorted(r.x for r in out.collect()) == [0, 0, 0]
     assert len(_persistent_rdd_ids(spark) - before) == 1
     release_checkpoint(out)
     assert _persistent_rdd_ids(spark) <= before
 
-    out, m, rounds, converged = fixpoint(
-        start, halve, total, 20, "halving", stop=lambda s: s < 10
-    )
-    assert (m, rounds, converged) == (8, 3, False)
+    def over_nine(df):
+        return df.filter(F.col("x") > 9)
+
+    def finish(rows, n, rounds):
+        return sorted(rows), n, rounds
+
+    def run_with_bound(bound):
+        monkeypatch.setattr(cache, "LOCAL_TAIL_MAX", bound)
+        return fixpoint(
+            start, over_nine, lambda df: df.count(), 20, "filter", finish=finish
+        )
+
+    # 3 rows -> 2 rows -> 2 rows: bound 3 finishes at the start, bound 2
+    # after round 1, bound 1 converges distributed in round 2
+    assert run_with_bound(3) == ([(9,), (17,), (40,)], 3, 0)
+    assert run_with_bound(2) == ([(17,), (40,)], 2, 1)
+    assert _persistent_rdd_ids(spark) <= before
+    out, m, rounds = run_with_bound(1)
+    assert (sorted(r.x for r in out.collect()), m, rounds) == ([17, 40], 2, 2)
     release_checkpoint(out)
     assert _persistent_rdd_ids(spark) <= before
 

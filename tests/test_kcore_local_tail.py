@@ -1,13 +1,12 @@
-"""k-core local-tail handoff equivalence (r16 optimization round).
+"""k-core local-tail handoff equivalence.
 
-``kcore_peel`` finishes the peel fixpoint in driver memory once the
-surviving edge count (the loop's convergence scalar, already on the
-driver) proves the set smaller than ``KCORE_LOCAL_TAIL_MAX`` — the
-iterative-tail fix for rounds whose cost is all fixed distributed
-latency. These tests pin the optimization's contract: the local path and
-the forced-distributed path produce the SAME core, the SAME directed-edge
-count and the SAME round count, on random graphs and on the mid-loop
-handoff boundary.
+``kcore_peel`` runs on ``cache.fixpoint`` with a local finish: whenever
+the surviving symmetric edge count (the loop's measure, already on the
+driver) is within ``cache.LOCAL_TAIL_MAX``, at the start or after any
+round, the remaining rounds run in driver memory with the same round
+counter. Contract: the local path, the mid-loop handoff and the
+forced-distributed path (``cache.LOCAL_TAIL_MAX`` 0) return the SAME core,
+the SAME directed-edge count and the SAME round count.
 """
 
 from __future__ import annotations
@@ -16,7 +15,7 @@ import random
 
 import pytest
 
-from distributed_system_mapreduce_spark.cache import release_checkpoint
+from distributed_system_mapreduce_spark import cache
 from distributed_system_mapreduce_spark.operators.graph import (
     _symmetric,
     kcore_peel,
@@ -32,10 +31,25 @@ def _rand_pairs(rng: random.Random, n_nodes: int, n_edges: int):
     return sorted(seen)
 
 
+def _peel(monkeypatch, sym, k, bound=None):
+    """kcore_peel under ``bound`` (the default bound when None); returns
+    (sorted core rows, directed-edge count, rounds) and releases a
+    distributed core."""
+    with monkeypatch.context() as m:
+        if bound is not None:
+            m.setattr(cache, "LOCAL_TAIL_MAX", bound)
+        core, n, rounds = kcore_peel(sym, k)
+    if isinstance(core, list):
+        return sorted(core), n, rounds
+    rows = sorted(map(tuple, core.collect()))
+    cache.release_checkpoint(core)
+    return rows, n, rounds
+
+
 @pytest.mark.parametrize("seed,k", [(1, 2), (2, 3), (3, 2), (4, 4)])
-def test_local_tail_matches_forced_distributed(spark, seed, k):
+def test_local_tail_matches_forced_distributed(spark, monkeypatch, seed, k):
     """Start-of-loop handoff: a graph under the bound peels locally; with
-    local_tail_max=0 the same peel runs all-distributed. Core membership,
+    the bound at 0 the same peel runs all-distributed. Core membership,
     edge count and the reported round count must be identical."""
     rng = random.Random(seed)
     pairs = spark.createDataFrame(
@@ -43,19 +57,12 @@ def test_local_tail_matches_forced_distributed(spark, seed, k):
     )
     sym = _symmetric(pairs)
 
-    loc, n_loc, r_loc = kcore_peel(sym, k)
-    dist, n_dist, r_dist = kcore_peel(sym, k, local_tail_max=0)
-    loc_rows = sorted(map(tuple, loc.collect()))
-    dist_rows = sorted(map(tuple, dist.collect()))
-    release_checkpoint(loc)
-    release_checkpoint(dist)
-    assert (n_loc, r_loc) == (n_dist, r_dist)
-    assert loc_rows == dist_rows
+    assert _peel(monkeypatch, sym, k) == _peel(monkeypatch, sym, k, bound=0)
 
 
-def test_midloop_handoff_matches_forced_distributed(spark):
-    """Boundary case: local_tail_max BETWEEN the gen-0 size and the
-    round-1 survivor size forces exactly one distributed round before the
+def test_midloop_handoff_matches_forced_distributed(spark, monkeypatch):
+    """Boundary case: a bound BETWEEN the gen-0 size and the round-1
+    survivor size forces exactly one distributed round before the
     handoff — the composed result must equal the all-distributed peel."""
     # triangle 2-core plus a pendant chain: the 2-peel strips exactly one
     # chain vertex per round, guaranteeing a multi-round cascade
@@ -66,28 +73,18 @@ def test_midloop_handoff_matches_forced_distributed(spark):
     sym = _symmetric(pairs)
     n0 = sym.count()
 
-    dist, n_dist, r_dist = kcore_peel(sym, 2, local_tail_max=0)
-    dist_rows = sorted(map(tuple, dist.collect()))
-    release_checkpoint(dist)
-    assert r_dist >= 2, "fixture must peel for >= 2 rounds to test handoff"
-
-    mixed, n_mixed, r_mixed = kcore_peel(sym, 2, local_tail_max=n0 - 1)
-    mixed_rows = sorted(map(tuple, mixed.collect()))
-    release_checkpoint(mixed)
-    assert (n_mixed, r_mixed) == (n_dist, r_dist)
-    assert mixed_rows == dist_rows
+    dist = _peel(monkeypatch, sym, 2, bound=0)
+    assert dist[2] >= 2, "fixture must peel for >= 2 rounds to test handoff"
+    assert _peel(monkeypatch, sym, 2, bound=n0 - 1) == dist
 
 
-def test_empty_core_local(spark):
-    """A graph whose k-core is empty returns an empty frame and the same
+def test_empty_core_local(spark, monkeypatch):
+    """A graph whose k-core is empty returns an empty core and the same
     rounds on both paths."""
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3)], "src long, dst long"
     )
     sym = _symmetric(pairs)
-    loc, n_loc, r_loc = kcore_peel(sym, 2)
-    dist, n_dist, r_dist = kcore_peel(sym, 2, local_tail_max=0)
-    assert n_loc == n_dist == 0
-    assert r_loc == r_dist
-    assert loc.count() == dist.count() == 0
-    release_checkpoint(dist)
+    loc = _peel(monkeypatch, sym, 2)
+    assert loc[:2] == ([], 0)
+    assert loc == _peel(monkeypatch, sym, 2, bound=0)

@@ -1,12 +1,12 @@
-"""LPA local-tail equivalence (r16 optimization round).
+"""LPA local-tail equivalence.
 
 ``graph_label_propagation`` runs the synchronous label-propagation rounds
-in driver memory when the session-memoized backbone edge count proves the
-graph smaller than ``KCORE_LOCAL_TAIL_MAX`` (the kcore_peel handoff
-applied to the second iterative-tail query). These tests pin the
-optimization's contract: ``_lpa_labels_local`` is bit-identical to the
-distributed ``lpa_labels`` rule — max-count/min-label synchronous
-adoption — on random graphs for any round count.
+in driver memory when the session-memoized backbone edge count is within
+``cache.LOCAL_TAIL_MAX`` (``cache.local_rows``, the local-tail rule the
+k-core peel and connected components share). Contract:
+``_lpa_labels_local`` is bit-identical to the distributed ``lpa_labels``
+rule — max-count/min-label synchronous adoption — on random graphs for
+any round count.
 """
 
 from __future__ import annotations

@@ -48,7 +48,11 @@ def _union_find_labels(edges: list[tuple[int, int]]) -> dict[int, int]:
         max_size=30,
     )
 )
-def test_connected_components_matches_union_find(spark, edges):
+def test_connected_components_matches_union_find(spark, monkeypatch, edges):
+    """Both CC paths equal the reference labels: the distributed loop
+    (``cache.LOCAL_TAIL_MAX`` 0; these graphs all fit the default local
+    tail) and the driver-memory finish."""
+    from distributed_system_mapreduce_spark import cache
     from distributed_system_mapreduce_spark.operators.dedup import (
         connected_components,
     )
@@ -56,11 +60,16 @@ def test_connected_components_matches_union_find(spark, edges):
     expected = _union_find_labels(edges)
     both_dirs = [(a, b) for a, b in edges] + [(b, a) for a, b in edges]
     df = spark.createDataFrame(both_dirs, "src long, dst long")
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(df).collect()
-    }
-    assert got == expected
+
+    def labels() -> dict:
+        out = connected_components(df)
+        assert out.dtypes == [("id", "bigint"), ("label", "bigint")]
+        return {r["id"]: r["label"] for r in out.collect()}
+
+    assert labels() == expected
+    with monkeypatch.context() as m:
+        m.setattr(cache, "LOCAL_TAIL_MAX", 0)
+        assert labels() == expected
 
 
 def _brute_close_pairs(codes: list[int], max_dist: int = 3) -> int:
@@ -214,26 +223,33 @@ def _brute_kcore(edges: list[tuple[int, int]], k: int) -> tuple[int, int]:
     ),
     k=st.integers(2, 4),
 )
-def test_kcore_peel_matches_brute_force(spark, edges, k):
+def test_kcore_peel_matches_brute_force(spark, monkeypatch, edges, k):
     """The distributed semi-join peel reaches the same fixpoint as a plain
     adjacency-dict peel on random graphs, for any k — the k-core is unique,
-    so (core nodes, core edges) must agree exactly. ``local_tail_max=0``
-    keeps every round distributed: these graphs all fit the default local
-    tail, which would peel them in driver memory."""
+    so (core nodes, core edges) must agree exactly. ``cache.LOCAL_TAIL_MAX``
+    0 keeps every round distributed until the core is empty (an empty
+    generation is within any bound): these graphs all fit the default
+    local tail, which would peel them in driver memory."""
+    from distributed_system_mapreduce_spark import cache
     from distributed_system_mapreduce_spark.cache import release_checkpoint
     from distributed_system_mapreduce_spark.operators.graph import (
         _symmetric,
         kcore_peel,
     )
 
+    monkeypatch.setattr(cache, "LOCAL_TAIL_MAX", 0)
     canon = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
     if not canon:
         return
     pairs = spark.createDataFrame(canon, "src long, dst long")
-    core, n_dir_edges, _rounds = kcore_peel(_symmetric(pairs), k, local_tail_max=0)
-    got = (core.select("src").distinct().count(), n_dir_edges // 2)
-    release_checkpoint(core)
-    assert got == _brute_kcore(canon, k), (canon, k)
+    core, n_dir_edges, _rounds = kcore_peel(_symmetric(pairs), k)
+    if isinstance(core, list):
+        assert core == []
+        core_nodes = 0
+    else:
+        core_nodes = core.select("src").distinct().count()
+        release_checkpoint(core)
+    assert (core_nodes, n_dir_edges // 2) == _brute_kcore(canon, k), (canon, k)
 
 
 def _py_winnow(text: str, k: int, w: int) -> set:

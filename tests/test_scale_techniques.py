@@ -78,14 +78,17 @@ def test_jaccard_cap_inert_at_test_scale(spark):
     assert with_guard == without
 
 
-def test_connected_components_deep_chain(spark):
+def test_connected_components_deep_chain(spark, monkeypatch):
     """A 100-node chain (diameter 99) must converge within the pointer-
     jumping bound (~log2 rounds), far under CC_MAX_ROUNDS — the guard
-    against O(diameter) label propagation on pathological components."""
+    against O(diameter) label propagation on pathological components.
+    ``cache.LOCAL_TAIL_MAX`` 0 keeps the loop distributed."""
+    from distributed_system_mapreduce_spark import cache
     from distributed_system_mapreduce_spark.operators.dedup import (
         connected_components,
     )
 
+    monkeypatch.setattr(cache, "LOCAL_TAIL_MAX", 0)
     n = 100
     pairs = [(i, i + 1) for i in range(n - 1)]
     edges = spark.createDataFrame(
@@ -96,11 +99,15 @@ def test_connected_components_deep_chain(spark):
     assert {r.label for r in labels} == {0}
 
 
-def test_connected_components_multi_component(spark):
+def test_connected_components_multi_component(spark, monkeypatch):
+    """Distributed loop (``cache.LOCAL_TAIL_MAX`` 0): each component is
+    labeled with its min id."""
+    from distributed_system_mapreduce_spark import cache
     from distributed_system_mapreduce_spark.operators.dedup import (
         connected_components,
     )
 
+    monkeypatch.setattr(cache, "LOCAL_TAIL_MAX", 0)
     pairs = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)]
     edges = spark.createDataFrame(
         pairs + [(b, a) for a, b in pairs], "src long, dst long"
