@@ -23,6 +23,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -331,8 +332,8 @@ def connected_components(
 
     An edge list that passes ``cache.local_rows`` is labeled in driver
     memory instead (:func:`_min_labels`, the same min-id labels), and the
-    labels come back as a local frame with the distributed path's columns
-    and types.
+    labels come back as a local frame (a LocalRelation) with the
+    distributed path's columns and types.
     """
     spark = edges_directed.sparkSession
     edges_directed = edges_directed.persist()
@@ -340,8 +341,12 @@ def connected_components(
         n_edges = edges_directed.count()
         rows = local_rows(edges_directed, n_edges)
         if rows is not None:
+            labels = _min_labels(rows)
+            # from an Arrow table, not a list: a LocalRelation, where a
+            # list becomes an RDD that every action re-pickles through
+            # Python workers
             return spark.createDataFrame(
-                list(_min_labels(rows).items()),
+                pa.table([list(labels), list(labels.values())], ["id", "label"]),
                 edges_directed.select(
                     F.col("src").alias("id"), F.col("dst").alias("label")
                 ).schema,
