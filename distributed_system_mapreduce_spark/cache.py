@@ -22,7 +22,8 @@ fixpoint loop (``fixpoint``), its shuffle width (``loop_parts``) and its
 local tail (``local_rows`` under ``LOCAL_TAIL_MAX``), and the width of
 compute-bound stages (``task_slots``, ``spread``). This is the only
 module that calls ``localCheckpoint``, reads a partition count from the
-session or collects a graph loop's frame to finish it locally.
+session or collects a graph loop's frame to finish it locally, and
+``local_frame`` is the one way rows computed on the driver become a frame.
 
 ``clear_tracked_caches`` releases all three. Long-lived sessions (bench
 loops, notebooks) call it between logical phases; short-lived jobs never
@@ -43,7 +44,10 @@ import os
 import stat
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 from pyspark.storagelevel import StorageLevel
 
 _TRACKED: list[DataFrame] = []
@@ -261,6 +265,24 @@ def local_rows(df: DataFrame, n_rows: int) -> "list[tuple] | None":
     if n_rows > LOCAL_TAIL_MAX:
         return None
     return [tuple(r) for r in df.collect()]
+
+
+def local_frame(spark, rows, schema: "str | DataType") -> DataFrame:
+    """A frame of the driver-side ``rows`` (tuples in column order) with
+    ``schema``, a DDL string or a ``StructType``; empty ``rows`` give an
+    empty frame of that schema.
+
+    The rows go through a pyarrow Table, which Spark plans as a
+    ``LocalRelation``: actions over it read the rows in the JVM. A frame
+    built from a Python list is instead an RDD whose every action pickles
+    the rows through Python workers again.
+    """
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    arrays = [pa.array(c, f.type) for c, f in zip(cols, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def fixpoint(

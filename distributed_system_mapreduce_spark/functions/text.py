@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import checkpoint_generation, track
+from ..cache import checkpoint_generation, local_frame, track
 from ..plans.topk import salted_topk
 from ..exactmath import round_div, round_div_long, sql_round_div
 from ..registry import register
@@ -182,13 +182,13 @@ def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _marker_rows() -> list[tuple[str, str]]:
+    """(pred_lang, word) for every marker word, one order for both engines."""
+    return [(lang, w) for lang, ws in sorted(LANG_MARKERS.items()) for w in ws]
+
+
 def _markers_sql_values() -> str:
-    rows = [
-        f"('{lang}', '{w}')"
-        for lang, ws in sorted(LANG_MARKERS.items())
-        for w in ws
-    ]
-    return ", ".join(rows)
+    return ", ".join(f"('{lang}', '{w}')" for lang, w in _marker_rows())
 
 
 @register(
@@ -224,13 +224,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     under test. Deterministic: argmax ties break lexicographically.
     """
     docs = load(spark, sf_dir, "documents")
-    # inline VALUES instead of createDataFrame: stays JVM-side (no Python
-    # serialization round-trip, which costs seconds on first use per session)
-    markers = spark.sql(
-        "select * from values "
-        + _markers_sql_values()
-        + " as t(pred_lang, word)"
-    )
+    markers = local_frame(spark, _marker_rows(), "pred_lang string, word string")
     tok = tokens(docs).select("doc_id", "lang", "word")
     hits = (
         tok.join(F.broadcast(markers), "word")

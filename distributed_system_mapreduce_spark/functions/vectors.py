@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import session_memo, spread, track
+from ..cache import local_frame, session_memo, spread, track
 from ..exactmath import round_div, sql_round_div
 from ..plans.topk import salted_topk
 from ..registry import register
@@ -504,7 +504,7 @@ def lloyd_centroids(
     for _ in range(iters):
         mean = lloyd_recompute(ivf_assign(emb_d, cents, round_scores=False))
         rows = mean.collect()  # k x dim doubles — bounded, driver-sized
-        cents = spark.createDataFrame(rows, "cent_id long, cent_emb array<double>")
+        cents = local_frame(spark, rows, "cent_id long, cent_emb array<double>")
     return cents
 
 
@@ -512,7 +512,7 @@ def lloyd_recompute(assign: DataFrame) -> DataFrame:
     """ONE Lloyd recompute stage: per-cell elementwise mean (posexplode →
     partial-agg shuffle of k·dim rows), L2-renormalized. The loop body of
     :func:`lloyd_centroids`, exposed so the registry-wide plan sweep can
-    screen the iterative trainer's per-round plan (VERDICT r6 #7)."""
+    screen the iterative trainer's per-round plan."""
     return (
         assign.select("cent_id", F.posexplode("embedding").alias("pos", "val"))
         .groupBy("cent_id", "pos")
@@ -558,11 +558,10 @@ def kmeans_parallel_centroids(
     model = KMeans(
         k=k, maxIter=max_iter, seed=seed, initMode="k-means||"
     ).fit(feats)
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cents = emb_d.sparkSession.createDataFrame(
-        rows, "cent_id long, cent_emb array<double>"
+    cents = local_frame(
+        emb_d.sparkSession,
+        [(i, c.tolist()) for i, c in enumerate(model.clusterCenters())],
+        "cent_id long, cent_emb array<double>",
     )
     return cents.select(
         "cent_id",
@@ -992,13 +991,12 @@ def _pca_power_summary(spark: SparkSession, sf_dir: str):
 
 def pca_power_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw spectral summary (n_vecs, n_iters, eigenvalue, top_dim,
-    top_weight) — the pre-r12 shape of ``embed_pca_top_component``, kept
-    as the exact-pin witness in tests/test_parity.py (the registered query
-    now emits the oracled bound row instead, VERDICT r11 #2)."""
+    top_weight) of the embedding table: the exact-pin witness in
+    tests/test_parity.py for the solve behind ``embed_pca_top_component``,
+    which emits the oracled bound row instead."""
     n, dim, lam, top_dim, top_w, _, _ = _pca_power_summary(spark, sf_dir)
-    return spark.createDataFrame(
-        [(n, PCA_ITERS if dim else 0, round(lam, 4), top_dim,
-          round(top_w, 3))],
+    return local_frame(
+        spark, [(n, PCA_ITERS if dim else 0, round(lam, 4), top_dim, round(top_w, 3))],
         "n_vecs bigint, n_iters int, eigenvalue double, "
         "top_dim int, top_weight double",
     )
@@ -1028,9 +1026,8 @@ def embed_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-local on the 64×64 matrix — looping over a dim² table is driver
     work, not cluster work, at any corpus size.
 
-    Promoted in r12 from rows-only to the hash-checked quality-bound shape
-    (VERDICT r11 #2, the HLL/CMS/PQ split): the eigensolve itself has no
-    SQL twin, but the total variance trace(G)/n IS plain SQL (sum of
+    Hash-checked through a quality-bound shape: the eigensolve itself has
+    no SQL twin, but the total variance trace(G)/n IS plain SQL (sum of
     squared components over n), and the claims that pin the solve are
     engine-portable mathematical invariants of the top eigenvalue of a PSD
     matrix —
@@ -1047,7 +1044,7 @@ def embed_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     n, dim, lam, _, _, trace, vnorm2 = _pca_power_summary(spark, sf_dir)
     total_var = trace / n if n else 0.0
-    # Bound slack scaled to the Gram quantization (ADVICE r12): entries are
+    # Bound slack scaled to the Gram quantization: entries are
     # rounded to PCA_QUANT_DP decimals before the eigensolve, which can
     # perturb a PSD matrix by E with ||E||_2 ≤ dim·(half-ulp), letting the
     # Rayleigh value drift past the exact-trace bounds by up to ~dim·||E||/n
@@ -1056,8 +1053,8 @@ def embed_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor_ok = (lam >= total_var / dim - quant_eps) if dim else True
     ceil_ok = lam <= total_var + quant_eps
     unit_ok = abs(vnorm2 - 1.0) <= 1e-9
-    return spark.createDataFrame(
-        [(n, dim, round(total_var, 2), floor_ok, ceil_ok, unit_ok)],
+    return local_frame(
+        spark, [(n, dim, round(total_var, 2), floor_ok, ceil_ok, unit_ok)],
         "n_vecs bigint, dim int, total_var double, var_floor_ok boolean, "
         "var_ceil_ok boolean, unit_norm_ok boolean",
     )
@@ -1767,15 +1764,14 @@ def pq_codebooks(emb: DataFrame, sf_dir: str) -> DataFrame:
     corpus (cached across rounds): the quantizer needs a distribution
     sample, not every vector — at 100 TB this is the difference between
     an hours-long trainer and a constant-time one. ``emb`` is a projection
-    of ``sf_dir``'s embeddings; the trained rows are a session memo keyed
-    by its plan (Lloyd is deterministic given the seed centroids and
-    sample), so every caller in a session gets the identical codebook
-    without re-running the loop.
+    of ``sf_dir``'s embeddings; the trained codebook frame (a local frame
+    of M·K rows) is a session memo keyed by its plan (Lloyd is
+    deterministic given the seed centroids and sample), so every caller in
+    a session gets the same frame without re-running the loop.
     """
     spark = emb.sparkSession
-    schema = "m int, cent_id long, ce array<double>"
 
-    def train() -> list:
+    def train() -> DataFrame:
         sub = pq_subvectors(
             emb.filter(F.pmod(F.col("vec_id"), F.lit(PQ_TRAIN_MOD)) == 0)
         )
@@ -1793,14 +1789,16 @@ def pq_codebooks(emb: DataFrame, sf_dir: str) -> DataFrame:
                 f"{PQ_M * PQ_K} (corpus lacks dense vec_ids 0..{PQ_K - 1})"
             )
         for _ in range(PQ_ITERS):
-            rows = pq_recompute(pq_assign(sub, cents)).collect()
-            cents = spark.createDataFrame(rows, schema)
-        return rows
+            cents = local_frame(
+                spark,
+                pq_recompute(pq_assign(sub, cents)).collect(),
+                "m int, cent_id long, ce array<double>",
+            )
+        return cents
 
-    rows = session_memo(
+    return session_memo(
         spark, _pq_memo_name("pq_codebooks", emb), sf_dir, train
     )
-    return spark.createDataFrame(rows, schema)
 
 
 def pq_codes(emb: DataFrame, sf_dir: str) -> DataFrame:
@@ -1815,12 +1813,10 @@ def pq_codes(emb: DataFrame, sf_dir: str) -> DataFrame:
     ``sv`` subvector arrays into the cache — the exact float payload PQ
     exists to shed — and the first materialization would pay to store it.
 
-    The tracked FRAME (not just the codebook rows) is a session memo: the
-    codebook underneath is rebuilt from driver rows via createDataFrame,
-    whose RDD-backed plan never canonicalizes equal across calls, so the
-    CacheManager cannot dedupe repeat encodes — without the frame memo
-    every caller persisted and re-materialized its own copy of the
-    identical code table (measured ~2.3 s/call at sf0.1).
+    The tracked frame is a session memo keyed like the codebook's: every
+    caller in a session gets the same DataFrame object, so the code table
+    is one CacheManager entry, built and materialized once, and a repeat
+    call neither re-plans the encode nor re-runs ``track``'s plan compare.
     """
     return session_memo(
         emb.sparkSession,

@@ -23,12 +23,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import (
     fixpoint,
+    local_frame,
     local_rows,
     loop_parts,
     session_memo,
@@ -332,8 +332,8 @@ def connected_components(
 
     An edge list that passes ``cache.local_rows`` is labeled in driver
     memory instead (:func:`_min_labels`, the same min-id labels), and the
-    labels come back as a local frame (a LocalRelation) with the
-    distributed path's columns and types.
+    labels come back as a ``cache.local_frame`` with the distributed
+    path's columns and types.
     """
     spark = edges_directed.sparkSession
     edges_directed = edges_directed.persist()
@@ -341,16 +341,8 @@ def connected_components(
         n_edges = edges_directed.count()
         rows = local_rows(edges_directed, n_edges)
         if rows is not None:
-            labels = _min_labels(rows)
-            # from an Arrow table, not a list: a LocalRelation, where a
-            # list becomes an RDD that every action re-pickles through
-            # Python workers
-            return spark.createDataFrame(
-                pa.table([list(labels), list(labels.values())], ["id", "label"]),
-                edges_directed.select(
-                    F.col("src").alias("id"), F.col("dst").alias("label")
-                ).schema,
-            )
+            schema = edges_directed.selectExpr("src id", "dst label").schema
+            return local_frame(spark, _min_labels(rows).items(), schema)
         parts = loop_parts(spark, n_edges)
         edges = edges_directed.repartition(parts, "src")
         nodes = (

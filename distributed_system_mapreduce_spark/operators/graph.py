@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..cache import (
     checkpoint_generation,
     fixpoint,
+    local_frame,
     local_rows,
     loop_parts,
     release_checkpoint,
@@ -805,11 +806,15 @@ def kcore_peel(
     start, or after any round) the remaining rounds run in driver memory
     (:func:`_kcore_peel_local`) with the same round counter and budget, so
     the result and ``rounds`` equal the all-distributed peel's. ``n_edges``,
-    if given, must be the exact row count of ``edges_sym``.
+    if given, must be the exact row count of ``edges_sym``; a start within
+    the bound then costs one collect and no checkpoint.
     """
     spark = edges_sym.sparkSession
     if n_edges is None:
         n_edges = edges_sym.count()
+    rows = local_rows(edges_sym, n_edges)
+    if rows is not None:
+        return _kcore_peel_local(rows, k, n_edges, 0, max_rounds)
     # AQE stays on around this loop: with adaptive planning off the
     # alive-list semi-joins plan statically against the checkpoint's
     # unknown size and demote to full-width sort-merge joins.
@@ -841,8 +846,8 @@ def _kcore_summary(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             release_checkpoint(core)
         return (k, core_nodes, n_edges // 2, rounds)
 
-    return spark.createDataFrame(
-        [session_memo(spark, f"kcore_summary:{k}", sf_dir, build)],
+    return local_frame(
+        spark, [session_memo(spark, f"kcore_summary:{k}", sf_dir, build)],
         "k int, n_core_nodes long, n_core_edges long, n_rounds int",
     )
 
@@ -1797,10 +1802,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     if lab is not None:
         sizes_c = Counter(lab.values())
         top = sorted(sizes_c.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-        return spark.createDataFrame(
-            [(int(c), int(n)) for c, n in top],
-            "community bigint, size bigint",
-        )
+        return local_frame(spark, top, "community bigint, size bigint")
     edges = track(sym)
     labels = lpa_labels(edges, LPA_ROUNDS)
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("size"))

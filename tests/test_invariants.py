@@ -269,10 +269,12 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
     ``localCheckpoint``, ``cache.loop_parts`` is the only reader of
     ``spark.sql.shuffle.partitions`` (session.py only sets it in the
     builder config), ``cache.task_slots`` the only reader of
-    ``defaultParallelism``, and ``LOCAL_TAIL_MAX`` is assigned and named
+    ``defaultParallelism``, ``cache.local_frame`` the only caller of
+    ``createDataFrame``, and ``LOCAL_TAIL_MAX`` is assigned and named
     only in cache.py with no ``local_tail_max`` parameter anywhere else,
-    so the checkpoint lifecycle, each partition-sizing rule and the graph
-    loops' local-tail bound live in one place."""
+    so the checkpoint lifecycle, each partition-sizing rule, the way back
+    from driver rows to a frame and the graph loops' local-tail bound
+    live in one place."""
     import ast
     import pathlib
 
@@ -281,6 +283,7 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
     )
     key = "spark.sql.shuffle.partitions"
     checkpoint_calls, readers, slot_readers, setters = set(), [], [], set()
+    frame_builders = []
     bound_assigners, bound_users, bound_params = set(), set(), []
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
@@ -303,6 +306,11 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
                 and getattr(node.func, "attr", None) == "localCheckpoint"
             ):
                 checkpoint_calls.add(rel)
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "createDataFrame"
+            ):
+                frame_builders.append(scope(node))
             if isinstance(node, ast.Assign) and any(
                 getattr(t, "id", None) == "LOCAL_TAIL_MAX" for t in node.targets
             ):
@@ -329,10 +337,33 @@ def test_checkpoints_and_loop_sizing_live_in_cache():
     assert checkpoint_calls == {"cache.py"}
     assert readers == [("cache.py", "loop_parts")]
     assert slot_readers == [("cache.py", "task_slots")]
+    assert frame_builders == [("cache.py", "local_frame")]
     assert setters == {"session.py"}
     assert bound_assigners == {"cache.py"}
     assert bound_users == {"cache.py"}
     assert [s for s in bound_params if s[0] != "cache.py"] == []
+
+
+@pytest.mark.parametrize("n_rows", [2, 0])
+def test_local_frame_is_a_local_relation_with_the_declared_schema(spark, n_rows):
+    """Driver rows (or none) over int/long/double/boolean/string/
+    array<double> columns come back, from a DDL string or a StructType,
+    with the declared schema as the JVM reports it and as an analyzed
+    LocalRelation (not an RDD that every action re-pickles through Python
+    workers)."""
+    from pyspark.sql.types import DataType
+
+    from distributed_system_mapreduce_spark.cache import local_frame
+
+    ddl = "a int, b long, c double, d boolean, e string, f array<double>"
+    rows = [(1, 2**40, 0.5, True, "x", [1.0, -2.5]), (None, 3, None, False, None, [])]
+    rows = rows[:n_rows]
+    for schema in (ddl, DataType.fromDDL(ddl)):
+        df = local_frame(spark, rows, schema)
+        assert df.select("*").schema == DataType.fromDDL(ddl)
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        assert [tuple(r) for r in df.collect()] == rows
 
 
 def test_loop_parts_boundaries(spark):

@@ -88,3 +88,27 @@ def test_empty_core_local(spark, monkeypatch):
     loc = _peel(monkeypatch, sym, 2)
     assert loc[:2] == ([], 0)
     assert loc == _peel(monkeypatch, sym, 2, bound=0)
+
+
+def test_local_start_takes_no_checkpoint(spark, monkeypatch):
+    """A start within the bound, given the edge count the caller holds,
+    is one collect: no generation is checkpointed. The forced-distributed
+    peel of the same graph checkpoints and agrees with it."""
+    pairs = spark.createDataFrame(
+        _rand_pairs(random.Random(5), 30, 80), "src long, dst long"
+    )
+    sym = _symmetric(pairs)
+    n_sym = sym.count()
+    calls = []
+    real = type(sym).localCheckpoint  # the session's concrete frame class
+
+    def spy(df, *args, **kwargs):
+        calls.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(sym), "localCheckpoint", spy)
+    core, n, rounds = kcore_peel(sym, 2, n_edges=n_sym)
+    assert isinstance(core, list)
+    assert calls == []
+    assert (sorted(core), n, rounds) == _peel(monkeypatch, sym, 2, bound=0)
+    assert calls

@@ -563,10 +563,9 @@ def test_pagerank_rounds_compile_to_broadcast_joins(spark):
 
 
 def test_pq_codes_frame_is_memoized_per_session(spark):
-    """r11: the tracked code table must be ONE frame per (session, corpus)
-    — the codebook LocalRelation under it never canonicalizes equal across
-    createDataFrame calls, so without the frame memo every caller persisted
-    and re-materialized its own copy of identical codes."""
+    """The tracked code table is ONE frame object per (session, corpus):
+    every caller gets the memoized DataFrame, so the codes are planned,
+    tracked and materialized once per session."""
     from pyspark.sql import functions as F
 
     from distributed_system_mapreduce_spark.functions.vectors import pq_codes
