@@ -271,7 +271,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts in their OWN projection, then round_div_long over plain
     # attribute refs. Inlined, round_div_long's guard branches duplicated
     # split()/filter() ~40x per row AND the huge lambda-bearing Project
-    # fell out of whole-stage codegen (plans/r17/text_quality_score_*).
+    # fell out of whole-stage codegen.
     # CollapseProject keeps the split because each count is expensive and
     # multiply-referenced. Values are bit-identical: same arithmetic on
     # the same intermediates.
@@ -605,8 +605,7 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r17 optimization round (guide §1.2): name the shingle counts before
     # the round — inlined, round_div_long's branches re-ran
     # array_distinct() (a per-row hash-set build) ~6x and size(tg) ~16x
-    # per row (plans/r17/text_repetition_score_before.txt). Same values,
-    # one distinct-build per row.
+    # per row. Same values, one distinct-build per row.
     counted = shingled.select(
         "doc_id",
         (F.size("tg") - F.size(F.array_distinct("tg"))).alias("n_dup"),

@@ -278,10 +278,8 @@ def sql_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial minimum per (part, upstream partition) instead of every
     (part, supplier) offer row the rank window shuffled — neutral at
     sf0.1 (interleaved A/B 1.18 vs 1.15 s), strictly fewer shuffled rows
-    as suppliers-per-part grows (plan diff:
-    plans/r17/sql_min_cost_supplier_{before,after}.txt). Two shuffles
-    total (rollup, per-part min); the part/supplier lookups on the
-    result are broadcast.
+    as suppliers-per-part grows. Two shuffles total (rollup, per-part
+    min); the part/supplier lookups on the result are broadcast.
     """
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")

@@ -529,7 +529,7 @@ def window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference inside round_div_long's guard branches became its OWN
     # window expression — the Window operator computed 28 separate
     # count(1) and 10 rank/row_number columns per partition
-    # (plans/r17/window_percent_rank_before.txt, _we0.._we52).
+    # (_we0.._we52).
     ranked = orders.select(
         "o_orderkey",
         (F.rank().over(w) - 1).alias("rk"),

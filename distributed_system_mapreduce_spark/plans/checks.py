@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame
 #: decode via mapInPandas). Single-sourced here because two consumers need
 #: it and must not drift: tests/test_plans.py whitelists these in the
 #: BatchEvalPython ban sweep, and bench.py gives them a wider regression
-#: band (Python worker-pool variance flagged at unchanged commits in r13
-#: AND r14 — VERDICT r14 #4).
+#: band (Python worker-pool timing varies between runs of unchanged code).
 ARROW_BATCH_QUERIES = frozenset(
     {
         "dedup_embed_cosine",
@@ -54,11 +53,11 @@ def assert_not_in_plan(df: DataFrame, *fragments: str, mode: str = "formatted") 
 
 
 # ---------------------------------------------------------------------------
-# Logical-plan tree inspection (VERDICT r8 #3): the string plan can't tell a
-# bounded metadata window from a corpus-sized one, so these helpers parse the
+# Logical-plan tree inspection: the string plan can't tell a bounded
+# metadata window from a corpus-sized one, so these helpers parse the
 # optimized plan's JSON tree and adjudicate every UNPARTITIONED Window node —
-# the exact class (WindowExec "moving all data to a single partition") that
-# hid the global-ntile plans for four rounds.
+# the class (WindowExec "moving all data to a single partition") that sorts
+# its whole input in one task.
 # ---------------------------------------------------------------------------
 
 import json
@@ -132,11 +131,10 @@ def global_window_violations(df: DataFrame) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# BNLJ build-side boundedness (VERDICT r13 #7): the plan sweep's
-# BroadcastNestedLoopJoin whitelist grew to ~57 entries — large enough that
-# a stale entry could hide a real quadratic regression. Membership is now a
-# DECLARATION of which structural bound the broadcast side carries, and the
-# sweep verifies the physical plan actually exhibits it.
+# BNLJ build-side boundedness: a BroadcastNestedLoopJoin whitelist entry is
+# a DECLARATION of which structural bound the broadcast side carries, and
+# the sweep verifies the physical plan actually exhibits it, so a stale
+# entry cannot hide a quadratic join.
 # ---------------------------------------------------------------------------
 
 import re as _re
@@ -154,8 +152,7 @@ PROBE_BOUND_COLS = frozenset(
 _CONSTFILTER_RE = _re.compile(r"\((\w+)#\d+L? (?:=|<|<=) \d+\)")
 # Capture the FULL keys=[...] list, not just the first key: an aggregate
 # keyed by (label, doc_id) is NOT bounded by label's arity — its output
-# scales with the corpus — so it must not classify as grouped:label
-# (ADVICE r14 low: the stale-whitelist regression this check polices).
+# scales with the corpus — so it must not classify as grouped:label.
 _GROUPED_RE = _re.compile(
     r"(?:Hash|Sort|ObjectHash)Aggregate\(keys=\[([^\]]*)\]"
 )

@@ -6,12 +6,22 @@ SF_DIR = "/root/testdata/sf0.01"
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="session")
-def spark():
+def suite_session(app_name: str):
+    """The session the suite shares. tools/explain_dump.py writes the
+    plan-shape ledger in it too, so the ledger and the plan sweep see one
+    planner. Plan metadata prints whole (Spark abbreviates each value past
+    100 characters by default) so every FileScan's ReadSchema can be
+    counted."""
     from distributed_system_mapreduce_spark.session import get_spark
 
-    s = get_spark("dsmr-tests", cpus=8, shuffle_partitions=8)
-    yield s
+    s = get_spark(app_name, cpus=8, shuffle_partitions=8)
+    s.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    return s
+
+
+@pytest.fixture(scope="session")
+def spark():
+    yield suite_session("dsmr-tests")
 
 
 @pytest.fixture(scope="session")

@@ -6,10 +6,20 @@ pruning, broadcast joins, map-side partial aggregation, top-k short-circuit.
 
 from __future__ import annotations
 
+import json
+import os
+import sys
+
+from distributed_system_mapreduce_spark import cache
 from distributed_system_mapreduce_spark.plans import assert_in_plan, explain_str
 from distributed_system_mapreduce_spark.registry import QUERIES
 
-from conftest import SF_DIR
+from conftest import SF_DIR, SF_SMOKE
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+)
+import explain_dump  # noqa: E402
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -100,9 +110,9 @@ def test_dedup_survivors_anti_join(spark):
 
 def test_decontaminate_join_is_equi_and_aqe_sized(spark):
     # the contamination check is a shingle equi-join with NO forced
-    # broadcast hint (ADVICE r3: this fixture's doc_id%10 eval split is
-    # ~10% of corpus shingles — O(corpus), so a forced broadcast would OOM
-    # at scale); AQE picks broadcast only when the eval side is measured
+    # broadcast hint (this fixture's doc_id%10 eval split is ~10% of
+    # corpus shingles — O(corpus), so a forced broadcast would OOM at
+    # scale); AQE picks broadcast only when the eval side is measured
     # small. What must hold at any scale: an equi join, never a cartesian.
     plan = explain_str(QUERIES["corpus_decontaminate"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan, plan
@@ -178,9 +188,10 @@ def test_ewma_stays_jvm_side(spark):
 
 
 # ---------------------------------------------------------------------------
-# Registry-wide sweep (VERDICT r4 #3): every registered query's physical plan
-# is screened for the two scale-killers — cartesian joins and Python row
-# evaluation — not just the ~15 queries with bespoke guards above.
+# Registry-wide sweep: every registered query's physical plan is screened
+# for the two scale-killers — cartesian joins and Python row evaluation —
+# not just the ~15 queries with bespoke guards above, and its operator
+# signature is checked against the plan-shape ledger (PLAN_SHAPES.json).
 # ---------------------------------------------------------------------------
 
 import pytest
@@ -190,16 +201,15 @@ from distributed_system_mapreduce_spark.registry import QUERIES as _ALL
 #: sf for plan construction: plan SHAPE (join strategy class, Python nodes)
 #: is structural, not size-dependent — non-equi joins can only ever plan as
 #: BNLJ/cartesian, and Python nodes are in the logical plan — so the
-#: cheapest fixture suffices.
-_PLAN_SF = "/root/testdata/sf0.001"
+#: cheapest fixture suffices. The plan-shape ledger is written at it too.
+_PLAN_SF = SF_SMOKE
 
 #: Queries whose plans legitimately contain a BroadcastNestedLoopJoin. The
 #: invariant for membership: the BROADCAST side is bounded by a constant
-#: independent of corpus size. Since r14 (VERDICT r13 #7) membership is a
-#: DECLARATION of the structural bound class the broadcast branch carries,
-#: verified against the physical plan by
-#: test_bnlj_build_sides_structurally_bounded — a new entry cannot
-#: silently whitelist an unbounded broadcast. Classes (see
+#: independent of corpus size. Membership is a DECLARATION of the
+#: structural bound class the broadcast branch carries, verified against the
+#: physical plan by test_bnlj_build_sides_structurally_bounded — a new entry
+#: cannot silently whitelist an unbounded broadcast. Classes (see
 #: plans.checks._classify_build_side):
 #:   "scalar"        — grouping-free aggregate (1-row combine: corpus size,
 #:                     avgdl, span, vocabulary totals, min/max epoch)
@@ -287,14 +297,44 @@ _SCALAR_COMBINE_BNLJ = {
 #: applyInPandas; the size-guarded all-pairs fallback; multimodal fake-codec
 #: decode via mapInPandas). Row-at-a-time BatchEvalPython is banned even
 #: here. Single-sourced in plans.checks (bench.py's wider variance band
-#: uses the same set — VERDICT r14 #4).
+#: uses the same set).
 from distributed_system_mapreduce_spark.plans.checks import (
     ARROW_BATCH_QUERIES as _ARROW_BATCH_OK,
 )
 
 
+@pytest.fixture(scope="module")
+def plan_ledger() -> dict:
+    with open(explain_dump.LEDGER) as fh:
+        return json.load(fh)
+
+
+def _shape_moved(name: str, want: dict | None, got: dict) -> str:
+    """Mismatch message: each operator count and scan width that moved."""
+    if want is None:
+        moved = ["no ledger line"]
+    else:
+        moved = [
+            f"{op} {want['ops'].get(op, 0)} -> {got['ops'].get(op, 0)}"
+            for op in sorted(set(want["ops"]) | set(got["ops"]))
+            if want["ops"].get(op, 0) != got["ops"].get(op, 0)
+        ]
+        if want["scan_cols"] != got["scan_cols"]:
+            moved.append(
+                f"FileScan columns {want['scan_cols']} -> {got['scan_cols']}"
+            )
+    return (
+        f"{name}: plan shape differs from PLAN_SHAPES.json "
+        f"({', '.join(moved)}); if the change is intended, regenerate it "
+        "with `python tools/explain_dump.py` and review the diff"
+    )
+
+
 @pytest.mark.parametrize("name", sorted(_ALL))
-def test_registry_plan_sweep(name, spark):
+def test_registry_plan_sweep(name, spark, plan_ledger):
+    # released first, as the ledger's writer does: a shared frame an
+    # earlier query left cached would plan as an InMemoryTableScan
+    cache.clear_tracked_caches()
     plan = explain_str(_ALL[name](spark, _PLAN_SF), mode="simple")
     assert "CartesianProduct" not in plan, f"{name}: raw cartesian"
     if name not in _SCALAR_COMBINE_BNLJ:
@@ -308,26 +348,67 @@ def test_registry_plan_sweep(name, spark):
         for tok in ("ArrowEvalPython", "MapInPandas",
                     "FlatMapGroupsInPandas"):
             assert tok not in plan, f"{name}: undeclared Python node {tok}"
+    shape = explain_dump.plan_shape(plan)
+    want = plan_ledger.get(name)
+    assert shape == want, _shape_moved(name, want, shape)
 
 
-def test_plan_sweep_whitelists_are_not_stale(spark):
+def test_plan_shape_reads_a_fixed_plan():
+    """Tree glyphs and ``*(n)`` marks are stripped, section headers are
+    skipped, a cached subtree counts, and a ReadSchema counts only its
+    top-level fields."""
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan isFinalPlan=false
++- *(2) HashAggregate(keys=[k#1L], functions=[count(1)])
+   +- Exchange hashpartitioning(k#1L, 8), ENSURE_REQUIREMENTS, [plan_id=7]
+      +- *(1) BroadcastHashJoin [k#1L], [k#5L], Inner, BuildRight, false
+         :- *(1) Filter isnotnull(k#1L)
+         :  +- FileScan parquet [k#1L,doc#2,tags#3] Batched: true, DataFilters: [isnotnull(k#1L)], Format: Parquet, PushedFilters: [IsNotNull(k)], ReadSchema: struct<k:bigint,doc:struct<id:bigint,meta:struct<a:int,b:string>>,tags:array<struct<t:string,w:decimal(12,2)>>>
+         +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=5]
+            +- InMemoryTableScan [k#5L]
+                  +- InMemoryRelation [k#5L, v#6], StorageLevel(disk, memory, deserialized, 1 replicas)
+                        +- *(1) Project [k#5L, v#6]
+                           +- *(1) ColumnarToRow
+                              +- FileScan parquet [k#5L,v#6] Batched: true, Format: Parquet, ReadSchema: struct<k:bigint,v:double>
+
+"""
+    assert explain_dump.plan_shape(plan) == {
+        "ops": {
+            "AdaptiveSparkPlan": 1,
+            "BroadcastExchange": 1,
+            "BroadcastHashJoin": 1,
+            "ColumnarToRow": 1,
+            "Exchange": 1,
+            "FileScan": 2,
+            "Filter": 1,
+            "HashAggregate": 1,
+            "InMemoryRelation": 1,
+            "InMemoryTableScan": 1,
+            "Project": 1,
+        },
+        "scan_cols": [2, 3],
+    }
+
+
+def test_plan_sweep_whitelists_are_not_stale(spark, plan_ledger):
     """Every whitelisted name must still exist — a renamed/removed query
-    silently shrinking the sweep's deny-list is itself a regression."""
+    silently shrinking the sweep's deny-list is itself a regression — and
+    the plan-shape ledger holds exactly one line per registered query."""
     assert set(_SCALAR_COMBINE_BNLJ) <= set(_ALL), (
         set(_SCALAR_COMBINE_BNLJ) - set(_ALL)
     )
     assert _ARROW_BATCH_OK <= set(_ALL), _ARROW_BATCH_OK - set(_ALL)
+    assert set(plan_ledger) == set(_ALL), set(plan_ledger) ^ set(_ALL)
 
 
 @pytest.mark.parametrize("name", sorted(_SCALAR_COMBINE_BNLJ))
 def test_bnlj_build_sides_structurally_bounded(name, spark):
-    """VERDICT r13 #7: whitelist membership is a declaration, not a free
-    pass — every BroadcastNestedLoopJoin the query's physical plan grows
-    must exhibit at least one of the entry's DECLARED structural bound
-    classes on its build side (scalar combine, limit, local frame,
-    constant key-probe filter, declared bounded-arity group key). A stale
-    or over-broad entry whose broadcast branch lost its bound fails
-    here."""
+    """Whitelist membership is a declaration, not a free pass — every
+    BroadcastNestedLoopJoin the query's physical plan grows must exhibit
+    at least one of the entry's DECLARED structural bound classes on its
+    build side (scalar combine, limit, local frame, constant key-probe
+    filter, declared bounded-arity group key). A stale or over-broad entry
+    whose broadcast branch lost its bound fails here."""
     from distributed_system_mapreduce_spark.plans.checks import (
         bnlj_build_classes,
     )
@@ -343,8 +424,8 @@ def test_bnlj_build_sides_structurally_bounded(name, spark):
 
 
 def test_bnlj_grouped_class_requires_sole_key():
-    """ADVICE r14: an aggregate keyed by (label, doc_id) must NOT classify
-    as grouped:label — its output scales with the corpus, not with label
+    """An aggregate keyed by (label, doc_id) must NOT classify as
+    grouped:label — its output scales with the corpus, not with label
     arity. grouped:<col> is emitted only when <col> is the SOLE grouping
     key."""
     from distributed_system_mapreduce_spark.plans.checks import (
@@ -385,9 +466,9 @@ def test_bnlj_checker_flags_unbounded_counterexample(spark):
 
 
 # ---------------------------------------------------------------------------
-# Iterative-query internals (VERDICT r6 #7): driver-loop queries return a
-# LocalTableScan, so the sweep above never sees the stages that actually run
-# at scale — the per-round peel/assign/recompute frames and the candidate
+# Iterative-query internals: driver-loop queries return a LocalTableScan,
+# so the sweep above never sees the stages that actually run at scale —
+# the per-round peel/assign/recompute frames and the candidate
 # pools. Each family exposes its loop body as a helper; screen those plans
 # with the same assertions (explicit per-frame allowances for bounded
 # broadcast grids and declared Arrow batches).
@@ -473,12 +554,11 @@ def test_iterative_internal_plan_sweep(label, spark):
 
 
 # ---------------------------------------------------------------------------
-# Unpartitioned-window sweep (VERDICT r8 #3): BNLJ and Python nodes were
-# already swept, but the global-ntile class — a Window with NO partitionBy
-# sorting corpus-sized input in one task — survived four rounds unseen.
-# This sweep parses the optimized logical plan tree and flags every
-# unpartitioned Window whose input is not structurally bounded (salted
-# top-k survivors, chunked-scan metadata rollups, post-limit frames —
+# Unpartitioned-window sweep: the string sweeps above cannot see the
+# global-ntile class — a Window with NO partitionBy sorting corpus-sized
+# input in one task. This sweep parses the optimized logical plan tree and
+# flags every unpartitioned Window whose input is not structurally bounded
+# (salted top-k survivors, chunked-scan metadata rollups, post-limit frames —
 # see plans.checks._spine_is_bounded), unless the query is whitelisted
 # below with a bounded-rollup justification.
 # ---------------------------------------------------------------------------
@@ -551,10 +631,10 @@ def test_global_window_whitelists_are_not_stale(spark):
 
 
 def test_pagerank_rounds_compile_to_broadcast_joins(spark):
-    """r11 (VERDICT r10 #5): below the vertex bound the PageRank loop hints
-    the rank broadcast explicitly, so every round is a BroadcastHashJoin in
-    the STATIC plan — no round waits for AQE to materialize a shuffle
-    before converting, and no SortMergeJoin appears anywhere in the loop."""
+    """Below the vertex bound the PageRank loop hints the rank broadcast
+    explicitly, so every round is a BroadcastHashJoin in the STATIC plan —
+    no round waits for AQE to materialize a shuffle before converting, and
+    no SortMergeJoin appears anywhere in the loop."""
     from distributed_system_mapreduce_spark.operators.graph import PR_ITERS
 
     plan = explain_str(QUERIES["graph_pagerank"](spark, SF_DIR))
@@ -582,8 +662,8 @@ def test_pq_codes_frame_is_memoized_per_session(spark):
 
 
 def test_bfs_levels_keep_explicit_repartition(spark):
-    """r13 (VERDICT r12 #2): the per-level repartition(level_parts, node)
-    ahead of each frontier distinct was AUDITED, not assumed — dropping it
+    """The per-level repartition(level_parts, node) ahead of each
+    frontier distinct was AUDITED, not assumed — dropping it
     (plain distinct: default-width exchange per level) measured SLOWER at
     sf0.1 (the probe script is in git: ``git show
     70a868e:tools/probe_bfs_r13.py``; 64-wide reducers under the
@@ -602,8 +682,8 @@ def test_bfs_levels_keep_explicit_repartition(spark):
 
     del BFS_HOPS  # depth no longer appears in the final plan's assertion
 
-    # r16 optimization round: the penultimate frontier is localCheckpointed
-    # (diamond dedup — see _BFS_CKPT_GEN), so the REGISTERED query's final
+    # The penultimate frontier is localCheckpointed (diamond dedup — see
+    # _BFS_CKPT_GEN), so the REGISTERED query's final
     # plan shows the repartition only for the levels past the checkpoint;
     # the per-level shape that runs at scale is screened on the exposed
     # bfs_level builder (the kcore_round pattern).

@@ -1,58 +1,99 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for named queries to plans/<round>/ files.
+"""Write PLAN_SHAPES.json, the per-query physical-plan ledger.
 
-Optimization-round evidence helper (guide §1: capture the plan BEFORE and
-AFTER every change). Usage:
+Each registered query is built at the smoke fixture in the test suite's
+session (``tests/conftest.py``: ``SF_SMOKE``, ``suite_session``) with every
+tracked cache released first, so a shared frame that an earlier query left
+cached cannot turn into an ``InMemoryTableScan``. Its ``simple`` explain
+string (the initial AQE plan: planning only, no execution of the final
+plan) is reduced to a signature by :func:`plan_shape`. The ledger holds one
+line per query, sorted by name, so a plan change is a one-line diff.
 
-    python tools/explain_dump.py --out plans/r16 --tag before q1 q2 ...
-    python tools/explain_dump.py --out plans/r16 --tag after  q1 q2 ...
+``tests/test_plans.py::test_registry_plan_sweep`` recomputes every
+signature from the plan string it already screens and fails, naming the
+moved operator counts, when one differs from the ledger.
 
-``--sf-dir`` defaults to the sf0.1 fixture, the bench scale.
-
-Writes ``<out>/<query>_<tag>.txt`` holding the formatted physical plan
-(initial AQE plan — plan SHAPE is what the round's claims are checked
-against; runtime re-optimization only merges/splits exchanges' partitions).
-Plan capture only invokes the planner, not execution, so it is safe to run
-on the bench host between timed sweeps.
+Usage: python tools/explain_dump.py
 """
 
 from __future__ import annotations
 
-import argparse
+import collections
+import json
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LEDGER = os.path.join(ROOT, "PLAN_SHAPES.json")
+
+# tree glyphs (``+-``, ``:-``, ``:``) and the ``*(n)`` codegen-stage mark
+_LINE_PREFIX = re.compile(r"^[\s:+\-]*(?:\*\(\d+\)\s*)?")
+
+
+def _top_level_fields(schema: str) -> int:
+    """Top-level field count of a ``struct<...>`` schema string; commas
+    nested in ``<>`` (struct/array/map) or ``()`` (decimal) do not count."""
+    depth, fields = 0, 0
+    for ch in schema[len("struct<"):]:
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            if depth == 0:
+                break
+            depth -= 1
+        elif ch == "," and depth == 0:
+            fields += 1
+        elif fields == 0:
+            fields = 1
+    return fields
+
+
+def plan_shape(plan: str) -> dict:
+    """The signature of a ``simple`` explain string: ``ops`` counts each
+    operator name (the first word of every plan line, ``*(n)`` and tree
+    glyphs stripped, ``== ... ==`` section headers skipped; an
+    ``InMemoryRelation``'s cached subtree counts too), and ``scan_cols``
+    lists the top-level column count of each ``FileScan``'s ReadSchema,
+    sorted."""
+    ops: collections.Counter[str] = collections.Counter()
+    scan_cols = []
+    for line in plan.splitlines():
+        body = _LINE_PREFIX.sub("", line)
+        op = re.match(r"\w+", body)
+        if op is None:
+            continue
+        ops[op.group()] += 1
+        if op.group() == "FileScan" and "ReadSchema: struct<" in body:
+            scan_cols.append(
+                _top_level_fields(body.split("ReadSchema: ", 1)[1])
+            )
+    return {"ops": dict(sorted(ops.items())), "scan_cols": sorted(scan_cols)}
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--tag", required=True)
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("queries", nargs="+")
-    args = ap.parse_args()
+    sys.path.insert(0, ROOT)
+    sys.path.insert(0, os.path.join(ROOT, "tests"))
+    from conftest import SF_SMOKE, suite_session
 
+    from distributed_system_mapreduce_spark import cache
+    from distributed_system_mapreduce_spark.plans import explain_str
     from distributed_system_mapreduce_spark.registry import QUERIES
-    from distributed_system_mapreduce_spark.session import get_spark
 
-    unknown = [q for q in args.queries if q not in QUERIES]
-    if unknown:
-        sys.exit(f"unknown queries: {unknown}")
-
-    os.makedirs(args.out, exist_ok=True)
-    spark = get_spark("dsmr-explain")
+    spark = suite_session("dsmr-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    for name in args.queries:
-        df = QUERIES[name](spark, args.sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        path = os.path.join(args.out, f"{name}_{args.tag}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
-        print(f"wrote {path} ({len(plan)} chars)")
+    shapes = {}
+    for name, build in QUERIES.items():
+        cache.clear_tracked_caches()
+        shapes[name] = plan_shape(explain_str(build(spark, SF_SMOKE), "simple"))
     spark.stop()
+    lines = [
+        f"{json.dumps(name)}: {json.dumps(shapes[name], sort_keys=True)}"
+        for name in sorted(shapes)
+    ]
+    with open(LEDGER, "w") as fh:
+        fh.write("{\n" + ",\n".join(lines) + "\n}\n")
+    print(f"wrote {LEDGER} ({len(lines)} queries)")
 
 
 if __name__ == "__main__":
