@@ -131,30 +131,23 @@ def blocked_pair_scores(emb_d: DataFrame, n_blocks: int = 8) -> DataFrame:
     return grouped.applyInPandas(fn, "a_id long, b_id long, score double")
 
 
-def ivf_assign(
-    emb_d: DataFrame, cents: DataFrame, round_scores: bool = True
-) -> DataFrame:
+def ivf_assign(emb_d: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, embedding, cent_id): nearest-centroid assignment by cosine.
 
     One broadcast join against the k-row centroid table, then an argmax per
     vec_id as ``max(struct(cscore, -cent_id, embedding))`` — a partial-
     aggregable groupBy, NOT a window: each input partition collapses its k
     candidate rows per vector map-side before the exchange, so the shuffle
-    carries n rows (not n·k) and nothing is sorted. Ties on score break to
-    the smallest cent_id (via the negated struct field), matching the
-    ``order by cscore desc, cent_id`` the DuckDB oracles use.
-
-    ``round_scores`` rounds scores to 4 dp before the argmax so assignment
-    matches oracle SQL that rounds; trainers pass False to keep full
-    precision between iterations.
+    carries n rows, not n·k. Scores round to 4 dp before the argmax and
+    ties break to the smallest cent_id (via the negated struct field),
+    matching the ``order by round(dot, 4) desc, cent_id`` the DuckDB
+    oracles use.
     """
     score = dot(F.col("embedding"), F.col("cent_emb"))
-    if round_scores:
-        score = F.round(score, 4)
     scored = (
         spread(emb_d)
         .crossJoin(F.broadcast(cents))
-        .select("vec_id", "embedding", "cent_id", score.alias("cscore"))
+        .select("vec_id", "embedding", "cent_id", F.round(score, 4).alias("cscore"))
     )
     best = F.max(
         F.struct(
@@ -468,109 +461,6 @@ def sim_ann_ivf_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lloyd_centroids(
-    emb_d: DataFrame, k: int = 16, iters: int = 3
-) -> DataFrame:
-    """Spherical k-means (Lloyd) centroid training for the IVF index.
-
-    The classic iterative-algorithm shape on Spark (≙ a chained sequence of
-    MapReduce jobs in the reference model — one assign + one recompute job
-    per iteration):
-
-      seed       = first ``k`` vectors by vec_id (deterministic);
-      assign     = broadcast the k×dim centroid table, nearest-by-cosine via
-                   one map-side join (no shuffle of the big side);
-      recompute  = per-cell elementwise mean (posexplode → groupBy(cell, pos)
-                   — one partial-agg shuffle of k·dim rows), L2-renormalized
-                   so dot products stay cosines.
-
-    Centroids are collected to the driver between iterations — they are
-    k·dim doubles (bounded, driver-sized BY DESIGN, like MLlib's own
-    KMeans), which keeps each iteration's plan flat instead of compounding
-    lineage. Cells that lose all members drop out (k can shrink).
-
-    Returns (cent_id, cent_emb array<double>). Every call trains anew:
-    the registered IVF queries (sim_ann_ivf, sim_ivf_nprobe_sweep,
-    sim_ivfpq_recall) use fixed seeded centroids instead
-    (:func:`seeded_ivf_assign`, or the first 16 vectors), so this trainer
-    serves quality comparisons, not query traffic.
-    """
-    spark = emb_d.sparkSession
-    cents = (
-        emb_d.orderBy("vec_id")
-        .limit(k)
-        .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb"))
-    )
-    for _ in range(iters):
-        mean = lloyd_recompute(ivf_assign(emb_d, cents, round_scores=False))
-        rows = mean.collect()  # k x dim doubles — bounded, driver-sized
-        cents = local_frame(spark, rows, "cent_id long, cent_emb array<double>")
-    return cents
-
-
-def lloyd_recompute(assign: DataFrame) -> DataFrame:
-    """ONE Lloyd recompute stage: per-cell elementwise mean (posexplode →
-    partial-agg shuffle of k·dim rows), L2-renormalized. The loop body of
-    :func:`lloyd_centroids`, exposed so the registry-wide plan sweep can
-    screen the iterative trainer's per-round plan."""
-    return (
-        assign.select("cent_id", F.posexplode("embedding").alias("pos", "val"))
-        .groupBy("cent_id", "pos")
-        .agg(F.avg("val").alias("m"))
-        .groupBy("cent_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("raw")
-        )
-        .select(
-            "cent_id",
-            F.transform(
-                "raw", lambda x: x / l2_norm(F.col("raw"))
-            ).alias("cent_emb"),
-        )
-    )
-
-
-def kmeans_parallel_centroids(
-    emb_d: DataFrame, k: int = 16, max_iter: int = 3, seed: int = 7
-) -> DataFrame:
-    """k-means|| centroid training for the IVF index via ``pyspark.ml``.
-
-    Drop-in alternative trainer to :func:`lloyd_centroids` with the same
-    ``(cent_id, cent_emb array<double>)`` output contract. MLlib's KMeans
-    uses the k-means|| initializer (Bahmani et al., VLDB 2012 — O(log k)
-    oversampling passes instead of k sequential k-means++ rounds, the
-    initializer built for exactly the 1000-executor case) followed by
-    JVM-side distributed Lloyd iterations, so at large k / 100 TB it
-    replaces our per-iteration driver round-trip with a single fit.
-    Centroids are L2-renormalized so IVF dot products remain cosines.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = emb_d.select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias(
-            "features"
-        )
-    )
-    model = KMeans(
-        k=k, maxIter=max_iter, seed=seed, initMode="k-means||"
-    ).fit(feats)
-    cents = local_frame(
-        emb_d.sparkSession,
-        [(i, c.tolist()) for i, c in enumerate(model.clusterCenters())],
-        "cent_id long, cent_emb array<double>",
-    )
-    return cents.select(
-        "cent_id",
-        F.transform(
-            "cent_emb", lambda x: x / l2_norm(F.col("cent_emb"))
-        ).alias("cent_emb"),
-    )
-
-
 def _bucket_expr_spark() -> Column:
     """4-bit sign-projection LSH bucket over the first 4 dimensions."""
     bits = [
@@ -685,93 +575,144 @@ RECALL_NPROBE = 4
 RECALL_N_CENTS = 16
 
 
-def exact_topk_baseline(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = RECALL_N_QUERIES,
-    k: int = RECALL_K,
-) -> DataFrame:
-    """(q_id, v_id): exact rounded-dot top-``k`` neighbors of the first
-    ``n_queries`` query vectors — the shared ground-truth arm of every
-    ANN-quality query (sim_ann_recall / sim_quantized_recall /
-    sim_pq_recall, which all use the same 30x10 truth set).
-
-    ONE tracked builder so the brute-force arm — the expensive half of a
-    recall audit — is computed once per session: all three recall queries
-    construct the identical logical plan through this function, and Spark's
-    CacheManager dedupes identical plans, so the persist covers the family
-    (VERDICT r7 #3). Determinism armor as everywhere: scores round to 4 dp
-    with a v_id tiebreak BEFORE ranking; per-query selection is the salted
-    two-stage top-k (a plain q_id window would sort a full corpus slice per
-    query in one task). The persisted frame is n_queries*k rows.
-    """
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-    )
-    scored = (
-        spread(emb)
-        .join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("v_id"),
-            F.round(dot(F.col("qe"), F.col("e")), 4).alias("s"),
-        )
-    )
-    return track(
-        salted_topk(
-            scored,
-            [F.desc("s"), F.asc("v_id")],
-            k,
-            salt_col="v_id",
-            group_cols=("q_id",),
-        ).select("q_id", "v_id")
-    )
-
-
-def seeded_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cent_id): the corpus assigned to its nearest of the
-    RECALL_N_CENTS deterministic seed centroids — the IVF list membership
-    every seeded ANN-quality query shares (sim_ann_recall,
-    sim_ivf_nprobe_sweep, sim_ivfpq_recall). One tracked builder, so the
-    assignment scan runs once per session (plan-identical across callers,
-    like exact_topk_baseline). Scores round 4 dp with a cent_id tiebreak
-    before the argmin rank; at Lloyd-trained deployment scale the
-    assignment is ``ivf_assign``'s min_by — this seeded variant keeps the
-    rank form so DuckDB oracles can mirror it verbatim."""
+def _recall_inputs(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """The ANN recall family's inputs over ``sf_dir``'s embeddings: the
+    corpus ``(vec_id, e)``, the RECALL_N_CENTS seed centroids
+    ``(cent_id, ce)`` and the RECALL_N_QUERIES query vectors
+    ``(q_id, qe)``. Seeds and queries are the lowest vec_ids, so every
+    engine picks the same ones; ``_RECALL_CTE``/``_IVF_CTE`` are the DuckDB
+    twins."""
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     cents = emb.filter(F.col("vec_id") < RECALL_N_CENTS).select(
         F.col("vec_id").alias("cent_id"), F.col("e").alias("ce")
     )
-    rn = F.row_number().over(
-        Window.partitionBy("vec_id").orderBy(F.desc("s"), F.asc("cent_id"))
+    q = emb.filter(F.col("vec_id") < RECALL_N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
     )
+    return emb, cents, q
+
+
+def _dot_scored(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, q_id, v_id, s): the exact score of each (query, vector) row
+    of ``df`` (which carries ``qe`` and ``e``), rounded to 4 dp so float
+    noise cannot flip a rank in one engine only."""
+    return df.select(
+        *keep,
+        "q_id",
+        F.col("vec_id").alias("v_id"),
+        F.round(dot(F.col("qe"), F.col("e")), 4).alias("s"),
+    )
+
+
+def _top_ids(
+    scored: DataFrame,
+    k: int,
+    id_col: str = "v_id",
+    by: "tuple[str, ...]" = ("q_id",),
+) -> DataFrame:
+    """(*by, id_col): the top-``k`` ids per ``by`` group by ``s`` desc, then
+    id asc — the salted two-stage top-k (a plain per-query window would
+    sort a whole corpus slice per query in one task)."""
+    return salted_topk(
+        scored, [F.desc("s"), F.asc(id_col)], k, salt_col=id_col, group_cols=by
+    ).select(*by, id_col)
+
+
+def _hit_count(approx: DataFrame, exact: DataFrame, *by: str) -> DataFrame:
+    """(*by, h): how many exact top-k pairs ``approx`` also ranks top-k,
+    overall or per ``by`` group. Both sides hold each (q_id, v_id) at most
+    once per group."""
+    return (
+        approx.join(exact, ["q_id", "v_id"], "left_semi")
+        .groupBy(*by)
+        .agg(F.count(F.lit(1)).alias("h"))
+    )
+
+
+def _recall_at_k(hits: DataFrame) -> DataFrame:
+    """(k, n_queries, recall) from a one-row ``h`` hit count."""
+    return hits.select(
+        F.lit(RECALL_K).alias("k"),
+        F.lit(RECALL_N_QUERIES).alias("n_queries"),
+        round_div(
+            F.col("h"), F.lit(RECALL_N_QUERIES * RECALL_K), 4
+        ).alias("recall"),
+    )
+
+
+def exact_topk_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(q_id, v_id): exact rounded-dot top-RECALL_K neighbors of the
+    RECALL_N_QUERIES query vectors — the ground-truth arm of every ANN
+    recall query.
+
+    ONE tracked builder so the brute-force arm — the expensive half of a
+    recall audit — is computed once per session: every recall query builds
+    the identical logical plan through this function, and Spark's
+    CacheManager dedupes identical plans, so one persist covers the
+    family. The persisted frame is RECALL_N_QUERIES * RECALL_K rows.
+    """
+    emb, _, q = _recall_inputs(spark, sf_dir)
+    scored = spread(emb).join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
+    return track(_top_ids(_dot_scored(scored), RECALL_K))
+
+
+def seeded_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cent_id): the corpus assigned by :func:`ivf_assign` to its
+    nearest of the RECALL_N_CENTS seed centroids — the IVF list membership
+    of the seeded recall queries (sim_ann_recall, sim_ivf_nprobe_sweep,
+    sim_ivfpq_recall). One tracked builder, plan-identical across callers,
+    so the assignment runs once per session."""
+    emb, cents, _ = _recall_inputs(spark, sf_dir)
     return track(
-        spread(emb)
-        .crossJoin(F.broadcast(cents))
+        ivf_assign(
+            emb.withColumnRenamed("e", "embedding"),
+            cents.withColumnRenamed("ce", "cent_emb"),
+        ).select("vec_id", "cent_id")
+    )
+
+
+def _ranked_probe(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
+    """(q_id, qe, cent_id, rn): each query's ``depth`` nearest seed
+    centroids, ranked 1..depth by rounded dot desc, then cent_id — the IVF
+    probe lists. The grid is RECALL_N_QUERIES x RECALL_N_CENTS rows, so the
+    rank window is bounded; ``rn`` stays for sweeps that cut it per level."""
+    _, cents, q = _recall_inputs(spark, sf_dir)
+    rn = F.row_number().over(
+        Window.partitionBy("q_id").orderBy(F.desc("s"), F.asc("cent_id"))
+    )
+    return (
+        q.crossJoin(F.broadcast(cents))
         .select(
-            "vec_id",
-            "cent_id",
-            F.round(dot(F.col("e"), F.col("ce")), 4).alias("s"),
+            "q_id", "qe", "cent_id",
+            F.round(dot(F.col("qe"), F.col("ce")), 4).alias("s"),
         )
         .withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cent_id")
+        .filter(F.col("rn") <= depth)
+        .select("q_id", "qe", "cent_id", "rn")
     )
 
 
-@register(
-    "sim_ann_recall",
-    oracle=f"""
-    with emb as (
+def _probe_candidates(
+    spark: SparkSession, sf_dir: str, probe: DataFrame
+) -> DataFrame:
+    """``probe`` rows joined to every member of their probed list, the
+    query vector itself excluded."""
+    return (
+        seeded_ivf_assign(spark, sf_dir)
+        .join(F.broadcast(probe), "cent_id")
+        .filter(F.col("vec_id") != F.col("q_id"))
+    )
+
+
+#: DuckDB twin of :func:`_recall_inputs`' corpus and queries and of
+#: :func:`exact_topk_baseline` (``exact``), shared by every recall oracle.
+_RECALL_CTE = f"""
+    emb as (
       select vec_id, embedding::DOUBLE[] as e from embeddings),
-    cents as (
-      select vec_id as cent_id, e as ce from emb
-      where vec_id < {RECALL_N_CENTS}),
     q as (
       select vec_id as q_id, e as qe from emb
       where vec_id < {RECALL_N_QUERIES}),
@@ -782,7 +723,15 @@ def seeded_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                order by round(list_dot_product(qe, v.e), 4) desc, v.vec_id
              ) as rn
       from emb v join q on v.vec_id <> q.q_id),
-    exact as (select q_id, v_id from exact_scored where rn <= {RECALL_K}),
+    exact as (select q_id, v_id from exact_scored where rn <= {RECALL_K})"""
+
+#: DuckDB twin of the seed centroids, :func:`seeded_ivf_assign` and the
+#: unfiltered :func:`_ranked_probe` (callers cut ``rn``); follows
+#: ``_RECALL_CTE``.
+_IVF_CTE = f"""
+    cents as (
+      select vec_id as cent_id, e as ce from emb
+      where vec_id < {RECALL_N_CENTS}),
     assign_scored as (
       select e.vec_id, c.cent_id,
              row_number() over (
@@ -791,16 +740,19 @@ def seeded_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
              ) as rn
       from emb e cross join cents c),
     assign as (select vec_id, cent_id from assign_scored where rn = 1),
-    probe_scored as (
+    probe as (
       select q.q_id, q.qe, c.cent_id,
              row_number() over (
                partition by q.q_id
                order by round(list_dot_product(q.qe, c.ce), 4) desc, c.cent_id
              ) as rn
-      from q cross join cents c),
-    probe as (
-      select q_id, qe, cent_id from probe_scored
-      where rn <= {RECALL_NPROBE}),
+      from q cross join cents c)"""
+
+
+@register(
+    "sim_ann_recall",
+    oracle=f"""
+    with {_RECALL_CTE},{_IVF_CTE},
     approx_scored as (
       select p.q_id, a.vec_id as v_id,
              row_number() over (
@@ -810,7 +762,7 @@ def seeded_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
       from probe p
       join assign a using (cent_id)
       join emb v on v.vec_id = a.vec_id
-      where a.vec_id <> p.q_id),
+      where p.rn <= {RECALL_NPROBE} and a.vec_id <> p.q_id),
     approx as (select q_id, v_id from approx_scored where rn <= {RECALL_K}),
     hits as (
       select count(*) as h from exact join approx using (q_id, v_id))
@@ -834,54 +786,11 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the expensive one — there it becomes a sampled audit (recall over
     a query SAMPLE), which this query shape already is (30 queries).
     """
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cents = emb.filter(F.col("vec_id") < RECALL_N_CENTS).select(
-        F.col("vec_id").alias("cent_id"), F.col("e").alias("ce")
-    )
-    q = emb.filter(F.col("vec_id") < RECALL_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-    )
-    rnk = lambda part, score, tie: F.row_number().over(  # noqa: E731
-        Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
-    )
-    exact = exact_topk_baseline(spark, sf_dir)
-    assign = seeded_ivf_assign(spark, sf_dir)
-    probe = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id", "qe", "cent_id",
-            F.round(dot(F.col("qe"), F.col("ce")), 4).alias("s"),
-        )
-        .withColumn("rn", rnk("q_id", "s", "cent_id"))
-        .filter(F.col("rn") <= RECALL_NPROBE)
-        .select("q_id", "qe", "cent_id")
-    )
-    approx = salted_topk(
-        assign.join(F.broadcast(probe), "cent_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(emb.select(F.col("vec_id"), F.col("e")), "vec_id")
-        .select(
-            "q_id",
-            F.col("vec_id").alias("v_id"),
-            F.round(dot(F.col("qe"), F.col("e")), 4).alias("s"),
-        ),
-        [F.desc("s"), F.asc("v_id")],
-        RECALL_K,
-        salt_col="v_id",
-        group_cols=("q_id",),
-    ).select("q_id", "v_id")
-    hits = exact.join(approx, ["q_id", "v_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("h")
-    )
-    return hits.select(
-        F.lit(RECALL_K).alias("k"),
-        F.lit(RECALL_N_QUERIES).alias("n_queries"),
-        round_div(
-            F.col("h"), F.lit(RECALL_N_QUERIES * RECALL_K), 4
-        ).alias("recall"),
-    )
+    emb, _, _ = _recall_inputs(spark, sf_dir)
+    probe = _ranked_probe(spark, sf_dir, RECALL_NPROBE)
+    cand = _probe_candidates(spark, sf_dir, probe).join(emb, "vec_id")
+    approx = _top_ids(_dot_scored(cand), RECALL_K)
+    return _recall_at_k(_hit_count(approx, exact_topk_baseline(spark, sf_dir)))
 
 
 #: driver-local eigensolve parameters: fixed round count, deterministic
@@ -1164,20 +1073,10 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_quantized_recall",
     oracle=f"""
-    with emb as (select vec_id, embedding::DOUBLE[] as e from embeddings),
+    with {_RECALL_CTE},
     {_QUANT_CTE},
-    q as (select vec_id as q_id, e as qv from emb
-          where vec_id < {RECALL_N_QUERIES}),
     qq as (select vec_id as q_id, qe as qqe from qemb
            where vec_id < {RECALL_N_QUERIES}),
-    exact_scored as (
-      select q.q_id, v.vec_id as v_id,
-             row_number() over (
-               partition by q.q_id
-               order by round(list_dot_product(q.qv, v.e), 4) desc, v.vec_id
-             ) as rn
-      from emb v join q on v.vec_id <> q.q_id),
-    exact as (select q_id, v_id from exact_scored where rn <= {RECALL_K}),
     quant_scored as (
       select qq.q_id, v.vec_id as v_id,
              row_number() over (
@@ -1199,8 +1098,8 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the int8-quantized ranking against the exact float
     top-10, over the first RECALL_N_QUERIES query vectors — the measured
-    quality bound that must accompany sim_quantized_topk's 4× memory lever
-    (VERDICT r3 "Next round" #7, extending sim_ann_recall's pattern).
+    quality bound that must accompany sim_quantized_topk's 4× memory lever,
+    in sim_ann_recall's shape.
 
     Both arms share determinism armor with sim_ann_recall: the float arm
     rounds scores to 4 dp with a v_id tiebreak; the int8 arm needs none —
@@ -1212,30 +1111,17 @@ def sim_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     qq = quant.filter(F.col("vec_id") < RECALL_N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("qe").alias("qqe")
     )
-    exact = exact_topk_baseline(spark, sf_dir)
     qdot = F.expr(
         "aggregate(zip_with(qe, qqe, (x, y) -> cast(x as bigint) * y),"
         " cast(0 as bigint), (a, x) -> a + x)"
     )
-    quant_arm = salted_topk(
+    quant_arm = _top_ids(
         spread(quant)
         .join(F.broadcast(qq), F.col("vec_id") != F.col("q_id"))
         .select("q_id", F.col("vec_id").alias("v_id"), qdot.alias("s")),
-        [F.desc("s"), F.asc("v_id")],
         RECALL_K,
-        salt_col="v_id",
-        group_cols=("q_id",),
-    ).select("q_id", "v_id")
-    hits = exact.join(quant_arm, ["q_id", "v_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("h")
     )
-    return hits.select(
-        F.lit(RECALL_K).alias("k"),
-        F.lit(RECALL_N_QUERIES).alias("n_queries"),
-        round_div(
-            F.col("h"), F.lit(RECALL_N_QUERIES * RECALL_K), 4
-        ).alias("recall"),
-    )
+    return _recall_at_k(_hit_count(quant_arm, exact_topk_baseline(spark, sf_dir)))
 
 
 @register(
@@ -1647,8 +1533,6 @@ PQ_ITERS = 2
 #: PQ practice (FAISS trains on ~100k of a billion vectors): quantizer
 #: quality needs a distribution sample, not the corpus.
 PQ_TRAIN_MOD = 4
-PQ_QUERIES = 30
-PQ_TOPK = 10
 #: ADC shortlist size for exact re-ranking: the production pattern keeps
 #: the top-R by compressed score and re-scores only those R true vectors.
 PQ_RERANK = 50
@@ -1729,8 +1613,8 @@ def pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
 
 def pq_recompute(assign: DataFrame) -> DataFrame:
     """ONE PQ-Lloyd recompute stage: per-(subspace, code) elementwise mean
-    (posexplode → partial-agg shuffle of M·K·subdim rows). Exposed, like
-    lloyd_recompute, so the plan sweep screens the trainer's loop body."""
+    (posexplode → partial-agg shuffle of M·K·subdim rows). Exposed so the
+    plan sweep screens the trainer's loop body."""
     return (
         assign.select("m", "cent_id", F.posexplode("sv").alias("pos", "val"))
         .groupBy("m", "cent_id", "pos")
@@ -1755,8 +1639,8 @@ def pq_codebooks(emb: DataFrame, sf_dir: str) -> DataFrame:
     """Train all M codebooks in ONE distributed Lloyd loop: the cell key is
     (m, cent_id), so adding subspaces never adds rounds — every iteration
     is one broadcast-join assignment plus one M·K·subdim-row shuffle,
-    identical in shape to ``lloyd_centroids`` but euclidean and
-    unnormalized (PQ quantizes raw subvectors, not directions).
+    euclidean and unnormalized (PQ quantizes raw subvectors, not
+    directions).
 
     Codebooks collect to the driver between rounds: M·K·(dim/M) = K·dim
     doubles — bounded by design, exactly MLlib's KMeans contract. Training
@@ -1830,7 +1714,47 @@ def pq_codes(emb: DataFrame, sf_dir: str) -> DataFrame:
     )
 
 
-#: recall@{PQ_TOPK} floor the exhaustive-ADC + exact-re-rank path must
+def _pq_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(q_id, m, cent_id, part): each query's ADC lookup table — the
+    partial dot of its m-th subvector with every codeword of subspace m,
+    M·K rows per query (kilobytes; both ADC callers broadcast it)."""
+    emb, _, q = _recall_inputs(spark, sf_dir)
+    return (
+        pq_subvectors(q.select("q_id", F.col("qe").alias("e")), id_col="q_id")
+        .join(F.broadcast(pq_codebooks(emb, sf_dir)), "m")
+        .select(
+            "q_id", "m", "cent_id",
+            dot(F.col("sv"), F.col("ce")).alias("part"),
+        )
+    )
+
+
+def _adc_hits(spark: SparkSession, sf_dir: str, part: DataFrame) -> DataFrame:
+    """One-row (n_exact, h) frame: ``h`` of the ``n_exact`` exact
+    top-RECALL_K pairs survive ADC search over ``part``, one
+    (q_id, vec_id, part) LUT entry per candidate and subspace. The
+    candidate's ADC score is the rounded sum of its M entries; the top
+    PQ_RERANK by that score are re-scored exactly (only R true vectors per
+    query are re-read), and the top RECALL_K of those are the answer.
+
+    The recall denominator is the exact set's true size, not
+    RECALL_N_QUERIES * RECALL_K: on a corpus with fewer than RECALL_K + 1
+    vectors the literal would deflate recall."""
+    emb, _, q = _recall_inputs(spark, sf_dir)
+    shortlist = _top_ids(
+        part.groupBy("q_id", "vec_id").agg(F.round(F.sum("part"), 4).alias("s")),
+        PQ_RERANK,
+        id_col="vec_id",
+    )
+    rerank = shortlist.join(emb, "vec_id").join(F.broadcast(q), "q_id")
+    approx = _top_ids(_dot_scored(rerank), RECALL_K)
+    exact = exact_topk_baseline(spark, sf_dir)
+    return exact.agg(F.count(F.lit(1)).alias("n_exact")).crossJoin(
+        _hit_count(approx, exact)
+    )
+
+
+#: recall@RECALL_K floor the exhaustive-ADC + exact-re-rank path must
 #: hold — the hash-CHECKED quality claim (measured 0.7267 at sf0.01; a
 #: broken codebook, code table, LUT join, or re-rank scores near 0). Same
 #: margin class as IVFPQ_RECALL_FLOOR, sitting above it because the
@@ -1839,105 +1763,41 @@ PQ_RECALL_FLOOR = 0.50
 
 
 def _pq_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row (n_exact, h) frame for exhaustive-ADC PQ search: ``h`` of
-    the ``n_exact`` exact top-{PQ_TOPK} pairs survive quantization +
-    shortlist + exact re-rank. Shared by the registered bound query and
-    the quality tests (which assert on the raw recall ``h / n_exact``).
-    """
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cents = pq_codebooks(emb, sf_dir)
-    codes = pq_codes(emb, sf_dir)
-
-    q = emb.filter(F.col("vec_id") < PQ_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e")
-    )
-    rnk = lambda part, score, tie: F.row_number().over(  # noqa: E731
-        Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
-    )
-
-    # per-query LUT: partial dot of each query subvector vs each codeword
-    lut = (
-        pq_subvectors(q, id_col="q_id")
-        .join(F.broadcast(cents), "m")
-        .select(
-            "q_id", "m", "cent_id",
-            dot(F.col("sv"), F.col("ce")).alias("part"),
-        )
-    )
-    shortlist = salted_topk(
-        codes.join(F.broadcast(lut), ["m", "cent_id"])
+    """:func:`_adc_hits` of exhaustive-ADC PQ search: every corpus vector
+    but the query is a candidate. Shared by the registered bound query and
+    the quality tests (which assert on the raw recall ``h / n_exact``)."""
+    emb, _, _ = _recall_inputs(spark, sf_dir)
+    part = (
+        pq_codes(emb, sf_dir)
+        .join(F.broadcast(_pq_lut(spark, sf_dir)), ["m", "cent_id"])
         .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.round(F.sum("part"), 4).alias("s")),
-        [F.desc("s"), F.asc("vec_id")],
-        PQ_RERANK,
-        salt_col="vec_id",
-        group_cols=("q_id",),
-    ).select("q_id", "vec_id")
-    # exact re-rank of the R-candidate shortlist: only R true vectors per
-    # query are ever re-read — the IVFPQ deployment shape.
-    approx = (
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(q.select("q_id", F.col("e").alias("qe"))), "q_id")
-        .select(
-            "q_id",
-            F.col("vec_id").alias("v_id"),
-            F.round(dot(F.col("qe"), F.col("e")), 4).alias("s"),
-        )
-        .withColumn("rn", rnk("q_id", "s", "v_id"))
-        .filter(F.col("rn") <= PQ_TOPK)
-        .select("q_id", "v_id")
     )
-    exact = exact_topk_baseline(spark, sf_dir, n_queries=PQ_QUERIES, k=PQ_TOPK)
-    # recall denominator = the exact set's true size, not PQ_QUERIES*PQ_TOPK:
-    # on a corpus with < PQ_TOPK+1 vectors the literal would silently
-    # deflate recall (ADVICE r7)
-    return exact.agg(
-        F.count(F.lit(1)).alias("n_exact"),
-    ).crossJoin(
-        exact.join(approx, ["q_id", "v_id"], "left_semi").agg(
-            F.count(F.lit(1)).alias("h")
-        )
-    )
+    return _adc_hits(spark, sf_dir, part)
 
 
 @register(
     "sim_pq_recall",
     oracle=f"""
-    with emb as (
-      select vec_id, embedding::DOUBLE[] as e from embeddings),
-    q as (
-      select vec_id as q_id, e as qe from emb
-      where vec_id < {PQ_QUERIES}),
-    exact_scored as (
-      select q_id, v.vec_id as v_id,
-             row_number() over (
-               partition by q_id
-               order by round(list_dot_product(qe, v.e), 4) desc, v.vec_id
-             ) as rn
-      from emb v join q on v.vec_id <> q.q_id)
+    with {_RECALL_CTE}
     select cast({PQ_M} as int) as m_subspaces,
            cast({PQ_K} as int) as k_codes,
-           cast({PQ_QUERIES} as int) as n_queries,
+           cast({RECALL_N_QUERIES} as int) as n_queries,
            cast(count(*) as bigint) as n_exact,
            true as recall_floor_met
-    from exact_scored where rn <= {PQ_TOPK}
+    from exact
     """,
 )
 def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@{PQ_TOPK} of product-quantized ADC search against the exact
-    brute-force top-{PQ_TOPK}, averaged over {PQ_QUERIES} query vectors —
-    the engine measures its own compression loss as a first-class query
-    (the honest-ANN pattern of sim_ann_recall / sim_quantized_recall),
-    promoted in r11 from rows-only to the hash-checked quality-bound
-    shape of sim_ivfpq_recall (VERDICT r10 #6): the recall VALUE depends
-    on Lloyd-trained codebooks (no DuckDB twin), but ``n_exact`` is plain
-    SQL and the claim ``recall >= {PQ_RECALL_FLOOR}`` is engine-portable,
-    so the oracle pins ``recall_floor_met = true``. Raw recall stays
-    available through ``_pq_hits``; tests/test_ann_quality.py asserts the
-    tighter measured floor (0.6 at fixture scale).
+    """Recall@RECALL_K of product-quantized ADC search against the exact
+    brute-force top-RECALL_K, averaged over RECALL_N_QUERIES query vectors
+    — the engine measures its own compression loss as a first-class query
+    (the honest-ANN pattern of sim_ann_recall / sim_quantized_recall), in
+    sim_ivfpq_recall's hash-checked quality-bound shape: the recall VALUE
+    depends on Lloyd-trained codebooks (no DuckDB twin), but ``n_exact``
+    is plain SQL and the claim ``recall >= PQ_RECALL_FLOOR`` is
+    engine-portable, so the oracle pins ``recall_floor_met = true``. Raw
+    recall stays available through ``_pq_hits``; tests/test_ann_quality.py
+    asserts the tighter measured floor (0.6 at fixture scale).
 
     Asymmetric distance computation (ADC): each vector is stored as M
     one-byte codes; each query precomputes a LUT of <q_m, codeword>
@@ -1949,14 +1809,14 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     to train/encode, and every subsequent query scans only the 64×-smaller
     code table (tracked + session-memoized: pq_codes). The q×N candidate
     fan-out here is the exhaustive-ADC baseline; the production
-    composition probes IVF lists first (sim_ann_ivf) and ADC-scores only
-    those candidates.
+    composition probes IVF lists first (sim_ivfpq_recall) and ADC-scores
+    only those candidates.
     """
     hits = _pq_hits(spark, sf_dir)
     return hits.select(
         F.lit(PQ_M).alias("m_subspaces"),
         F.lit(PQ_K).alias("k_codes"),
-        F.lit(PQ_QUERIES).alias("n_queries"),
+        F.lit(RECALL_N_QUERIES).alias("n_queries"),
         F.col("n_exact"),
         (
             F.col("h") / F.col("n_exact") >= F.lit(PQ_RECALL_FLOOR)
@@ -1971,37 +1831,7 @@ NPROBE_LEVELS = (1, 2, 4, 8)
 @register(
     "sim_ivf_nprobe_sweep",
     oracle=f"""
-    with emb as (
-      select vec_id, embedding::DOUBLE[] as e from embeddings),
-    cents as (
-      select vec_id as cent_id, e as ce from emb
-      where vec_id < {RECALL_N_CENTS}),
-    q as (
-      select vec_id as q_id, e as qe from emb
-      where vec_id < {RECALL_N_QUERIES}),
-    exact_scored as (
-      select q_id, v.vec_id as v_id,
-             row_number() over (
-               partition by q_id
-               order by round(list_dot_product(qe, v.e), 4) desc, v.vec_id
-             ) as rn
-      from emb v join q on v.vec_id <> q.q_id),
-    exact as (select q_id, v_id from exact_scored where rn <= {RECALL_K}),
-    assign_scored as (
-      select e.vec_id, c.cent_id,
-             row_number() over (
-               partition by e.vec_id
-               order by round(list_dot_product(e.e, c.ce), 4) desc, c.cent_id
-             ) as rn
-      from emb e cross join cents c),
-    assign as (select vec_id, cent_id from assign_scored where rn = 1),
-    probe_all as (
-      select q.q_id, q.qe, c.cent_id,
-             row_number() over (
-               partition by q.q_id
-               order by round(list_dot_product(q.qe, c.ce), 4) desc, c.cent_id
-             ) as rn
-      from q cross join cents c),
+    with {_RECALL_CTE},{_IVF_CTE},
     levels as (select unnest([{", ".join(str(x) for x in NPROBE_LEVELS)}])
                as nprobe),
     approx_scored as (
@@ -2011,7 +1841,7 @@ NPROBE_LEVELS = (1, 2, 4, 8)
                order by round(list_dot_product(p.qe, v.e), 4) desc, a.vec_id
              ) as rn
       from levels l
-      join probe_all p on p.rn <= l.nprobe
+      join probe p on p.rn <= l.nprobe
       join assign a using (cent_id)
       join emb v on v.vec_id = a.vec_id
       where a.vec_id <> p.q_id),
@@ -2025,7 +1855,7 @@ NPROBE_LEVELS = (1, 2, 4, 8)
     cands as (
       select l.nprobe, p.q_id, cast(sum(sz) as bigint) as nc
       from levels l
-      join probe_all p on p.rn <= l.nprobe
+      join probe p on p.rn <= l.nprobe
       join sizes using (cent_id)
       group by l.nprobe, p.q_id),
     cagg as (
@@ -2041,15 +1871,15 @@ NPROBE_LEVELS = (1, 2, 4, 8)
     """,
 )
 def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@{RECALL_K} AND scan cost of the IVF path at nprobe in
-    {NPROBE_LEVELS} — the quality/cost curve an ANN deployment is tuned
+    """Recall@RECALL_K AND scan cost of the IVF path at nprobe in
+    NPROBE_LEVELS — the quality/cost curve an ANN deployment is tuned
     from (sim_ann_recall measures one operating point; this sweeps the
     knob and prices each point by the average posting-list candidate
     count per query).
 
     Plan: centroid assignment and the per-query centroid ranking are
-    computed ONCE (the same shapes as sim_ann_recall); the sweep axis is a
-    4-row exploded level column, so candidate generation fans out by
+    computed ONCE (the same builders as sim_ann_recall); the sweep axis is
+    a 4-row exploded level column, so candidate generation fans out by
     sum(nprobe)/n_cents (< 1x corpus here) rather than re-running the scan
     per level. Per-(level, query) candidate ranking is the salted
     two-stage top-k; the cost metric comes from the 16-row list-size
@@ -2057,63 +1887,25 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracked baseline. All scores round 4 dp with id tiebreaks before
     ranks (§7.3.1).
     """
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cents = emb.filter(F.col("vec_id") < RECALL_N_CENTS).select(
-        F.col("vec_id").alias("cent_id"), F.col("e").alias("ce")
-    )
-    q = emb.filter(F.col("vec_id") < RECALL_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-    )
-    rnk = lambda part, score, tie: F.row_number().over(  # noqa: E731
-        Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
-    )
-    assign = seeded_ivf_assign(spark, sf_dir)
-    probe_all = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id", "qe", "cent_id",
-            F.round(dot(F.col("qe"), F.col("ce")), 4).alias("s"),
-        )
-        .withColumn("rn", rnk("q_id", "s", "cent_id"))
-        .filter(F.col("rn") <= max(NPROBE_LEVELS))
-        .select("q_id", "qe", "cent_id", "rn")
-    )
+    emb, _, _ = _recall_inputs(spark, sf_dir)
     levels = F.array(*[F.lit(x) for x in NPROBE_LEVELS])
-    probe_lv = probe_all.withColumn(
-        "nprobe", F.explode(levels)
-    ).filter(F.col("rn") <= F.col("nprobe"))
-    # r17 note (measured, rejected): scoring each candidate ONCE at the
-    # maximal probe depth and exploding the 4-row level column AFTER the
-    # dot (halving the dot count) interleaved-A/B'd 1.05x SLOWER — the
-    # Generate over already-scored rows costs what the saved dots gain at
-    # this fan-out. Left in the score-per-level shape.
-    scored = (
-        assign.join(F.broadcast(probe_lv), "cent_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(emb, "vec_id")
-        .select(
-            "nprobe",
-            "q_id",
-            F.col("vec_id").alias("v_id"),
-            F.round(dot(F.col("qe"), F.col("e")), 4).alias("s"),
-        )
+    probe_lv = (
+        _ranked_probe(spark, sf_dir, max(NPROBE_LEVELS))
+        .withColumn("nprobe", F.explode(levels))
+        .filter(F.col("rn") <= F.col("nprobe"))
     )
-    approx = salted_topk(
-        scored,
-        [F.desc("s"), F.asc("v_id")],
-        RECALL_K,
-        salt_col="v_id",
-        group_cols=("nprobe", "q_id"),
-    ).select("nprobe", "q_id", "v_id")
-    exact = exact_topk_baseline(spark, sf_dir)
-    hits = (
-        approx.join(exact, ["q_id", "v_id"], "left_semi")
-        .groupBy("nprobe")
-        .agg(F.count(F.lit(1)).alias("h"))
+    # Each candidate is scored once per level. Scoring once at the deepest
+    # level and exploding the level column after the dot (half the dots)
+    # measured 1.05x slower in an interleaved A/B: at this fan-out the
+    # Generate over scored rows costs what the saved dots gain.
+    cand = _probe_candidates(spark, sf_dir, probe_lv).join(emb, "vec_id")
+    approx = _top_ids(_dot_scored(cand, "nprobe"), RECALL_K, by=("nprobe", "q_id"))
+    hits = _hit_count(approx, exact_topk_baseline(spark, sf_dir), "nprobe")
+    sizes = (
+        seeded_ivf_assign(spark, sf_dir)
+        .groupBy("cent_id")
+        .agg(F.count(F.lit(1)).alias("sz"))
     )
-    sizes = assign.groupBy("cent_id").agg(F.count(F.lit(1)).alias("sz"))
     cagg = (
         probe_lv.join(F.broadcast(sizes), "cent_id")
         .groupBy("nprobe", "q_id")
@@ -2140,7 +1932,7 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: recall@{PQ_TOPK} floor the composed IVF x PQ x re-rank path must hold —
+#: recall@RECALL_K floor the composed IVF x PQ x re-rank path must hold —
 #: the hash-CHECKED quality claim (measured 0.6533 at sf0.01, 0.5233 at
 #: sf0.1; a broken probe, code table, LUT join, or re-rank scores near 0).
 #: Margin class of APPROX_DISTINCT_MAX_REL_ERR: wide enough that a
@@ -2151,127 +1943,47 @@ IVFPQ_RECALL_FLOOR = 0.40
 
 
 def _ivfpq_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row (n_exact, h) frame for the composed IVF x PQ x re-rank path:
-    ``h`` of the ``n_exact`` exact top-{PQ_TOPK} pairs survive the
-    composition. Shared by the registered bound query and the quality
-    tests (which assert on the raw recall ``h / n_exact``)."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cents = emb.filter(F.col("vec_id") < RECALL_N_CENTS).select(
-        F.col("vec_id").alias("cent_id"), F.col("e").alias("ce")
-    )
-    q = emb.filter(F.col("vec_id") < RECALL_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e")
-    )
-    # IVF stage: per-query probed lists (same ranked-probe shape as the
-    # recall/sweep siblings; 16-row broadcast grid per query)
-    probe = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id", "cent_id",
-            F.round(dot(F.col("e"), F.col("ce")), 4).alias("s"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(
-                    F.desc("s"), F.asc("cent_id")
-                )
-            ),
-        )
-        .filter(F.col("rn") <= RECALL_NPROBE)
-        .select("q_id", "cent_id")
-    )
-    cand = (
-        seeded_ivf_assign(spark, sf_dir)
-        .join(F.broadcast(probe), "cent_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
+    """:func:`_adc_hits` of the composed IVF x PQ x re-rank path: the
+    candidates are the members of each query's RECALL_NPROBE probed lists.
+    Shared by the registered bound query and the quality tests (which
+    assert on the raw recall ``h / n_exact``)."""
+    emb, _, _ = _recall_inputs(spark, sf_dir)
+    probe = _ranked_probe(spark, sf_dir, RECALL_NPROBE)
+    part = (
+        _probe_candidates(spark, sf_dir, probe)
         .select("q_id", "vec_id")
+        .join(pq_codes(emb, sf_dir), "vec_id")
+        .join(F.broadcast(_pq_lut(spark, sf_dir)), ["q_id", "m", "cent_id"])
     )
-    # PQ stage: byte codes + per-query LUT, ADC only over the candidates
-    # (codes tracked and shared with sim_pq_recall — one encode per session)
-    pq_cents = pq_codebooks(emb, sf_dir)
-    codes = pq_codes(emb, sf_dir).select(
-        "vec_id", "m", F.col("cent_id").alias("code")
-    )
-    lut = (
-        pq_subvectors(q.select(F.col("q_id"), F.col("e")), id_col="q_id")
-        .join(F.broadcast(pq_cents), "m")
-        .select(
-            "q_id", "m",
-            F.col("cent_id").alias("code"),
-            dot(F.col("sv"), F.col("ce")).alias("part"),
-        )
-    )
-    shortlist = salted_topk(
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["q_id", "m", "code"])
-        .groupBy("q_id", "vec_id")
-        .agg(F.round(F.sum("part"), 4).alias("s")),
-        [F.desc("s"), F.asc("vec_id")],
-        PQ_RERANK,
-        salt_col="vec_id",
-        group_cols=("q_id",),
-    ).select("q_id", "vec_id")
-    rerank = salted_topk(
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(q.select("q_id", F.col("e").alias("qe"))), "q_id")
-        .select(
-            "q_id",
-            F.col("vec_id").alias("v_id"),
-            F.round(dot(F.col("qe"), F.col("e")), 4).alias("s"),
-        ),
-        [F.desc("s"), F.asc("v_id")],
-        PQ_TOPK,
-        salt_col="v_id",
-        group_cols=("q_id",),
-    ).select("q_id", "v_id")
-    exact = exact_topk_baseline(spark, sf_dir, n_queries=PQ_QUERIES, k=PQ_TOPK)
-    return exact.agg(F.count(F.lit(1)).alias("n_exact")).crossJoin(
-        exact.join(rerank, ["q_id", "v_id"], "left_semi").agg(
-            F.count(F.lit(1)).alias("h")
-        )
-    )
+    return _adc_hits(spark, sf_dir, part)
 
 
 @register(
     "sim_ivfpq_recall",
     oracle=f"""
-    with emb as (
-      select vec_id, embedding::DOUBLE[] as e from embeddings),
-    q as (
-      select vec_id as q_id, e as qe from emb
-      where vec_id < {PQ_QUERIES}),
-    exact_scored as (
-      select q_id, v.vec_id as v_id,
-             row_number() over (
-               partition by q_id
-               order by round(list_dot_product(qe, v.e), 4) desc, v.vec_id
-             ) as rn
-      from emb v join q on v.vec_id <> q.q_id)
+    with {_RECALL_CTE}
     select cast({RECALL_NPROBE} as int) as nprobe,
            cast({PQ_M} as int) as m_subspaces,
-           cast({PQ_QUERIES} as int) as n_queries,
+           cast({RECALL_N_QUERIES} as int) as n_queries,
            cast(count(*) as bigint) as n_exact,
            true as recall_floor_met
-    from exact_scored where rn <= {PQ_TOPK}
+    from exact
     """,
 )
 def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@{PQ_TOPK} of the COMPOSED production ANN path — IVF probing x
+    """Recall@RECALL_K of the COMPOSED production ANN path — IVF probing x
     product-quantized ADC scoring x exact re-rank — against the shared
-    brute-force baseline, promoted from rows-only to a hash-CHECKED
-    quality bound (VERDICT r10 #6). sim_ann_recall audits the IVF stage
-    alone and sim_pq_recall audits exhaustive ADC; a deployment runs them
-    together: probe the {RECALL_NPROBE} nearest inverted lists, ADC-score
-    ONLY those candidates from the byte codes, exactly re-rank the
-    top-{PQ_RERANK}. This query measures what that composition loses.
+    brute-force baseline, as a hash-CHECKED quality bound. sim_ann_recall
+    audits the IVF stage alone and sim_pq_recall audits exhaustive ADC; a
+    deployment runs them together: probe the RECALL_NPROBE nearest
+    inverted lists, ADC-score ONLY those candidates from the byte codes,
+    exactly re-rank the top-PQ_RERANK. This query measures what that
+    composition loses.
 
     Oracle split, same as agg_approx_error / dedup_minhash_est_error: the
     recall VALUE depends on Lloyd-trained codebooks (no DuckDB twin), but
     the exact-arm size ``n_exact`` is plain SQL and the quality CLAIM
-    ``recall >= {IVFPQ_RECALL_FLOOR}`` is engine-portable — the oracle
+    ``recall >= IVFPQ_RECALL_FLOOR`` is engine-portable — the oracle
     pins ``recall_floor_met = true``, so a broken probe/code/LUT/re-rank
     stage (recall ~ 0) hash-mismatches instead of passing rows-only. The
     raw recall stays available to the quality tests through
@@ -2284,14 +1996,14 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-sum groupBy; candidate membership (tracked
     ``seeded_ivf_assign``), ground truth (tracked ``exact_topk_baseline``)
     and the byte codes (tracked ``pq_codes``) are the session-shared
-    builders, and the codebooks train on the 1-in-{PQ_TRAIN_MOD} sample
+    builders, and the codebooks train on the 1-in-PQ_TRAIN_MOD sample
     once.
     """
     hits = _ivfpq_hits(spark, sf_dir)
     return hits.select(
         F.lit(RECALL_NPROBE).alias("nprobe"),
         F.lit(PQ_M).alias("m_subspaces"),
-        F.lit(PQ_QUERIES).alias("n_queries"),
+        F.lit(RECALL_N_QUERIES).alias("n_queries"),
         F.col("n_exact"),
         (
             F.col("h") / F.col("n_exact") >= F.lit(IVFPQ_RECALL_FLOOR)

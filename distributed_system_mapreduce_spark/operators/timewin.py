@@ -1015,7 +1015,10 @@ def events_dau_mau_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two distinct-count rollups over (month, day) and (month) — each a
     partial-distinct shuffle of (key, user) pairs, never raw events twice —
-    joined on the month key (months-sized frames; the join broadcasts).
+    joined on the month key. Both sides are months-sized, so the join
+    broadcasts one of them; no side is forced, because when the planner
+    builds on ``daily`` the final groupBy(month) reuses the ``monthly``
+    rollup's month partitioning and skips one shuffle.
     At 100 TB the same shape runs on per-day HLL sketches with a 31-sketch
     merge (agg_hll_union shows the machinery); exact kept for the oracle.
     """
@@ -1033,7 +1036,7 @@ def events_dau_mau_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("user_id").alias("mau"))
     )
     return (
-        daily.join(F.broadcast(monthly), "month")
+        daily.join(monthly, "month")
         .groupBy("month")
         .agg(
             # all-integer half-up rounds (exactmath.py, r15 tie rework):

@@ -1,5 +1,5 @@
 """ANN quality: measured recall of the approximate paths vs the exact
-baseline, and Lloyd-trained IVF centroids vs the deterministic seed.
+baseline, and PQ codebook training vs its deterministic seed.
 
 Recall@k = |approx top-k ∩ exact top-k| / k, averaged over query vectors.
 These are quality regressions, not parity checks — the approximate paths
@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 import distributed_system_mapreduce_spark  # noqa: F401
 from distributed_system_mapreduce_spark.cache import spread
-from distributed_system_mapreduce_spark.functions.vectors import (
-    dot,
-    lloyd_centroids,
-)
+from distributed_system_mapreduce_spark.functions.vectors import dot
 from distributed_system_mapreduce_spark.sources.io import load
 
 from conftest import SF_DIR
@@ -128,82 +125,13 @@ def test_multiprobe_beats_single_probe(emb_d, exact):
     assert r4 >= 0.25, r4
 
 
-def test_trained_centroids_do_not_regress(emb_d, exact):
-    seed = _seed_cents(emb_d)
-    trained = lloyd_centroids(emb_d, k=16, iters=3)
-    r_seed = _recall(exact, _ivf_topk(emb_d, seed, nprobe=4))
-    r_trained = _recall(exact, _ivf_topk(emb_d, trained, nprobe=4))
-    # Lloyd balances the cells; recall at equal nprobe should hold or improve
-    assert r_trained >= r_seed - 0.05, (r_seed, r_trained)
-
-
-def test_lloyd_reduces_quantization_error(emb_d):
-    """Training objective itself must improve: mean best-centroid cosine."""
-    def mean_best(cents):
-        return (
-            _assign(
-                emb_d,
-                cents,
-            )
-            .join(cents, "cent_id")
-            .select(dot(F.col("embedding"), F.col("cent_emb")).alias("s"))
-            .agg(F.avg("s"))
-            .collect()[0][0]
-        )
-
-    seed = _seed_cents(emb_d)
-    trained = lloyd_centroids(emb_d, k=16, iters=3)
-    assert mean_best(trained) > mean_best(seed)
-
-
-def test_kmeans_parallel_trainer_matches_lloyd_quality(emb_d, exact):
-    """k-means|| (pyspark.ml) is a drop-in trainer: same output contract,
-    quantization objective at least as good as the deterministic seed, and
-    IVF recall in the same band as the hand-rolled Lloyd trainer."""
-    from distributed_system_mapreduce_spark.functions.vectors import (
-        kmeans_parallel_centroids,
-    )
-
-    trained = kmeans_parallel_centroids(emb_d, k=16, max_iter=3)
-    # output contract: same shape lloyd_centroids guarantees, unit-norm
-    assert trained.columns == ["cent_id", "cent_emb"]
-    norms = trained.select(
-        F.sqrt(F.aggregate(
-            F.transform("cent_emb", lambda x: x * x),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )).alias("n")
-    ).collect()
-    assert all(abs(r.n - 1.0) < 1e-6 for r in norms)
-
-    def mean_best(cents):
-        return (
-            _assign(emb_d, cents)
-            .join(cents, "cent_id")
-            .select(dot(F.col("embedding"), F.col("cent_emb")).alias("s"))
-            .agg(F.avg("s"))
-            .collect()[0][0]
-        )
-
-    seed = _seed_cents(emb_d)
-    assert mean_best(trained) > mean_best(seed)
-
-    # Measured at sf0.01: recall@10 nprobe=4 — lloyd 0.70, k-means|| 0.58.
-    # Spherical Lloyd renormalizes centroids every iteration; MLlib's
-    # Euclidean objective does not, which costs recall on unit-norm cosine
-    # data. That is WHY lloyd_centroids stays the default trainer and
-    # k-means|| is the large-k initializer alternative. Pin an absolute
-    # floor well above the seeded-IVF bar (0.25) rather than parity.
-    r_ml = _recall(exact, _ivf_topk(emb_d, trained, nprobe=4))
-    assert r_ml >= 0.40, r_ml
-
-
 def test_pq_adc_with_rerank_recall(spark):
     """Product quantization + exact re-rank must hold recall@10 >= 0.6 at
     fixture scale (measured ~0.75), and the whole pipeline — Lloyd
     codebooks, code assignment, ADC shortlist, re-rank — must be
-    deterministic across runs. The registered query now emits the
-    hash-checked bound row (r11); raw recall comes from _pq_hits."""
+    deterministic across runs. The registered query emits only the
+    hash-checked bound row, so raw recall comes from _pq_hits, and the
+    row's floor flag must agree with it."""
     from distributed_system_mapreduce_spark.functions.vectors import (
         PQ_RECALL_FLOOR,
         _pq_hits,
@@ -226,8 +154,8 @@ def test_ivfpq_composed_recall_floor(spark):
     exact re-rank) must hold recall@10 >= 0.55 at fixture scale (measured
     0.6533) and may not EXCEED the IVF-only recall: ADC can only lose
     candidates within the probed lists, never add them. The registered
-    query now emits the hash-checked bound row (VERDICT r10 #6); the raw
-    recall comes from the shared _ivfpq_hits builder, and this test's
+    query emits only the hash-checked bound row; the raw recall comes
+    from the shared _ivfpq_hits builder, and this test's
     floor is the TIGHT measured one (the oracle's IVFPQ_RECALL_FLOOR is
     the loose engine-portable claim)."""
     from distributed_system_mapreduce_spark.functions.vectors import (

@@ -481,7 +481,6 @@ def _internal_frames(spark):
     from distributed_system_mapreduce_spark.functions.vectors import (
         gram_partials,
         ivf_assign,
-        lloyd_recompute,
         pq_assign,
         pq_recompute,
         pq_subvectors,
@@ -502,7 +501,6 @@ def _internal_frames(spark):
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cent_emb"),
     )
-    assign = ivf_assign(emb, cents, round_scores=False)
     cand, pw = mmr_pools(spark, _PLAN_SF)
     e_named = emb.select("vec_id", F.col("embedding").alias("e"))
     pq_sub = pq_subvectors(e_named)
@@ -513,8 +511,7 @@ def _internal_frames(spark):
     return {
         # label: (frame, allow_bnlj, allow_arrow)
         "kcore_round": (kcore_round(edges, 2), False, False),
-        "kmeans_assign": (assign, True, False),  # k-row broadcast grid
-        "kmeans_recompute": (lloyd_recompute(assign), True, False),
+        "kmeans_assign": (ivf_assign(emb, cents), True, False),  # k-row grid
         "mmr_cand_pool": (cand, True, False),  # 1-row query broadcast
         "mmr_pair_pool": (pw, True, False),  # pool x pool, MMR_POOL-bounded
         "pca_gram_partials": (gram_partials(emb), False, True),
@@ -528,7 +525,6 @@ def _internal_frames(spark):
     [
         "kcore_round",
         "kmeans_assign",
-        "kmeans_recompute",
         "mmr_cand_pool",
         "mmr_pair_pool",
         "pca_gram_partials",

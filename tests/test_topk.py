@@ -98,21 +98,24 @@ def test_converted_queries_route_through_salt(name, spark):
 
 
 def test_exact_recall_baseline_is_one_shared_plan(spark):
-    """VERDICT r7 #3: the three ANN-quality queries must share ONE exact
-    ground-truth arm. Spark's CacheManager dedupes by semantic plan and
-    cache.track dedupes its registry the same way, so it suffices that
-    repeated builder calls produce semantically identical frames."""
+    """Every ANN recall query must share ONE exact ground-truth arm and ONE
+    seeded IVF assignment. Spark's CacheManager dedupes by semantic plan
+    and cache.track dedupes its registry the same way, so it suffices that
+    repeated builder calls produce semantically identical frames and do not
+    grow the tracked set."""
     from distributed_system_mapreduce_spark.cache import tracked_count
     from distributed_system_mapreduce_spark.functions.vectors import (
-        PQ_QUERIES,
-        PQ_TOPK,
         exact_topk_baseline,
+        seeded_ivf_assign,
     )
 
     a = exact_topk_baseline(spark, SF_DIR)
     n_after_first = tracked_count()
     b = exact_topk_baseline(spark, SF_DIR)
-    c = exact_topk_baseline(spark, SF_DIR, n_queries=PQ_QUERIES, k=PQ_TOPK)
     assert a.sameSemantics(b)
-    assert a.sameSemantics(c)  # PQ constants equal the RECALL constants
     assert tracked_count() == n_after_first  # track() deduped, not re-added
+    s = seeded_ivf_assign(spark, SF_DIR)
+    n_after_assign = tracked_count()
+    t = seeded_ivf_assign(spark, SF_DIR)
+    assert s.sameSemantics(t)
+    assert tracked_count() == n_after_assign
